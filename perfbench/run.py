@@ -29,7 +29,7 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 HERE = os.path.dirname(os.path.abspath(__file__))
-WARMUP_PASSES = {"text_spans": 2, "media_job": 1, "query_ops": 2}
+WARMUP_PASSES = {"text_spans": 2, "media_job": 1, "query_ops": 3}
 MIN_TIMED_PASSES = 3
 PY_FNS = ("_html_main_content", "_upstage_pages", "_pdf_layout", "_ocr_grids")
 
@@ -196,10 +196,13 @@ def run(args, workload_cls, work: str, out_dir: str) -> int:
             print(f"{phase} pass {i} failed: {exc!r}", file=sys.stderr)
             return -1.0, {}, None
         cpu1 = proctree.cpu_by_role()
-        return s.wall_s, {k: cpu1[k] - cpu0[k] for k in cpu1}, out
+        cpu = {k: cpu1[k] - cpu0[k] for k in cpu1}
+        tr.spans[s.i]["cpu_s"] = cpu["total"]
+        return s.wall_s, cpu, out
 
     # The first warm-up pass collects its outputs instead of discarding them
     # into the noop sink; they are checked against the oracle before timing.
+    cpu_setup0 = proctree.cpu_by_role()["total"]
     with tr.span("setup") as setup:
         with tr.span("session.get_spark"):
             spark = start_spark(host, work, event_dir)
@@ -208,6 +211,7 @@ def run(args, workload_cls, work: str, out_dir: str) -> int:
         wall, _, outputs = one_pass(spark, "warmup", 0, collect=True)
         for i in range(1, WARMUP_PASSES[wl.name]):
             one_pass(spark, "warmup", i)
+    setup_cpu_s = proctree.cpu_by_role()["total"] - cpu_setup0
 
     with tr.span("check"):
         try:
@@ -241,7 +245,10 @@ def run(args, workload_cls, work: str, out_dir: str) -> int:
     e2e = {
         "cpu_s": (median([c["total"] for c in cpus]), "s"),
         "peak_rss_mb": (peak / 2**20, "MB"),
-        "setup_s": (setup.wall_s, "s"),
+        # set-up in core-seconds: on a loaded shared host they spread less
+        # between runs than set-up wall time does (see perfbench/README.md)
+        "setup_s": (setup_cpu_s, "s"),
+        "setup_wall_s": (setup.wall_s, "s"),
         "wall_s": (wall_s, "s"),
         "docs_per_s": (n_docs / wall_s if wall_s > 0 else 0.0, "docs/s"),
     }
@@ -253,6 +260,8 @@ def run(args, workload_cls, work: str, out_dir: str) -> int:
         "input_spans": (sum(len(d["spans"]) for d in wl.docs), "spans"),
     }
     print(f"host {json.dumps(host)}")
+    if not wl.seeded:
+        print(f"workload {wl.name} reads fixed input: --seed {args.seed} does not apply")
     print(f"workload {wl.name} seed {args.seed} trace {args.trace} local[{host['cores']}] "
           f"timed pass walls {[round(w, 3) for w in walls]}")
     for k, (v, u) in {**e2e, **info, **metrics}.items():
@@ -264,9 +273,10 @@ def run(args, workload_cls, work: str, out_dir: str) -> int:
                    "metrics": {k: v for k, (v, _) in {**e2e, **info, **metrics}.items()}}, f, indent=1)
 
     failed += chk["mismatch_docs"] > 0 or not chk["lineage_ok"]
-    # the JSON result carries exactly the metrics BENCHMARK.json names; the
-    # rest (layers off a workload's path read 0; wall time on a shared host
-    # is too noisy to gate, see perfbench/README.md) stay in the table
+    # the JSON result carries exactly the metrics BENCHMARK.json names (per
+    # layer: each one non-zero on some listed workload, 0 where its layer is
+    # off this workload's path); the rest (wall time, too noisy on a shared
+    # host to gate, see perfbench/README.md) stay in the table
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         names = [m["name"] for m in json.load(f)["per_layer" if trace else "end_to_end"]]
     report = {k: (metrics if trace else e2e)[k] for k in names}

@@ -7,17 +7,18 @@ traced run times in-process.
   Its work is the branch fan-out, exchanges, the W2 window, reassembly and
   the html / Upstage kernels; no OCR, PDF, grid or write work.
 * ``media_job`` — a media-heavy corpus in the production layout
-  (``catalog.write_docs`` + ``catalog.write_media_copartitioned``, 16
-  buckets) run through ``CheckpointedExtraction`` with parquet output and
-  lineage. Its work is the OCR and PDF kernels, ``grid_extract``, the
-  broadcast ref joins, plan compile and the committed writes. A warm pass
-  costs 17–40 s on a 4-core host, so it is run by hand, not from
-  BENCHMARK.json.
-* ``query_ops`` — four of ``bench.py``'s headline queries, one per operator
+  (``catalog.write_docs`` + ``catalog.write_media_copartitioned``, 2
+  buckets) run through ``CheckpointedExtraction`` with its defaults
+  otherwise (one plan per bucket, 4 concurrent buckets, broadcast refs),
+  parquet output and lineage. Its work is the OCR and PDF kernels,
+  ``grid_extract``, the broadcast ref joins, per-bucket plan compile and the
+  committed writes.
+* ``query_ops`` — five of ``bench.py``'s headline queries, one per operator
   family the extraction workloads never reach (``functions.text``,
-  ``operators.dedup``, ``operators.ann``, ``operators.sampling``), over
-  seeded tables with the sf test tables' schemas (TESTDATA.md), each into a
-  ``noop`` sink and checked against its DuckDB oracle.
+  ``operators.dedup``, ``operators.ann``, ``operators.sampling``,
+  ``functions.cleaners``), over checked-in copies of the sf0.001 test
+  tables, each into a ``noop`` sink and checked against its DuckDB oracle.
+  Its input is fixed, so the seed selects nothing.
 """
 
 from __future__ import annotations
@@ -41,21 +42,23 @@ MEDIA_SCHEMA = "media_ref string, content binary"
 TEXT_MIX = (0.55, 0.75, 1.0, 1.0)  # text | html | table_html, no media
 MEAN_SPANS = 7.5  # generate_corpus draws 3–12 spans per ordinary doc
 
-# Input sizes. A Spark session start costs ~10 s and a cold pass 10–30 s on a
+# Input sizes. A Spark session start costs 4–10 s and a cold pass 7–30 s on a
 # 4-core host, and the whole benchmark must fit a fixed time budget, so the
 # corpora are small: fixed per-pass costs (plan build, compile, scheduling)
 # are a real share of what the workloads measure.
 TEXT_DOCS = 400
-MEDIA_DOCS = 32
-MEDIA_BUCKETS = 16  # CheckpointedExtraction's and jobs/extract.py's default
+MEDIA_DOCS = 24
+MEDIA_BUCKETS = 2  # the library default is 16: one plan compile per bucket per pass
 STAGE_FILES = 4
 KERNELS = ("html", "upstage", "ocr", "pdf")  # kernels timed in-process when traced
 KERNEL_SAMPLE = 120  # payloads per kernel in the traced in-process timing
-QUERY_LEAVES = ("t_quality", "dedup_minhash_lsh", "ann_lsh_cosine_topk", "t_sample_stratified")
-QUERY_DOCS, QUERY_VECS = 200, 300
-WORDS = ("join hash row batch scan column customer filter small slow merge order vector "
-         "line table data agg value key stream window a spark part group big sort query "
-         "fast the").split()
+QUERY_LEAVES = ("t_quality", "dedup_minhash_lsh", "ann_lsh_cosine_topk", "t_sample_stratified",
+                "f3_id_extraction")
+# copies of the repository's sf0.001 test tables the leaves read (500
+# documents, 500 embeddings, 1500 orders); see perfbench/README.md
+QUERY_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+QUERY_TABLES = ("documents", "embeddings", "orders")
+QUERY_DOCS = 500
 
 
 def _rows(docs: list[dict]) -> list[tuple]:
@@ -96,6 +99,7 @@ class Workload:
     workload owns for the life of the run."""
 
     name = ""
+    seeded = True  # False: the input is fixed and --seed selects nothing
     docs: list[dict]
     media: list[dict]
 
@@ -239,11 +243,8 @@ class MediaJob(Workload):
 
         shutil.rmtree(self.ckpt, ignore_errors=True)
         shutil.rmtree(self.out, ignore_errors=True)
-        # One batch of all buckets per pass: one plan and one dynamic-overwrite
-        # write. The library default (one plan per bucket) costs ~100 s per
-        # pass even on 48 docs on a 4-core host, which no run budget holds.
         job = CheckpointedExtraction(self.ckpt, self.out, n_buckets=MEDIA_BUCKETS,
-                                     media_copartitioned=True, bucket_batch_size=MEDIA_BUCKETS)
+                                     media_copartitioned=True)
         self.lineage = job.run(spark, *self.inputs(spark))
 
     def frame(self, spark):
@@ -286,62 +287,23 @@ class MediaJob(Workload):
         return spark.read.parquet(path)
 
 
-def query_tables(seed: int) -> dict:
-    """Seeded ``documents`` and ``embeddings`` tables with the schemas and
-    value shapes of the sf test tables (TESTDATA.md): 10–99 word documents
-    over a 31-word vocabulary, 1 in 20 of them a one-word edit of an earlier
-    one (near-duplicates for the dedup leaves); 64-d float embeddings in 10
-    labels."""
-    import numpy as np
-    import pyarrow as pa
-
-    rng = np.random.default_rng(seed)
-    texts: list[str] = []
-    for i in range(QUERY_DOCS):
-        if i > 20 and rng.random() < 0.05:
-            words = texts[int(rng.integers(i))].split()
-            words[int(rng.integers(len(words)))] = "dup"
-        else:
-            words = [WORDS[int(j)] for j in rng.integers(len(WORDS), size=int(rng.integers(10, 100)))]
-        texts.append(" ".join(words))
-    langs = np.array(["en", "en", "en", "zh", "es", "de", "fr"])
-    return {
-        "documents": pa.table({
-            "doc_id": pa.array(range(QUERY_DOCS), pa.int64()),
-            "text": texts,
-            "lang": langs[rng.integers(len(langs), size=QUERY_DOCS)].tolist(),
-            "source": [f"src{i % 20}" for i in range(QUERY_DOCS)],
-            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-        }),
-        "embeddings": pa.table({
-            "vec_id": pa.array(range(QUERY_VECS), pa.int64()),
-            "embedding": pa.array(list(rng.standard_normal((QUERY_VECS, 64)).astype("float32")),
-                                  pa.list_(pa.float32())),
-            "label": pa.array(rng.integers(0, 10, size=QUERY_VECS), pa.int32()),
-        }),
-    }
-
-
 class QueryOps(Workload):
     name = "query_ops"
     n_docs = QUERY_DOCS  # rows of the documents table
 
+    seeded = False  # fixed input: the seed selects nothing
+
     def __init__(self, seed: int, work: str):
         super().__init__(seed, work)
-        self.tables = query_tables(seed)
         self.docs, self.media = [], []
-        self.sf_dir = os.path.join(work, "tables")
+        self.sf_dir = QUERY_DATA
         self.scan_path = os.path.join(self.sf_dir, "documents.parquet")
 
     def expect(self) -> None:
-        pass  # the DuckDB oracle runs in check(), over the staged files
+        pass  # the DuckDB oracle runs in check(), over the same files
 
     def stage(self, spark) -> None:
-        import pyarrow.parquet as pq
-
-        os.makedirs(self.sf_dir, exist_ok=True)
-        for name, table in self.tables.items():
-            pq.write_table(table, os.path.join(self.sf_dir, f"{name}.parquet"))
+        pass  # the leaves read the checked-in tables in place
 
     def one_pass(self, spark, tr, collect: bool = False):
         from micro_lab_ocr_spark import queries
@@ -371,7 +333,7 @@ class QueryOps(Workload):
         from tests.test_queries_oracle import _normalize
 
         con = duckdb.connect()
-        for name in self.tables:
+        for name in QUERY_TABLES:
             path = os.path.join(self.sf_dir, f"{name}.parquet")
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
         sql = queries.oracle_sql_dict()
