@@ -2,19 +2,15 @@
 output check against the pure-Python oracle, and the kernel payloads the
 traced run times in-process.
 
-* ``text_spans`` — text / html / table_html spans with a heavy tail, staged
-  as plain parquet and run through ``normalize_spans`` into a ``noop`` sink.
-  Its work is the branch fan-out, exchanges, the W2 window, reassembly and
-  the html / Upstage kernels; no OCR, PDF, grid or write work.
 * ``media_job`` — a media-heavy corpus in the production layout
-  (``catalog.write_docs`` + ``catalog.write_media_copartitioned``, 2
-  buckets) run through ``CheckpointedExtraction`` with its defaults
-  otherwise (one plan per bucket, 4 concurrent buckets, broadcast refs),
-  parquet output and lineage. Its work is the OCR and PDF kernels,
-  ``grid_extract``, the broadcast ref joins, per-bucket plan compile and the
-  committed writes.
+  (``catalog.write_docs`` + ``catalog.write_media_copartitioned``, one
+  bucket) run through ``CheckpointedExtraction`` with its defaults
+  otherwise (one plan per bucket, broadcast refs), parquet output and
+  lineage. Its work is the branch fan-out, exchanges, the W2 window and
+  reassembly, the html / Upstage / OCR / PDF kernels, ``grid_extract``, the
+  broadcast ref joins, the bucket's plan compile and the committed write.
 * ``query_ops`` — five of ``bench.py``'s headline queries, one per operator
-  family the extraction workloads never reach (``functions.text``,
+  family the extraction workload never reaches (``functions.text``,
   ``operators.dedup``, ``operators.ann``, ``operators.sampling``,
   ``functions.cleaners``), over checked-in copies of the sf0.001 test
   tables, each into a ``noop`` sink and checked against its DuckDB oracle.
@@ -23,6 +19,8 @@ traced run times in-process.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import random
 import shutil
@@ -37,19 +35,12 @@ from micro_lab_ocr_spark.oracle import extract as oracle
 from micro_lab_ocr_spark.operators import drm
 from micro_lab_ocr_spark.sources import catalog, fixtures
 
-DOCS_SCHEMA = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-MEDIA_SCHEMA = "media_ref string, content binary"
-TEXT_MIX = (0.55, 0.75, 1.0, 1.0)  # text | html | table_html, no media
-MEAN_SPANS = 7.5  # generate_corpus draws 3–12 spans per ordinary doc
-
 # Input sizes. A Spark session start costs 4–10 s and a cold pass 7–30 s on a
 # 4-core host, and the whole benchmark must fit a fixed time budget, so the
-# corpora are small: fixed per-pass costs (plan build, compile, scheduling)
+# inputs are small: fixed per-pass costs (plan build, compile, scheduling)
 # are a real share of what the workloads measure.
-TEXT_DOCS = 400
 MEDIA_DOCS = 24
-MEDIA_BUCKETS = 2  # the library default is 16: one plan compile per bucket per pass
-STAGE_FILES = 4
+MEDIA_BUCKETS = 1  # the library default is 16: one plan compile per bucket per pass
 KERNELS = ("html", "upstage", "ocr", "pdf")  # kernels timed in-process when traced
 KERNEL_SAMPLE = 120  # payloads per kernel in the traced in-process timing
 QUERY_LEAVES = ("t_quality", "dedup_minhash_lsh", "ann_lsh_cosine_topk", "t_sample_stratified",
@@ -58,40 +49,10 @@ QUERY_LEAVES = ("t_quality", "dedup_minhash_lsh", "ann_lsh_cosine_topk", "t_samp
 # documents, 500 embeddings, 1500 orders); see perfbench/README.md
 QUERY_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 QUERY_TABLES = ("documents", "embeddings", "orders")
+# DuckDB oracle results for that fixed input, kept between the runs of one
+# checkout: the MinHash-LSH oracle alone costs ~11 core-seconds
+ORACLE_CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".perfbench", "oracle")
 QUERY_DOCS = 500
-
-
-def _rows(docs: list[dict]) -> list[tuple]:
-    return [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                           for s in d["spans"]]) for d in docs]
-
-
-def heavy_tail_corpus(n_docs: int, seed: int, mix) -> list[dict]:
-    """``n_docs`` fixture docs of which 1% are 10–100× heavy.
-
-    ``generate_corpus(skew=True)`` makes each doc heavy with probability 1%
-    and a random 10–100× multiplier, which swings a 600-doc corpus's span
-    total by ±20% between seeds (quartile spread / median 0.20 over seeds
-    0–9) — more than any run-to-run bound. Here the tail's shape is fixed
-    (``n_docs // 100`` heavy docs, multipliers evenly spaced over 10–100×)
-    and the seed draws the content: ordinary docs come from
-    ``generate_corpus(skew=False)``, and each heavy doc is the span stream of
-    further ordinary docs, cut to its target length and renumbered.
-    """
-    n_heavy = max(1, n_docs // 100)
-    mults = [10 + (90 * i) // max(1, n_heavy - 1) for i in range(n_heavy)]
-    targets = [round(m * MEAN_SPANS) for m in mults]
-    extra = int(sum(targets) / 3) + 8  # ordinary docs hold ≥3 spans each
-    pool, _, _ = fixtures.generate_corpus(n_docs=n_docs + extra, seed=seed, skew=False, mix=mix)
-    docs, stream = pool[: n_docs - n_heavy], [s for d in pool[n_docs - n_heavy:] for s in d["spans"]]
-    rng = random.Random(seed)
-    for i, t in enumerate(targets):
-        spans, stream = stream[:t], stream[t:]
-        docs.insert(rng.randrange(len(docs) + 1), {
-            "doc_id": f"h{i:04d}",
-            "spans": [{**s, "offset": k} for k, s in enumerate(spans)],
-        })
-    return docs
 
 
 class Workload:
@@ -175,44 +136,6 @@ def run_kernel(kind: str, payload) -> bool:
     return True
 
 
-class TextSpans(Workload):
-    name = "text_spans"
-
-    def __init__(self, seed: int, work: str):
-        super().__init__(seed, work)
-        self.docs, self.media = heavy_tail_corpus(TEXT_DOCS, seed, TEXT_MIX), []
-        self.path = self.scan_path = os.path.join(work, "text_docs")
-
-    def stage(self, spark) -> None:
-        """Plain parquet in ``STAGE_FILES`` files of one row group each (a
-        parquet scan splits no finer than a row group)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        span = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                          ("media_ref", pa.string()), ("offset", pa.int32())])
-        os.makedirs(self.path)
-        for i in range(STAGE_FILES):
-            part = self.docs[i::STAGE_FILES]
-            pq.write_table(pa.table({"doc_id": [d["doc_id"] for d in part],
-                                     "spans": pa.array([d["spans"] for d in part], pa.list_(span))}),
-                           os.path.join(self.path, f"part-{i}.parquet"))
-
-    def frame(self, spark):
-        from micro_lab_ocr_spark.pipeline.extract import normalize_spans
-
-        return normalize_spans(spark.read.parquet(self.path), None, media_present=False)
-
-    def one_pass(self, spark, tr, collect: bool = False):
-        if collect:
-            return self.collect_spans(self.frame(spark))
-        self.frame(spark).write.format("noop").mode("overwrite").save()
-        return None
-
-    def check(self, spark, got) -> dict:
-        return {"mismatch_docs": self.mismatches(got), "lineage_ok": True}
-
-
 class MediaJob(Workload):
     name = "media_job"
 
@@ -226,12 +149,22 @@ class MediaJob(Workload):
         self.lineage: list = []
 
     def stage(self, spark) -> None:
-        catalog.write_docs(spark, spark.createDataFrame(_rows(self.docs), DOCS_SCHEMA),
-                           self.docs_path, n_buckets=MEDIA_BUCKETS)
-        media_df = spark.createDataFrame(
-            [(m["media_ref"], bytearray(m["content"])) for m in self.media], MEDIA_SCHEMA)
+        """The docs and media in the catalog layout. The generated rows reach
+        Spark as plain parquet written by pyarrow, so the set-up's Spark work
+        is the two catalog writes."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                          ("media_ref", pa.string()), ("offset", pa.int32())])
+        raw_docs, raw_media = os.path.join(self.work, "raw_docs.parquet"), os.path.join(self.work, "raw_media.parquet")
+        pq.write_table(pa.table({"doc_id": [d["doc_id"] for d in self.docs],
+                                 "spans": pa.array([d["spans"] for d in self.docs], pa.list_(span))}), raw_docs)
+        pq.write_table(pa.table({"media_ref": [m["media_ref"] for m in self.media],
+                                 "content": pa.array([m["content"] for m in self.media], pa.binary())}), raw_media)
+        catalog.write_docs(spark, spark.read.parquet(raw_docs), self.docs_path, n_buckets=MEDIA_BUCKETS)
         catalog.write_media_copartitioned(
-            spark, media_df, self.media_path,
+            spark, spark.read.parquet(raw_media), self.media_path,
             owner_doc_id=F.split(F.col("media_ref"), "/").getItem(2), n_buckets=MEDIA_BUCKETS)
 
     def inputs(self, spark):
@@ -297,10 +230,50 @@ class QueryOps(Workload):
         super().__init__(seed, work)
         self.docs, self.media = [], []
         self.sf_dir = QUERY_DATA
-        self.scan_path = os.path.join(self.sf_dir, "documents.parquet")
+        self.scan_path = self.table("documents")
 
     def expect(self) -> None:
-        pass  # the DuckDB oracle runs in check(), over the same files
+        """Each leaf's DuckDB ``oracle_sql`` result over the same files,
+        normalized as ``tests/test_queries_oracle.py`` does. It is cached in
+        ``ORACLE_CACHE`` under a hash of the oracle SQL, the input tables,
+        the normalizer's module and the DuckDB version, so a change to any of
+        them recomputes it."""
+        import duckdb
+
+        from micro_lab_ocr_spark import queries
+        from tests import test_queries_oracle
+
+        sql = queries.oracle_sql_dict()
+        key = hashlib.sha256(duckdb.__version__.encode())
+        for leaf in QUERY_LEAVES:
+            key.update(sql[leaf].encode())
+        for path in (*(self.table(t) for t in QUERY_TABLES), test_queries_oracle.__file__):
+            with open(path, "rb") as f:
+                key.update(f.read())
+        cache = os.path.join(ORACLE_CACHE, key.hexdigest() + ".json")
+        if os.path.exists(cache):
+            with open(cache) as f:
+                self.expected = json.load(f)
+            return
+        con = duckdb.connect()
+        for t in QUERY_TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{self.table(t)}')")
+        self.expected = {leaf: self.normalize(con.execute(sql[leaf]).fetch_df()) for leaf in QUERY_LEAVES}
+        con.close()
+        os.makedirs(ORACLE_CACHE, exist_ok=True)
+        with open(cache + f".{os.getpid()}", "w") as f:
+            json.dump(self.expected, f)
+        os.replace(cache + f".{os.getpid()}", cache)
+
+    def table(self, name: str) -> str:
+        return os.path.join(self.sf_dir, f"{name}.parquet")
+
+    @staticmethod
+    def normalize(pdf) -> list:
+        """``_normalize``'s (columns, rows) in its JSON form."""
+        from tests.test_queries_oracle import _normalize
+
+        return json.loads(json.dumps(_normalize(pdf)))
 
     def stage(self, spark) -> None:
         pass  # the leaves read the checked-in tables in place
@@ -327,24 +300,11 @@ class QueryOps(Workload):
     def check(self, spark, results) -> dict:
         """Leaves whose result differs from the DuckDB oracle (columns, row
         count or any normalized value)."""
-        import duckdb
-
-        from micro_lab_ocr_spark import queries
-        from tests.test_queries_oracle import _normalize
-
-        con = duckdb.connect()
-        for name in QUERY_TABLES:
-            path = os.path.join(self.sf_dir, f"{name}.parquet")
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
-        sql = queries.oracle_sql_dict()
-        bad = 0
-        for leaf in QUERY_LEAVES:
-            bad += _normalize(results[leaf]) != _normalize(con.execute(sql[leaf]).fetch_df())
-        con.close()
+        bad = sum(self.normalize(results[leaf]) != self.expected[leaf] for leaf in QUERY_LEAVES)
         return {"mismatch_docs": bad, "lineage_ok": True}
 
     def kernel_payloads(self) -> dict[str, list]:
         return {k: [] for k in KERNELS}
 
 
-WORKLOADS = {w.name: w for w in (TextSpans, MediaJob, QueryOps)}
+WORKLOADS = {w.name: w for w in (MediaJob, QueryOps)}
