@@ -1,22 +1,20 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + scaling protocol).
+"""Benchmark harness (driver contract).
 
 Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...}
 
-``--scaling`` additionally runs the flagship pipeline at two parallelism
-levels (N and 4N cores, same input — the sandbox stand-in for N vs 4N
-executors per BASELINE.md) in clean subprocesses and writes
-BENCH/BASELINE.md with throughput + scaling efficiency.
+``--single-flagship N`` times only the flagship extraction at local[N].
+The N→4N scaling protocol is ``scripts/scaling.py``; per-layer detail is
+``perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -108,1189 +106,8 @@ def run_suite(parallelism: int, sf_dir: str, include_queries: bool = True) -> di
     return result
 
 
-CORPUS_DIR = os.path.join(REPO, ".bench_corpus")
-SCALING_BUCKETS = int(os.environ.get("SPARK_GRAFT_SCALING_BUCKETS", "8"))
-
-
-def _ensure_media_corpus(n_docs: int = 36000) -> str:
-    """Materialize the media-heavy interleaved fixture corpus ONCE, in the
-    PRODUCTION layout the checkpointed job reads (round-2 verdict item 1):
-    docs directory-bucketed on doc_id (catalog.write_docs — the Iceberg
-    bucket(N, doc_id) stand-in) and media co-partitioned by owning doc
-    (catalog.write_media_copartitioned), so each per-bucket run prunes both
-    scans. The media-heavy mix makes the OCR/table kernels (the north-star
-    workload) dominate wall time."""
-    from pyspark.sql import functions as F
-
-    marker = os.path.join(CORPUS_DIR, f".done_v3_{n_docs}_{SCALING_BUCKETS}")
-    if os.path.exists(marker):
-        return CORPUS_DIR
-    from micro_lab_ocr_spark.session import get_spark
-    from micro_lab_ocr_spark.sources import catalog, fixtures
-
-    docs, media, _ = fixtures.generate_corpus(
-        n_docs=n_docs, seed=42, mix=fixtures.MEDIA_HEAVY_MIX
-    )
-    spark = get_spark("corpus-gen", parallelism=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in docs],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-    media_df = spark.createDataFrame(
-        [(m["media_ref"], bytearray(m["content"])) for m in media],
-        "media_ref string, content binary",
-    )
-    # many files per bucket: a real corpus scan has thousands of splits —
-    # the two-parallelism protocol must not be scan-split-bound at the high
-    # level (write_docs repartitions by bucket; splits come from file sizing)
-    # bounded row groups: scan parallelism is row-group-granular — with one
-    # ~6-110MB file per bucket the default 128MB groups capped the decode
-    # kernel stage at 8 effective tasks regardless of cores (see
-    # catalog.write_docs docstring); 4/8MB groups give 100+ schedulable units
-    catalog.write_docs(
-        spark, docs_df, f"{CORPUS_DIR}/docs_bucketed", n_buckets=SCALING_BUCKETS,
-        row_group_bytes=4 * 1024 * 1024,
-    )
-    catalog.write_media_copartitioned(
-        spark, media_df, f"{CORPUS_DIR}/media_cp",
-        owner_doc_id=F.split(F.col("media_ref"), "/").getItem(2),
-        n_buckets=SCALING_BUCKETS,
-        row_group_bytes=8 * 1024 * 1024,
-    )
-    spark.stop()
-    open(marker, "w").write("ok")
-    return CORPUS_DIR
-
-
-def run_scaling_single(parallelism: int) -> dict:
-    """One timed session of the PRODUCTION job (the same configuration
-    jobs/extract.py submits: checkpointed per-bucket extraction over the
-    bucketed docs layout + co-partitioned media, parquet output + lineage)
-    at a parallelism level. Warmup pass (codegen/plan/python workers), then
-    two timed passes with fresh checkpoint/output dirs each.
-
-    Every pass is event-logged; the per-stage decomposition of the BEST
-    timed pass (stage walls, executor run/CPU core-seconds, bytes moved)
-    rides back in the result JSON so the scaling report can show WHICH
-    stage caps efficiency, not just the headline ratio."""
-    import shutil
-    import tempfile
-    import time as _t
-
-    from micro_lab_ocr_spark.pipeline.checkpoint import CheckpointedExtraction
-    from micro_lab_ocr_spark.session import get_spark
-    from micro_lab_ocr_spark.sources import catalog
-
-    # probe BEFORE the warmup as well as after the timed passes: on this VM
-    # storms swing 2-10x on minute scales, so a post-run-only probe can
-    # misattribute a stormy pass as quiet (or vice versa)
-    weather_pre = _weather_probe()
-    pinned = _pin_cores(parallelism)
-    ev_dir = tempfile.mkdtemp(prefix=f"evlog_{parallelism}_")
-    spark = get_spark(
-        "scaling",
-        parallelism=parallelism,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": f"file://{ev_dir}",
-            "spark.eventLog.compress": "false",
-            # single plain-JSON file — the default rolling dir writes zstd
-            # part files the stdlib-only parser below can't read
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = catalog.read_docs(spark, f"{CORPUS_DIR}/docs_bucketed", keep_bucket=True)
-    media = spark.read.parquet(f"{CORPUS_DIR}/media_cp")
-    n_docs = docs.count()
-
-    def one_pass() -> tuple[float, tuple[int, int]]:
-        work = tempfile.mkdtemp(prefix="scaling_")
-        try:
-            # submission parallelism sized to the level: enough in-flight
-            # bucket jobs to overlap plan compile with compute, never so many
-            # that tiny-core levels thrash (measured: pool=8 on 2 cores is
-            # 40% slower than pool=4)
-            # full-batch mode: one plan + one dynamic-overwrite write per
-            # pass — the per-bucket plan-compile fixed cost (~69 s/pass
-            # measured bucket-at-a-time, identical at every level) would
-            # otherwise cap the measurable efficiency at ~0.59
-            ck = CheckpointedExtraction(
-                os.path.join(work, "ckpt"), os.path.join(work, "out"),
-                n_buckets=SCALING_BUCKETS, media_copartitioned=True,
-                bucket_batch_size=SCALING_BUCKETS,
-            )
-            w0 = int(_t.time() * 1000)
-            t0 = _t.perf_counter()
-            ck.run(spark, docs, media)
-            return round(_t.perf_counter() - t0, 3), (w0, int(_t.time() * 1000))
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-
-    one_pass()  # warmup
-    (wall_a, win_a), (wall_b, win_b) = one_pass(), one_pass()
-    spark.stop()
-    best_win = win_a if wall_a <= wall_b else win_b
-    stages = _parse_event_log(ev_dir, best_win)
-    shutil.rmtree(ev_dir, ignore_errors=True)
-    return {
-        "cores": parallelism,
-        "pinned": pinned,
-        "wall": min(wall_a, wall_b),
-        "walls": [wall_a, wall_b],
-        "docs": n_docs,
-        "stages": stages,
-        "weather": _weather_probe(),
-        "weather_pre": weather_pre,
-    }
-
-
-def _pin_cores(n: int) -> bool:
-    """Pin this process (and every child: the JVM, its Python workers) to
-    exactly ``n`` physical cores — the faithful stand-in for an executor
-    cluster, where each executor's cgroup caps it at its nominal cores.
-
-    Unpinned local[N] UNDERSTATES scaling efficiency for Python-kernel
-    stages: a mapInPandas task occupies up to three threads (JVM feeder,
-    JVM output reader, the Python worker), so an unpinned local[4] borrows
-    8-12 physical CPUs while claiming 4 — measured on the isolated decode
-    stage (BENCH/probes/stage_prof.py): wall 9.9 s unpinned vs 14.6 s
-    pinned at 4 cores, while at 16 cores pinning removed BOTH the apparent
-    1.15x Python CPU inflation (31.0->32.6 core-s, flat) and the 20 s of
-    worker fetch-starvation. A real N->4N executor cluster cannot borrow
-    beyond its cgroup at EITHER level, so the pinned measurement is the
-    faithful one. SPARK_GRAFT_PIN=0 restores the historical unpinned
-    regime (archived samples: BENCH/scaling_samples_r0*__.jsonl)."""
-    if os.environ.get("SPARK_GRAFT_PIN", "1") == "0":
-        return False
-    try:
-        os.sched_setaffinity(0, set(range(n)))
-        return True
-    except (AttributeError, OSError):  # non-Linux / restricted sandbox
-        return False
-
-
-def _weather_probe() -> dict:
-    """~2 s host-health probe recorded with every scaling sample: a pure-
-    Python integer loop (CPU speed / hypervisor steal) and a fresh-page
-    numpy fill (allocation bandwidth). This shared VM shows 2–10× swings in
-    BOTH between byte-identical runs (observed: 6 MB/s vs 1800 MB/s alloc
-    minutes apart); per-sample weather makes the min-of-N selection
-    auditable — a discarded slow sample should show a degraded probe, a
-    kept min a healthy one."""
-    import numpy as np
-
-    t0 = time.time()
-    s = 0
-    for i in range(10_000_000):
-        s += i
-    pyloop = time.time() - t0
-    t0 = time.time()
-    a = np.zeros(8_000_000)
-    a[:] = 1.0
-    alloc_mbps = 64.0 / (time.time() - t0)
-    return {"pyloop_s": round(pyloop, 2), "alloc_mbps": round(alloc_mbps, 0)}
-
-
-def _parse_event_log(ev_dir: str, window: tuple[int, int]) -> list[dict]:
-    """Aggregate the Spark event log into per-stage-GROUP rows for stages
-    submitted inside ``window`` (one timed pass). Groups key on the stage
-    callsite name, so the same pipeline stage at two parallelism levels
-    lines up row-for-row. Fields: summed stage wall, executor run / CPU /
-    GC core-seconds, bytes in/out/shuffled, task count."""
-    stage_meta: dict[int, dict] = {}
-    task_agg: dict[int, dict] = {}
-    # Spark 4 rolling format: the "log" is a DIRECTORY (eventlog_v2_<app>/)
-    # holding events_N_<app> part files plus an empty appstatus marker —
-    # walk and parse every regular file; non-JSON lines are skipped anyway
-    paths = []
-    for root, _dirs, files in os.walk(ev_dir):
-        paths.extend(os.path.join(root, f) for f in files)
-    for path in paths:
-        with open(path, errors="replace") as f:
-            for line in f:
-                try:
-                    e = json.loads(line)
-                except (ValueError, KeyError):
-                    continue
-                ev = e.get("Event")
-                if ev == "SparkListenerStageCompleted":
-                    si = e.get("Stage Info", {})
-                    sub, comp = si.get("Submission Time"), si.get("Completion Time")
-                    if sub is None or comp is None:
-                        continue
-                    # group key: the stage's distinct physical-operator scope
-                    # names (normalized) — under AQE every stage's callsite
-                    # name is the same scheduler lambda, so the RDD scopes
-                    # are the only signal of WHAT the stage computes
-                    scopes = set()
-                    for r in si.get("RDD Info", []):
-                        sc = r.get("Scope")
-                        if not sc:
-                            continue
-                        try:
-                            nm = json.loads(sc).get("name", "").strip()
-                        except ValueError:
-                            continue
-                        if nm.startswith("WholeStageCodegen"):
-                            nm = "WSC"
-                        if nm:
-                            scopes.add(nm)
-                    stage_meta[si["Stage ID"]] = {
-                        "name": "+".join(sorted(scopes)) or si.get("Stage Name", "?"),
-                        "submit": sub,
-                        "wall": (comp - sub) / 1000.0,
-                        "tasks": si.get("Number of Tasks", 0),
-                    }
-                elif ev == "SparkListenerTaskEnd":
-                    sid = e.get("Stage ID")
-                    tm = e.get("Task Metrics") or {}
-                    a = task_agg.setdefault(
-                        sid, dict(run=0.0, cpu=0.0, gc=0.0, inb=0, shr=0, shw=0, outb=0)
-                    )
-                    a["run"] += tm.get("Executor Run Time", 0) / 1000.0
-                    a["cpu"] += tm.get("Executor CPU Time", 0) / 1e9  # ns
-                    a["gc"] += tm.get("JVM GC Time", 0) / 1000.0
-                    a["inb"] += (tm.get("Input Metrics") or {}).get("Bytes Read", 0)
-                    sr = tm.get("Shuffle Read Metrics") or {}
-                    a["shr"] += sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)
-                    a["shw"] += (tm.get("Shuffle Write Metrics") or {}).get(
-                        "Shuffle Bytes Written", 0
-                    )
-                    a["outb"] += (tm.get("Output Metrics") or {}).get("Bytes Written", 0)
-    groups: dict[str, dict] = {}
-    for sid, meta in stage_meta.items():
-        if not (window[0] <= meta["submit"] <= window[1]):
-            continue
-        g = groups.setdefault(
-            meta["name"],
-            dict(name=meta["name"], wall=0.0, tasks=0, n_stages=0,
-                 run=0.0, cpu=0.0, gc=0.0, inb=0, shr=0, shw=0, outb=0),
-        )
-        g["wall"] += meta["wall"]
-        g["tasks"] += meta["tasks"]
-        g["n_stages"] += 1
-        for k, v in (task_agg.get(sid) or {}).items():
-            g[k] += v
-    out = sorted(groups.values(), key=lambda g: -g["wall"])
-    for g in out:
-        for k in ("wall", "run", "cpu", "gc"):
-            g[k] = round(g[k], 2)
-    return out
-
-
-def _mem_burn(_):
-    import numpy as np
-
-    a = np.random.rand(40_000_000 // 8)
-    t_end = time.time() + 4
-    it = 0
-    while time.time() < t_end:
-        a = a * 1.0000001
-        a[::1000].sum()
-        it += 1
-    return it
-
-
-def _int_burn(_):
-    x, it = 1, 0
-    t_end = time.time() + 4
-    while time.time() < t_end:
-        for _ in range(100000):
-            x = (x * 1103515245 + 12345) % (2**31)
-        it += 1
-    return it
-
-
-def _calibrate(levels: tuple[int, ...]) -> dict:
-    """Hardware-ceiling calibration at the protocol's worker counts: a
-    cache-resident integer burn (pure-CPU ceiling) and an LLC-busting numpy
-    stream (memory-bandwidth ceiling). Run per protocol execution so the MD
-    documents the box the numbers were taken on. (Burns are module-level —
-    mp.Pool pickles them by reference.)"""
-    import multiprocessing as mp
-
-    out = {}
-    reps = int(os.environ.get("SPARK_GRAFT_CAL_REPS", "3"))
-    for name, fn in (("intcpu", _int_burn), ("membw", _mem_burn)):
-        # interleaved max-of-N per level: this VM's storms (hypervisor steal
-        # + memory-subsystem collapse) hit single-shot calibrations hard
-        # enough to invert them (observed: membw rate 0.3 it/s at 4 workers
-        # vs 40 it/s at 16 when the 4-worker window caught a storm). Max
-        # rate = the quietest window per level, same estimator as the walls.
-        rates: dict[int, float] = {w: 0.0 for w in levels}
-        orig_mask = os.sched_getaffinity(0) if hasattr(os, "sched_getaffinity") else None
-        for _ in range(reps):
-            for w in levels:
-                # pin the pool to exactly w cores (workers inherit the mask
-                # set at fork) — same executor-cgroup stand-in as the job
-                # runs under (_pin_cores), so ceiling and job are measured
-                # under the same resource envelope
-                if orig_mask is not None and os.environ.get("SPARK_GRAFT_PIN", "1") != "0":
-                    os.sched_setaffinity(0, set(range(w)))
-                try:
-                    with mp.Pool(w) as p:
-                        t0 = time.time()
-                        its = p.map(fn, range(w))
-                        rates[w] = max(rates[w], sum(its) / (time.time() - t0))
-                finally:
-                    if orig_mask is not None:
-                        os.sched_setaffinity(0, orig_mask)
-        lo, hi = levels[0], levels[-1]
-        out[name] = {"rates": {str(w): round(r, 1) for w, r in rates.items()},
-                     "eff": round((rates[hi] / rates[lo]) / (hi / lo), 3)}
-    return out
-
-
-def run_scaling(sf_dir: str) -> None:
-    """Two-parallelism scaling protocol (BASELINE.md): same job, same input,
-    local[N] vs local[4N]; efficiency = (T_N / T_4N) / 4.
-
-    Levels default to 4→16 ($SPARK_GRAFT_SCALING_LEVELS to override). The
-    32-thread level is NOT used by default because this sandbox VM's memory
-    subsystem saturates: the membw calibration shows byte-moving work at 32
-    workers running at ~0.44× the ABSOLUTE throughput of 8 workers (integer
-    work scales 3.25×). N→4N executors on a real cluster each bring their
-    own memory channels; a level pair the box can physically host is the
-    faithful stand-in. Both calibrations are recorded alongside the result.
-
-    The job is the full interleaved pipeline over the media-rich fixture
-    corpus (the north-star workload: OCR/table kernels dominate). Each level
-    does a warmup pass (codegen/plan/python-worker warm) then a timed pass,
-    in a clean subprocess per level; reps interleaved, min wall per level."""
-    _ensure_media_corpus(int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "36000")))
-    levels = os.environ.get("SPARK_GRAFT_SCALING_LEVELS", "4,16")
-    lo, hi = (int(x) for x in levels.split(","))
-    reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "4"))
-    walls: dict[int, list[float]] = {lo: [], hi: []}
-    groups: dict[int, list] = {lo: [], hi: []}  # (rep id, sample min wall)
-    stage_tables: dict[int, list] = {lo: [], hi: []}
-    weathers: dict[int, list] = {lo: [], hi: []}
-    best_wall: dict[int, float] = {lo: float("inf"), hi: float("inf")}
-    docs = 0
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    cal = _calibrate((lo, hi))
-    samples_path = os.path.join(REPO, "BENCH", "scaling_samples.jsonl")
-    # persist the calibration so --render-scaling can rebuild the report
-    # without re-measuring (a calibration run concurrent with anything else
-    # is both wrong and polluting)
-    with open(samples_path, "a") as f:
-        f.write(json.dumps({"calibration": cal}) + "\n")
-    # resume: a killed protocol leaves completed level-runs in the samples
-    # file — seed walls/stage tables from them so the report reflects EVERY
-    # sample ever taken under the current config, and only the missing reps
-    # re-run (delete the file to start a fresh protocol after config changes)
-    reps_seeded = 0
-    if os.path.exists(samples_path):
-        with open(samples_path) as f:
-            for line in f:
-                r = json.loads(line)
-                if "calibration" in r:
-                    continue
-                n = r["cores"]
-                if n not in walls:
-                    continue
-                walls[n].extend(r.get("walls", [r["wall"]]))
-                groups[n].append((r.get("rep", 0), min(r.get("walls", [r["wall"]]))))
-                weathers[n].append({"pre": r.get("weather_pre"), "post": r.get("weather")})
-                docs = r["docs"]
-                reps_seeded = max(reps_seeded, r.get("rep", 0) + 1)
-                if r.get("stages") and r["wall"] < best_wall[n]:
-                    best_wall[n] = r["wall"]
-                    stage_tables[n] = r["stages"]
-    for rep in range(reps_seeded, reps):
-        for n in (lo, hi):
-            out = subprocess.run(
-                [sys.executable, __file__, "--single-scaling", str(n)],
-                capture_output=True, text=True,
-                env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-                timeout=3600,
-            )
-            r = json.loads(out.stdout.strip().splitlines()[-1])
-            walls[n].extend(r.get("walls", [r["wall"]]))
-            groups[n].append((rep, min(r.get("walls", [r["wall"]]))))
-            weathers[n].append({"pre": r.get("weather_pre"), "post": r.get("weather")})
-            docs = r["docs"]
-            # keep the stage decomposition of the globally best pass per
-            # level — the min wall is the reported estimator, so the stage
-            # table must describe the same pass
-            if r.get("stages") and r["wall"] < best_wall[n]:
-                best_wall[n] = r["wall"]
-                stage_tables[n] = r["stages"]
-            with open(samples_path, "a") as f:
-                f.write(json.dumps({"rep": rep, **r}) + "\n")
-        # regenerate the report after every rep — a killed run still leaves
-        # a valid BASELINE.md reflecting all samples so far
-        _write_scaling_md(lo, hi, walls, docs, cal, rep + 1, stage_tables,
-                          weathers, groups)
-    eff = (min(walls[lo]) / min(walls[hi])) / (hi / lo)
-    print(json.dumps({"scaling_efficiency": round(eff, 3),
-                      "t_lo": min(walls[lo]), "t_hi": min(walls[hi]),
-                      "lo": lo, "hi": hi, "docs": docs, "reps": reps,
-                      "job": "checkpointed bucketed extraction (jobs/extract.py config)",
-                      "calibration": cal,
-                      "eff_vs_cpu_ceiling": round(eff / cal["intcpu"]["eff"], 3),
-                      "walls_lo": walls[lo], "walls_hi": walls[hi]}))
-
-
-def _classify_stage(g: dict) -> str:
-    """Scaling-class assignment for the blended-ceiling model, from the
-    stage's own measured metrics at the LOW level:
-
-    * ``bytes``  — byte-moving stage (scan/shuffle/write dominated): total
-      bytes moved per executor-run core-second ≥ 50 MB/s, or JVM CPU < 35%
-      of run with no Python in the stage (the thread is waiting on memory
-      or disk). Ceiling: the membw calibration.
-    * ``python`` — Arrow/pandas kernel stage (name carries the python eval
-      callsite): executor run time is mostly waiting on the Python worker,
-      whose numpy work is cache-resident compute with Arrow traffic on
-      top. Ceiling: the intcpu calibration (optimistic — any Arrow/IPC
-      bandwidth component only LOWERS the true ceiling, so using intcpu
-      keeps the model conservative for the measured-vs-ceiling claim).
-    * ``cpu``    — JVM compute. Ceiling: intcpu calibration.
-    """
-    run = max(g["run"], 1e-3)
-    rate = (g["inb"] + g["shr"] + g["shw"] + g["outb"]) / run
-    name = g["name"].lower()
-    is_python = "mapinpandas" in name or "arrowevalpython" in name or "evalpython" in name
-    if is_python:
-        return "python"
-    if rate >= 50e6 or g["cpu"] / run < 0.35:
-        return "bytes"
-    return "cpu"
-
-
-def _core_seconds_md(lo, hi, t_lo, t_hi, slo, shi, cal) -> str:
-    """Core-seconds accounting: where the efficiency between the two levels
-    actually goes. Decomposes measured eff into (a) slot-packing efficiency
-    at each level (scheduler + skew quality — the part engineering controls)
-    and (b) executor core-seconds inflation hi/lo (the same work costing
-    more cycles under 4× the concurrency — hardware contention on a shared
-    memory subsystem, bounded between the two calibration kernels). All
-    inputs are measured: stage-sum run core-s from the event log of the best
-    pass per level, walls, and the same-run calibrations."""
-    ratio = hi / lo
-    run_lo = sum(g["run"] for g in slo)
-    run_hi = sum(g["run"] for g in shi)
-    if not run_lo or not run_hi:
-        return ""
-    pack_lo = (run_lo / lo) / t_lo
-    pack_hi = (run_hi / hi) / t_hi
-    infl = run_hi / run_lo
-    eff = (t_lo / t_hi) / ratio
-    # per-core work-rate inflation of the two calibration kernels: how much
-    # more expensive one unit of work gets at the high concurrency
-    def kernel_infl(k):
-        r = cal[k]["rates"]
-        per_lo = float(r[str(lo)]) / lo
-        per_hi = float(r[str(hi)]) / hi
-        return per_lo / per_hi
-    i_cpu, i_mem = kernel_infl("intcpu"), kernel_infl("membw")
-    # implied work mix: fraction of core-seconds behaving like the membw
-    # kernel, solving infl = f*i_mem + (1-f)*i_cpu
-    f_mem = max(0.0, min(1.0, (infl - i_cpu) / max(i_mem - i_cpu, 1e-9)))
-    ceiling_eff = run_lo / run_hi  # packing-perfect eff given measured inflation
-    return f"""## Core-seconds accounting — where the efficiency goes
-
-| quantity | local[{lo}] | local[{hi}] |
-|---|---|---|
-| Σ executor run core-s (best pass) | {run_lo:.0f} | {run_hi:.0f} |
-| wall (s) | {t_lo:.1f} | {t_hi:.1f} |
-| slot-packing efficiency (run/cores)/wall | {pack_lo:.2f} | {pack_hi:.2f} |
-
-The job keeps ~{min(pack_lo, pack_hi) * 100:.0f}% of every core busy at BOTH
-levels — scheduling, skew handling and driver serial work are not the
-limiter. What remains is **core-seconds inflation**: the identical work
-costs {infl:.2f}× more executor cycles at local[{hi}] than at local[{lo}].
-The calibration kernels bound per-unit work-cost inflation on this box at
-{i_cpu:.2f}× (cache-resident CPU) and {i_mem:.2f}× (LLC-busting memory
-stream); the measured {infl:.2f}× implies a work mix of ~{(1 - f_mem) * 100:.0f}%
-CPU-like / {f_mem * 100:.0f}% bandwidth-like core-seconds — consistent with
-an extraction job that is mostly kernel/expression compute plus
-sort/shuffle/Arrow byte churn. Given that measured inflation, the best
-achievable efficiency with perfect packing is
-**{ceiling_eff:.3f}**; the job reaches {eff:.3f} =
-**{eff / ceiling_eff:.2f}× of it**. Executors on a real N→4N cluster
-bring their own memory channels, so the inflation term — the entire
-remaining gap — is a shared-box artifact, not a property of the plan.
-"""
-
-
-def _stage_sections(lo, hi, t_lo, t_hi, stage_tables, cal) -> tuple[str, str, float]:
-    """Render the per-stage decomposition table + blended-ceiling section.
-    Returns (stage_md, ceiling_md, ceiling_eff)."""
-    ratio = hi / lo
-    slo, shi = stage_tables.get(lo) or [], stage_tables.get(hi) or []
-    if not slo or not shi:
-        return "(no stage decomposition captured)", "", 0.0
-    by_name_hi = {g["name"]: g for g in shi}
-    rows = []
-    pred_t_hi = 0.0
-    covered_lo = 0.0
-    eff_cls = {"cpu": cal["intcpu"]["eff"], "python": cal["intcpu"]["eff"],
-               "bytes": cal["membw"]["eff"]}
-    for g in slo:
-        h = by_name_hi.get(g["name"])
-        cls = _classify_stage(g)
-        covered_lo += g["wall"]
-        pred_t_hi += g["wall"] / (ratio * eff_cls[cls])
-        gb = (g["inb"] + g["shr"] + g["shw"] + g["outb"]) / 1e9
-        seff = (g["wall"] / h["wall"]) / ratio if h and h["wall"] > 0 else float("nan")
-        short = g["name"].split("\n")[0][:48]
-        rows.append(
-            f"| {short} | {cls} | {g['tasks']}→{h['tasks'] if h else '—'} "
-            f"| {g['wall']:.1f} | {h['wall'] if h else float('nan'):.1f} | {seff:.2f} "
-            f"| {g['run']:.0f} | {100 * g['cpu'] / max(g['run'], 1e-3):.0f}% | {gb:.2f} |"
-        )
-    # driver residual: wall not covered by any stage (plan compile, commit /
-    # file renames, checkpoint bookkeeping) — serial, does not scale
-    resid_lo = max(t_lo - covered_lo, 0.0)
-    resid_hi = max(t_hi - sum(g["wall"] for g in shi), 0.0)
-    pred_t_hi += resid_lo
-    ceiling_eff = (t_lo / pred_t_hi) / ratio if pred_t_hi > 0 else 0.0
-    stage_md = (
-        f"| stage (callsite) | class | tasks {lo}→{hi} | wall@{lo} (s) | wall@{hi} (s) "
-        f"| stage eff | run core-s@{lo} | JVM-CPU% | GB moved |\n"
-        "|---|---|---|---|---|---|---|---|---|\n"
-        + "\n".join(rows)
-        + f"\n\ndriver residual (wall − Σ stage walls): {resid_lo:.1f} s @local[{lo}], "
-        f"{resid_hi:.1f} s @local[{hi}] — plan compile + dynamic-overwrite commit "
-        f"+ checkpoint bookkeeping; serial, scales at 1/{ratio:.0f}. NOTE this row "
-        "is stage-wall arithmetic, not a timeline: stages overlap (broadcast "
-        "builds run concurrently with the kernel stage), so it can under- or "
-        "over-state serial time. Event-log timelines of full passes "
-        "(BENCH/probes/instr.py + parse_ev.py) put ACTUAL un-overlapped "
-        "driver time at ~3–4 s/pass at BOTH levels — almost entirely the "
-        "fixed plan-compile at job start — and show the critical path is "
-        "kernel stage → window/agg stage with everything else overlapped."
-    )
-    ceiling_md = f"""Per-stage model: predicted T_{hi} = Σ wall@{lo} / ({ratio:.0f} × class-eff)
-+ driver residual (unscaled), with class-eff from the same-run calibration
-(intcpu {cal['intcpu']['eff']}, membw {cal['membw']['eff']}).
-
-* predicted T_{hi} = {pred_t_hi:.1f} s → **blended ceiling efficiency
-  {ceiling_eff:.3f}**
-* measured T_{hi} = {t_hi:.1f} s → measured efficiency {(t_lo / t_hi) / ratio:.3f}
-* **measured / ceiling = {((t_lo / t_hi) / ratio) / ceiling_eff if ceiling_eff else 0:.2f}×**
-"""
-    return stage_md, ceiling_md, ceiling_eff
-
-
-def _weather_md(lo, hi, weathers) -> str:
-    """Per-sample host-weather table (one probe per warm session / sample
-    line). Quiet-box reference on this VM: pyloop ~0.4-1.1 s, alloc ~1800 MB/s;
-    storms show 2-10x pyloop and down to ~6 MB/s alloc. The min-wall
-    estimator discards stormy samples by construction - this table is the
-    audit trail."""
-    def fmt1(w) -> str:
-        return f"{w['pyloop_s']}/{int(w['alloc_mbps'])}" if w else "-"
-
-    def fmt(w) -> str:
-        # round-5 samples carry pre- AND post-run probes ({"pre":…, "post":…});
-        # older samples are a single post-run probe (or None)
-        if isinstance(w, dict) and ("pre" in w or "post" in w):
-            if not w.get("pre") and not w.get("post"):
-                return "-"
-            return f"{fmt1(w.get('pre'))}→{fmt1(w.get('post'))}"
-        return fmt1(w)
-
-    if not weathers or not any(
-        w and (not isinstance(w, dict) or w.get("pre") or w.get("post")
-               or "pyloop_s" in w)
-        for ws in weathers.values() for w in ws
-    ):
-        return ""
-    lines = ["", "Host weather at each sample (pre→post where both probed;",
-             "pyloop s / alloc MB/s; quiet-box ~0.4-1.1 s / ~1800 MB/s):", ""]
-    for n in (lo, hi):
-        lines.append(f"* local[{n}]: " + ", ".join(
-            fmt(w) for w in weathers.get(n, [])))
-    return "\n".join(lines)
-
-
-def _paired_eff_md(lo, hi, groups) -> str:
-    """SAME-REP paired efficiency: the headline min-of-all-samples pairing
-    assumes the host is stationary across reps (and rounds) — on this VM it
-    is not, so a lo-min from one day against a hi-min from another can bias
-    the ratio either way. Each rep runs lo then hi back-to-back inside one
-    ~15-minute window, so the per-rep ratio is weather-paired; the table
-    lists every rep's (min lo wall, min hi wall, eff) and the max/median as
-    drift-bounded estimators alongside the headline.
-
-    `groups` is {level: [(rep_id, min wall of that sample record), ...]} in
-    file order — one entry per SAMPLE RECORD, never a flat wall list, so a
-    legacy single-wall record or a killed half-rep cannot shift the pairing.
-    Records pair index-wise only while their rep ids agree; pairing stops at
-    the first mismatch (a dropped half-rep) rather than mispairing across
-    host regimes."""
-    ratio = hi / lo
-    los, his = groups.get(lo, []), groups.get(hi, [])
-    rows, effs = [], []
-    for i, ((rep_l, wl), (rep_h, wh)) in enumerate(zip(los, his)):
-        if rep_l != rep_h:
-            break
-        e = (wl / wh) / ratio
-        effs.append(e)
-        rows.append(f"| {i} | {wl:.1f} | {wh:.1f} | {e:.3f} |")
-    if len(effs) < 2:
-        return ""
-    effs_sorted = sorted(effs)
-    med = effs_sorted[len(effs) // 2] if len(effs) % 2 else (
-        effs_sorted[len(effs) // 2 - 1] + effs_sorted[len(effs) // 2]) / 2
-    return (
-        "\nSame-rep paired efficiency (each rep's lo+hi run back-to-back in "
-        "one ~15-min\nweather window). The cross-rep min pairing above "
-        "assumes the host is stationary\nacross reps and rounds; on this VM "
-        "it is not (same code measured 161 s → 356 s\nat local[4] across "
-        "days — see the drift note below), so lo-min and hi-min can\ncome "
-        "from different host regimes. A per-rep ratio is weather-paired but "
-        "can be\nskewed EITHER way when a storm hits only one half (ratios "
-        "> 1 = stormy lo;\n≪ typical = stormy hi); the MEDIAN over reps is "
-        "the drift-robust estimator.\n\n"
-        "| rep | min lo wall (s) | min hi wall (s) | paired eff |\n|---|---|---|---|\n"
-        + "\n".join(rows)
-        + f"\n\n* **median paired efficiency: {med:.3f}** over {len(effs)} reps"
-        f" (full distribution above)\n"
-    )
-
-
-def _cluster_samples():
-    """Single parser for BENCH/cluster_samples.jsonl — shared by the headline
-    (_cluster_family_effs) and the detail section (_cluster_md) so the two
-    views of the same file can never disagree. Returns (fams, docs, cals,
-    sessions):
-
-      fams     {exec_cores: {workers: [walls...]}}
-      docs     {(exec_cores, workers): corpus docs}
-      cals     {exec_cores: same-box calibration at the family's core pair}
-      sessions {exec_cores: [(workers, min wall, commit), ...] in file order —
-                one entry per warm spark-submit session; the probe runs each
-                lo session immediately before its hi session, so consecutive
-                lo→hi entries form a weather-paired measurement. commit is the
-                short git hash the probe recorded (None for samples taken
-                before the probe recorded it)}
-
-    Rows whose executors_seen fell short of executors_requested are SKIPPED:
-    a wall measured on an under-provisioned cluster is not a sample of the
-    claimed level (cluster_scale.py now aborts such runs; this guards any
-    sample recorded before that, or by a patched probe)."""
-    path = os.path.join(REPO, "BENCH", "cluster_samples.jsonl")
-    fams: dict[int, dict[int, list[float]]] = {}
-    docs: dict[tuple[int, int], int] = {}
-    cals: dict[int, dict] = {}
-    sessions: dict[int, list[tuple[int, float]]] = {}
-    if not os.path.exists(path):
-        return fams, docs, cals, sessions
-    with open(path) as f:
-        for line in f:
-            r = json.loads(line)
-            if "calibration" in r and "exec_cores" in r:
-                cals[r["exec_cores"]] = r["calibration"]
-                continue
-            if "workers" not in r:
-                continue
-            seen = r.get("executors_seen")
-            if seen is not None and seen < r.get("executors_requested", seen):
-                continue
-            ec = r.get("exec_cores", 4)
-            fams.setdefault(ec, {}).setdefault(r["workers"], []).extend(r["walls"])
-            docs[(ec, r["workers"])] = r.get("docs", docs.get((ec, r["workers"]), 0))
-            sessions.setdefault(ec, []).append(
-                (r["workers"], min(r["walls"]), r.get("commit")))
-    return fams, docs, cals, sessions
-
-
-def _median(vals: list[float]) -> float:
-    s = sorted(vals)
-    mid = len(s) // 2
-    return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
-
-_ENGINE_VER_CACHE: dict = {}
-
-
-def _engine_version(commit: str | None) -> str | None:
-    """Resolve a recorded repo commit to the ENGINE code version actually
-    measured: the git tree hash of micro_lab_ocr_spark/ at that commit.
-    Samples record the repo HEAD they ran at, but bench/doc/sample commits
-    between sessions change HEAD without changing the measured binary —
-    grouping by the package tree hash keeps same-binary sessions in one
-    family. Falls back to the raw commit string when git can't resolve it."""
-    if commit is None:
-        return None
-    if commit not in _ENGINE_VER_CACHE:
-        try:
-            out = subprocess.run(
-                ["git", "-C", REPO, "rev-parse", "--short",
-                 f"{commit}:micro_lab_ocr_spark"],
-                capture_output=True, text=True, timeout=10,
-            )
-            _ENGINE_VER_CACHE[commit] = out.stdout.strip() or commit
-        except Exception:
-            _ENGINE_VER_CACHE[commit] = commit
-    return _ENGINE_VER_CACHE[commit]
-
-
-def _commit_backfill(ec: int) -> dict:
-    """Engine-version backfill for sample rows recorded before the probe
-    stamped commits (pre-35573e7): BENCH/cluster_commit_backfill.json maps
-    exec_cores -> paired-session index -> {engine_tree, evidence}, each
-    derived from git history (see the file's _comment for the derivation).
-    Raw jsonl rows are never edited; backfilled versions render with a '*'
-    and their evidence is footnoted."""
-    path = os.path.join(REPO, "BENCH", "cluster_commit_backfill.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        return json.load(f).get(str(ec), {})
-
-
-def _cluster_pairs(ordered, lo: int, hi: int, ec: int):
-    """Pair adjacent complementary sessions of one family and resolve each
-    pair's engine version: (pairs [(lo wall, hi wall, eff, commit)], vers
-    [tree hash or None]) — version from the recorded commit's package tree
-    hash, else the git-history backfill sidecar, else None.
-
-    Order-agnostic within a pair: the probe historically ran lo→hi, but
-    since SPARK_GRAFT_HI_FIRST it may run the weather-sensitive hi level
-    first, so a hi row followed by its session's lo row is the same
-    weather-paired measurement."""
-    pairs = []
-    prev = None  # (workers, wall, commit) awaiting its complement
-    for workers, wall, commit in ordered:
-        if workers not in (lo, hi):
-            continue
-        if prev is not None and prev[0] != workers:
-            lo_wall = prev[1] if prev[0] == lo else wall
-            hi_wall = wall if workers == hi else prev[1]
-            pairs.append((lo_wall, hi_wall, (lo_wall / hi_wall) / (hi / lo),
-                          prev[2] or commit))
-            prev = None
-        else:
-            prev = (workers, wall, commit)
-    backfill = _commit_backfill(ec)
-    vers = [
-        _engine_version(c) if c
-        else backfill.get(str(i), {}).get("engine_tree")
-        for i, (_, _, _, c) in enumerate(pairs)
-    ]
-    return pairs, vers
-
-
-def _current_engine_median(ec: int, lo: int, hi: int, ordered) -> tuple:
-    """(median eff, n sessions) over the NEWEST engine version's paired
-    sessions, or (None, 0) when fewer than two pairs carry that version."""
-    pairs, vers = _cluster_pairs(ordered, lo, hi, ec)
-    cur = next((v for v in reversed(vers) if v), None)
-    if not cur:
-        return None, 0
-    effs = [e for (_, _, e, _), v in zip(pairs, vers) if v == cur]
-    if len(effs) < 2:
-        return None, 0
-    return _median(effs), len(effs)
-
-
-def _cluster_paired_md(ordered: list[tuple[int, float, str | None]],
-                       lo: int, hi: int, ec: int) -> str:
-    """Per-session paired-efficiency table for one cluster family — the same
-    drift discipline the local[N] section applies. `ordered` is the file-order
-    (workers, min wall, commit) per warm spark-submit session; the probe runs
-    each lo session immediately before its hi session, so consecutive lo→hi
-    rows share one host-weather window and their ratio is weather-paired.
-    Sessions are additionally grouped by the recorded code version: walls are
-    only comparable within a commit (the round-5 OCR vectorization moved the
-    lo wall ~35%), so a median over mixed-commit sessions blends different
-    binaries. Returns '' when fewer than two pairs exist (a single pair adds
-    nothing over the headline)."""
-    pairs, vers = _cluster_pairs(ordered, lo, hi, ec)
-    if len(pairs) < 2:
-        return ""
-    backfill = _commit_backfill(ec)
-    cells, notes = [], []
-    for i, ((_, _, _, c), v) in enumerate(zip(pairs, vers)):
-        if c:
-            cells.append(f"`{c}`")
-        elif v:
-            cells.append(f"`{v}`\\*")
-            notes.append(f"session {i}: {backfill[str(i)]['evidence']}")
-        else:
-            cells.append("—")
-    rows = "\n".join(
-        f"| {i} | {plo:.1f} | {phi:.1f} | {eff:.3f} | {cell} |"
-        for i, ((plo, phi, eff, _), cell) in enumerate(zip(pairs, cells))
-    )
-    note_md = ""
-    if notes:
-        note_md = ("\n\\* engine tree backfilled from git history "
-                   "(BENCH/cluster_commit_backfill.json): "
-                   + "; ".join(notes) + ".\n")
-    med = _median([e for _, _, e, _ in pairs])
-    best = max(e for _, _, e, _ in pairs)
-    # median over the newest measured ENGINE version alone, when it has ≥2
-    # sessions — the estimate that describes the CURRENT binary. Versions
-    # are the micro_lab_ocr_spark/ tree hash resolved from each recorded
-    # repo commit (so bench/doc/sample commits between sessions don't split
-    # a same-binary family), or backfilled from git history for rows that
-    # predate commit stamping.
-    cur_md = ""
-    cur = next((v for v in reversed(vers) if v), None)
-    cur_med, cur_n = _current_engine_median(ec, lo, hi, ordered)
-    if cur_med is not None:
-        cur_md = (f"; current-engine (tree `{cur}`) median: "
-                  f"**{cur_med:.3f}** over {cur_n} sessions")
-    return f"""
-Per-session pairing (each session's lo run immediately precedes its hi run,
-sharing one host-weather window; see the local[N] section for why the
-cross-session min pairing above and this paired view bracket the estimate —
-walls for the same binary swing up to 2× across host regimes on this VM.
-`version` is the code measured: the recorded repo commit, or the engine
-tree hash where backfilled — '—' rows have no recoverable version):
-
-| session | min lo wall (s) | min hi wall (s) | paired eff | version |
-|---|---|---|---|---|
-{rows}
-{note_md}
-* median paired efficiency: **{med:.3f}**; quietest-window session: **{best:.3f}**{cur_md}
-"""
-
-
-def _cluster_md() -> str:
-    """Render the TRUE multi-executor samples (BENCH/cluster_samples.jsonl,
-    written by BENCH/probes/cluster_run.py: a local standalone cluster —
-    separate master/worker/executor JVMs, localhost-TCP shuffle, each worker
-    taskset-pinned to its own 4-core block — submitted via spark-submit
-    --py-files at two cluster sizes). Empty string until samples exist."""
-    fams, docs, cals, sessions = _cluster_samples()
-    fam_md = []
-    for ec, walls in sorted(fams.items()):
-        if len(walls) < 2:
-            continue
-        lo, hi = min(walls), max(walls)
-        t_lo, t_hi = min(walls[lo]), min(walls[hi])
-        eff = (t_lo / t_hi) / (hi / lo)
-        rows = "\n".join(
-            f"| {w} executor(s) × {ec} cores | {min(ws):.2f} "
-            f"| {docs[(ec, w)] / min(ws):.1f} | {docs[(ec, w)] / min(ws) / w:.1f} "
-            f"| {ws} |"
-            for w, ws in sorted(walls.items())
-        )
-        cal_md = ""
-        if ec in cals:
-            c = cals[ec]
-            # calibrated family ceiling: core-seconds add, so the per-unit
-            # inflation bound is the inverse blend of the two calibration
-            # kernels at the job's measured work mix (~81% CPU-like / 19%
-            # bandwidth-like core-seconds — derived in the local[N]
-            # core-seconds-inflation section from the 1.30× measured
-            # inflation between the 1.11×/2.11× kernel bounds)
-            icpu, imbw = c["intcpu"]["eff"], c["membw"]["eff"]
-            ceiling = 1.0 / (0.81 / icpu + 0.19 / imbw) if icpu and imbw else None
-            ceil_md = ""
-            if ceiling:
-                ceil_md = (
-                    f" With the job's measured 81/19 cpu/bandwidth "
-                    f"core-second mix, the inverse-blend inflation bound "
-                    f"gives a calibrated hardware ceiling of ≈ "
-                    f"**{ceiling:.2f}** for {lo * ec}→{hi * ec} cores on "
-                    f"this box — the family's shortfall against ≥ 0.8 is "
-                    f"bounded by the shared memory subsystem the "
-                    f"calibration itself measures, which a real cluster's "
-                    f"per-node memory buses do not share."
-                )
-            cal_md = (f"\nSame-box calibration at this family's total-core "
-                      f"pair ({lo * ec}→{hi * ec} pinned cores): intcpu eff "
-                      f"{c['intcpu']['eff']}, membw eff {c['membw']['eff']}."
-                      f"{ceil_md}\n")
-        fam_md.append(f"""### {ec}-core executors: {lo} vs {hi}
-
-| cluster size | min wall (s) | docs/sec | docs/sec/executor | raw walls |
-|---|---|---|---|---|
-{rows}
-
-**Executor-scaling efficiency (T_{lo}exec/T_{hi}exec)/{hi // lo} =
-{eff:.3f}** (target ≥ 0.8).
-{_cluster_paired_md(sessions.get(ec, []), lo, hi, ec)}{cal_md}""")
-    if not fam_md:
-        return ""
-    return f"""
-## True multi-executor cluster — spark-submit at N vs 4N executors
-
-The north rule asks for the job \"run via spark-submit --py-files on a
-multi-executor cluster at two cluster sizes (N and 4N executors)\". The
-local[N] protocol above is the thread-level stand-in; this section is the
-criterion measured LITERALLY on a local Spark standalone cluster: separate
-master/worker/executor JVMs, localhost-TCP shuffle between them, one
-executor per worker, each worker `taskset`-pinned to its own disjoint
-physical-core block (the cgroup-faithful executor envelope), submitted
-with `spark-submit --py-files dist/micro_lab_ocr_spark.zip`
-(BENCH/probes/cluster_run.py; samples in BENCH/cluster_samples.jsonl).
-The executor core count is a free parameter of the protocol (the rule
-fixes the 1:4 executor RATIO); each measured family is reported. The
-4-core family's 4→16 total cores crosses this box's memory-bandwidth
-saturation knee (membw calibration, below) that a real cluster — adding
-memory channels with every node — does not have; the 2-core family stays
-below the knee and is the faithful reading of the PLAN's scaling.
-
-Weather discipline (gates choose only WHEN to sample; every sample taken
-is recorded): sessions launch through BENCH/probes/quiet_gate.py, which
-polls the same 8-worker membw kernel as the calibration and waits for two
-consecutive quiet readings; since the ninth session each LEVEL re-gates on
-the same criterion symmetrically (readings land in the row's `gate`
-field), because a mid-session regime change degrades only the
-bandwidth-hungry hi half — measured hi walls track the gate reading
-nearly linearly (~700 it/s → 93.4 s, ~505 → 118.1 s) while lo walls
-barely move (316 → 330 s) — so an asymmetric-weather pair reads the
-host, not the plan. Later sessions may also run the short, sensitive hi
-level first (SPARK_GRAFT_HI_FIRST=1) so the confirmed-quiet window is
-spent on the half that needs it; ordering does not change the estimator.
-
-{chr(10).join(fam_md)}"""
-
-
-def _cluster_family_effs() -> list[tuple[int, int, int, float]]:
-    """(exec_cores, lo_workers, hi_workers, eff) per measured true-cluster
-    executor-size family, from BENCH/cluster_samples.jsonl."""
-    fams, _, _, _ = _cluster_samples()
-    out = []
-    for ec, walls in sorted(fams.items()):
-        if len(walls) < 2:
-            continue
-        lo, hi = min(walls), max(walls)
-        eff = (min(walls[lo]) / min(walls[hi])) / (hi / lo)
-        out.append((ec, lo, hi, round(eff, 3)))
-    return out
-
-
-def _headline_md(local_eff: float, cal: dict, ceiling_eff: float) -> str:
-    """One summary block up top: every reading of the north-rule criterion."""
-    lines = []
-    _, _, _, sessions = _cluster_samples()
-    for ec, lo, hi, eff in _cluster_family_effs():
-        mark = "**MEETS the ≥ 0.8 target**" if eff >= 0.8 else "below target"
-        cur_med, cur_n = _current_engine_median(ec, lo, hi,
-                                                sessions.get(ec, []))
-        cur = ""
-        if cur_med is not None:
-            cmark = ("**MEETS the ≥ 0.8 target**" if cur_med >= 0.8
-                     else "below target")
-            cur = (f" Weather-paired median over the {cur_n} sessions that "
-                   f"measured the CURRENT engine: **{cur_med:.3f}** — "
-                   f"{cmark}.")
-        lines.append(
-            f"* TRUE standalone cluster, {lo}→{hi} executors × {ec} cores "
-            f"(spark-submit --py-files, per-executor JVM + pinned core "
-            f"block): efficiency **{eff:.3f}** — {mark}.{cur}"
-        )
-    of_ceiling = (f", = {local_eff / ceiling_eff:.2f}× the blended hardware "
-                  f"ceiling the same-run calibration admits for this box's "
-                  f"shared memory subsystem (intcpu {cal['intcpu']['eff']}, "
-                  f"membw {cal['membw']['eff']}; details below)"
-                  if ceiling_eff else "")
-    lines.append(
-        f"* local[N] thread-level stand-in (pinned): efficiency "
-        f"**{local_eff:.3f}**{of_ceiling}."
-    )
-    return ("**North-rule criterion readings** (throughput scaling "
-            "efficiency N→4N executors, target ≥ 0.8):\n\n"
-            + "\n".join(lines) + "\n")
-
-
-def _write_scaling_md(lo, hi, walls, docs, cal, reps_done, stage_tables=None,
-                      weathers=None, groups=None) -> None:
-    t_lo = min(walls[lo])
-    t_hi = min(walls[hi])
-    eff = (t_lo / t_hi) / (hi / lo)
-    stage_md, ceiling_md, ceiling_eff = _stage_sections(
-        lo, hi, t_lo, t_hi, stage_tables or {}, cal
-    )
-    core_md = _core_seconds_md(
-        lo, hi, t_lo, t_hi,
-        (stage_tables or {}).get(lo) or [], (stage_tables or {}).get(hi) or [], cal,
-    )
-    md = f"""# BENCH/BASELINE — scaling protocol results
-
-{_headline_md(eff, cal, ceiling_eff)}
-Same job — the PRODUCTION configuration a user submits (jobs/extract.py:
-checkpointed per-bucket extraction over the catalog-bucketed docs layout
-with co-partitioned media, parquet output + per-bucket lineage; all of
-text/html/table_html/image/pdf incl. the OCR grid path; media bytes never
-enter a shuffle) — over the same materialized fixture corpus ({docs} docs
-with media), two parallelism levels — the sandbox stand-in for N vs 4N
-executors (BASELINE.md protocol). Reps interleaved ({reps_done} done, 2
-timed passes per warm session after a warmup pass), min wall per level.
-
-| parallelism | wall (s) | docs/sec | docs/sec/core |
-|---|---|---|---|
-| local[{lo}] | {t_lo:.2f} | {docs / t_lo:.1f} | {docs / t_lo / lo:.2f} |
-| local[{hi}] | {t_hi:.2f} | {docs / t_hi:.1f} | {docs / t_hi / hi:.2f} |
-
-**Scaling efficiency (T_{lo}/T_{hi})/{hi // lo} = {eff:.3f}** (target ≥ 0.8);
-relative to this box's same-run pure-CPU ceiling: {eff / cal['intcpu']['eff']:.3f}.
-
-All raw walls — lo: {walls[lo]}, hi: {walls[hi]} ({reps_done} interleaved
-reps × 2 timed passes per level).
-{_weather_md(lo, hi, weathers)}
-{_paired_eff_md(lo, hi, groups or {})}
-
-## Per-stage decomposition (best pass per level, from the Spark event log)
-
-{stage_md}
-
-{core_md}
-## Blended hardware ceiling — is the measured mix ceiling reached?
-
-{ceiling_md}
-
-{_cluster_md()}
-## Cross-day host drift (observed under the UNPINNED r04/r05 protocol)
-
-Host facts that motivated the estimator discipline; the walls quoted are
-from the archived unpinned regime (scaling_samples_r05_unpinned.jsonl) and
-are not comparable to the pinned table above. Three controlled experiments
-on 2026-08-18/19, all on the same corpus:
-
-1. **Same code, different day:** the pre-fusion commit (950bdfe), which
-   measured 161–173 s at local[4] across 8 passes on its own (archived)
-   protocol day, re-measured **356.1 s** at local[4] via a pinned git
-   worktree (BENCH/probes/ab_commit.py). Identical bytes, 2.2× the wall:
-   the host's sustained baseline had drifted, even though 2-second weather
-   probes read "quiet" at session boundaries.
-2. **Different code, same day:** HEAD measured 292.9–369.4 s at local[4]
-   in four sessions interleaved around the pre-fusion run — parity. The
-   round-4 grid-fusion commits did NOT regress the low level; their paired
-   A/Bs stand.
-3. **Alternative level pair probed:** one-shot local[2]→local[8] on the
-   same day read (398.5/241.1)/4 = 0.41, with the decode-kernel stage's
-   executor core-seconds inflating 420 → 1282 from 2 to 8 workers — the
-   per-worker memory throughput degradation binds at EVERY level pair on
-   this box, so switching pairs does not rescue the criterion.
-
-Consequence: lo-min and hi-min taken on different days measure different
-machines, so the headline cross-rep ratio under-reads the plan (the hi min
-survives from a faster host-day than any lo sample can now reach). The
-same-rep paired MEDIAN above, the slot-packing table, and the
-measured-vs-blended-ceiling ratio are the drift-robust readings; the two
-cleanest same-rep pairs read 0.785–0.793.
-
-## CPU pinning (round-5 protocol change)
-
-Each level runs under `sched_setaffinity` to exactly its nominal cores
-(local[{lo}] → cpus 0-{lo - 1}, local[{hi}] → cpus 0-{hi - 1}); the JVM and
-every forked Python worker inherit the mask, and the calibration pools run
-under the same mask. Rationale: a mapInPandas task occupies up to three
-threads (JVM feeder, JVM output reader, Python worker), so an UNPINNED
-local[{lo}] borrows 2-3× its nominal physical cores while the {hi}-level —
-already near the box's core count — cannot. Measured on the isolated decode
-stage (BENCH/probes/stage_prof.py): 4-core wall 9.9 s unpinned vs 14.6 s
-pinned (47% borrowed CPU), and at 16 cores pinning removed both the apparent
-1.15× Python CPU inflation (31.0→32.6 core-s, flat) and 20 s of worker
-fetch-starvation. A real N→4N *executor* cluster is cgroup-capped at its
-nominal cores at EVERY size, so the pinned measurement is the faithful
-stand-in and the unpinned regime (all r01-r04 archives,
-scaling_samples_r05_unpinned.jsonl) systematically UNDER-reads scaling
-efficiency for Python-kernel stages. `SPARK_GRAFT_PIN=0` restores the old
-regime for A/B.
-
-## Why levels {lo}→{hi} (and the hardware calibration)
-
-This single-VM sandbox shares one memory subsystem across all threads. The
-calibration below (run in the same protocol execution) shows pure-CPU work
-scaling near-ideally while memory-bandwidth-bound work STOPS scaling beyond
-~8–16 concurrent streams — in the round-5 quiet-window calibration the
-LLC-busting stream is NEGATIVE-scaling (absolute throughput at 16 workers
-below 4). Real N→4N *executor* clusters add memory channels (and disks, and
-NICs) with every node, so a level pair the box can physically host is the
-faithful stand-in; {lo}→{hi} keeps the 4× core ratio of the north rule, and
-the drift section's local[2]→local[8] probe shows no alternative pair
-escapes the per-worker memory degradation — the pair is kept for
-comparability with every archived sample.
-
-| kernel | eff {lo}→{hi} | rates (iters/s per level) |
-|---|---|---|
-| integer burn (cache-resident) | {cal['intcpu']['eff']} | {cal['intcpu']['rates']} |
-| numpy stream (LLC-busting)    | {cal['membw']['eff']} | {cal['membw']['rates']} |
-
-## Measurement methodology and what binds
-
-Walls on this host swing up to 2× between byte-identical runs (event-log
-decomposition of one 16-core pass: executor run 997 core-s of which only
-481 core-s JVM CPU + ~290 core-s Python-kernel CPU; identical back-to-back
-passes measured 114→204 s). The protocol therefore interleaves {reps_done}
-reps × 2 timed passes per warm session and reports min wall per level — the
-min converges on the quiet-box wall that a dedicated cluster node would
-show. Raw samples are all recorded above and in
-BENCH/scaling_samples.jsonl.
-
-Engineering applied to the production path for this criterion (each
-measured): batched bucket processing (one plan + one dynamic-partition
-overwrite write per batch — bucket-at-a-time paid ~69 s/pass of driver plan
-compile, identical at every level), lineage metrics via Observation riding
-the write (was: a second full decompress pass over the output), media
-co-partitioned with the docs layout (was: every bucket re-scanned the whole
-media table), scan-split floor 8×cores (Python-kernel stages were
-wave-quantized), Arrow batches capped at 512 rows. Shuffle partitions scale
-with core count (2×cores). The reference's ~5 s/page is external-API
-latency; this engine's local kernels make scan + Arrow + shuffle + sink the
-measured costs — the components the scaling criterion is actually about.
-"""
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
-
-
-def render_scaling_from_samples() -> None:
-    """Re-render BENCH/BASELINE.md from BENCH/scaling_samples.jsonl without
-    re-running the job (re-runs only the ~30 s hardware calibration). Used
-    after a report-template change or a resumed protocol."""
-    levels = os.environ.get("SPARK_GRAFT_SCALING_LEVELS", "4,16")
-    lo, hi = (int(x) for x in levels.split(","))
-    walls: dict[int, list[float]] = {lo: [], hi: []}
-    groups: dict[int, list] = {lo: [], hi: []}  # (rep id, sample min wall)
-    stage_tables: dict[int, list] = {lo: [], hi: []}
-    weathers: dict[int, list] = {lo: [], hi: []}
-    best_wall = {lo: float("inf"), hi: float("inf")}
-    docs, reps_seen = 0, 0
-    cal = None
-    with open(os.path.join(REPO, "BENCH", "scaling_samples.jsonl")) as f:
-        for line in f:
-            r = json.loads(line)
-            if "calibration" in r:  # cal record persisted by run_scaling
-                cal = r["calibration"]
-                continue
-            n = r["cores"]
-            if n not in walls:
-                continue
-            walls[n].extend(r.get("walls", [r["wall"]]))
-            groups[n].append((r.get("rep", 0), min(r.get("walls", [r["wall"]]))))
-            weathers[n].append({"pre": r.get("weather_pre"), "post": r.get("weather")})
-            docs = r["docs"]
-            reps_seen = max(reps_seen, r.get("rep", 0) + 1)
-            if r.get("stages") and r["wall"] < best_wall[n]:
-                best_wall[n] = r["wall"]
-                stage_tables[n] = r["stages"]
-    if cal is None:
-        # no persisted calibration (pre-round-5 samples file): measure one —
-        # NEVER do this while a scaling protocol is running (the pools would
-        # pollute its in-flight pass)
-        cal = _calibrate((lo, hi))
-    _write_scaling_md(lo, hi, walls, docs, cal, reps_seen, stage_tables,
-                      weathers, groups)
-    eff = (min(walls[lo]) / min(walls[hi])) / (hi / lo)
-    print(json.dumps({"scaling_efficiency": round(eff, 3),
-                      "t_lo": min(walls[lo]), "t_hi": min(walls[hi]),
-                      "samples_lo": len(walls[lo]), "samples_hi": len(walls[hi]),
-                      "calibration": cal}))
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--single-flagship":
         print(json.dumps(run_suite(int(sys.argv[2]), SF_DIR, include_queries=False)))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--single-scaling":
-        print(json.dumps(run_scaling_single(int(sys.argv[2]))))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
-        run_scaling(SF_DIR)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--render-scaling":
-        render_scaling_from_samples()
     else:
         print(json.dumps(run_suite(CPUS, SF_DIR)))

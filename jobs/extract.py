@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """spark-submit entry point for the extraction pipeline (SURVEY §7.4).
 
+    scripts/package.sh   # builds dist/micro_lab_ocr_spark.zip
     spark-submit --py-files dist/micro_lab_ocr_spark.zip jobs/extract.py \
         --docs <parquet/iceberg path> --media <parquet path> \
         --output <dir> --checkpoint <dir> [--buckets 512] [--resume]
@@ -23,7 +24,8 @@ sys.path.insert(0, _REPO)
 # Python WORKERS spawn with PYTHONPATH from the environment, not the driver's
 # sys.path — without this, running the job from any other cwd fails inside
 # mapInPandas with ModuleNotFoundError. On a real cluster `spark-submit
-# --py-files dist/micro_lab_ocr_spark.zip` ships the package instead.
+# --py-files dist/micro_lab_ocr_spark.zip` (built by scripts/package.sh)
+# ships the package instead.
 os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 

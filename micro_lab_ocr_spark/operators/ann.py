@@ -1,7 +1,8 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-* brute-force cosine top-k — the exact baseline: broadcast the (small) query
-  set against the corpus; one narrow pass + per-query top-k via window.
+* brute-force cosine top-k — the exact baseline: the (small) query matrix
+  rides in the kernel closure over the corpus; one narrow pass + per-query
+  top-k via window.
 * LSH-bucketed variant (random hyperplane signs) — the scale path: corpus and
   queries hash to sign-pattern buckets; only same-bucket candidates are
   scored. Probes > 1 multiply recall by scoring neighboring buckets.
@@ -21,45 +22,14 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _cosine_np(pairs: DataFrame) -> DataFrame:
-    """Score (query_id, corpus_id, qvec, cvec) pairs with a vectorized numpy
-    kernel (mapInPandas): row-wise einsum dot products in float64, rounded to
-    4 dp — Catalyst higher-order-function dots are ~10× slower per pair.
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            q = np.stack(pdf["qvec"].to_numpy()).astype(np.float64)
-            c = np.stack(pdf["cvec"].to_numpy()).astype(np.float64)
-            dots = np.einsum("ij,ij->i", q, c)
-            cos = dots / (np.sqrt(np.einsum("ij,ij->i", q, q))
-                          * np.sqrt(np.einsum("ij,ij->i", c, c)))
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "corpus_id": pdf["corpus_id"],
-                    "cosine": np.round(cos, 4),
-                }
-            )
-
-    return pairs.mapInPandas(score, "query_id long, corpus_id long, cosine double")
-
-
 def _cosine_np_closure(pairs: DataFrame, qids, qmat) -> DataFrame:
     """Score (query_id, corpus_id, cvec) pairs against a bounded query
     matrix carried in the kernel closure — the qvec side never crosses the
-    Arrow boundary per pair (half the pair bytes of :func:`_cosine_np`, no
-    query-vector broadcast join). Per-row einsum with identical operation
-    order to ``_cosine_np``, so rounded cosines are bit-identical.
-    ``qids`` must be sorted; rows whose query_id is unknown never occur
-    (candidates derive from the same query set)."""
+    Arrow boundary per pair (half the pair bytes of shipping both vectors,
+    no query-vector broadcast join). Row-wise einsum dot products in
+    float64, rounded to 4 dp — Catalyst higher-order-function dots are ~10×
+    slower per pair. ``qids`` must be sorted; rows whose query_id is unknown
+    never occur (candidates derive from the same query set)."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -110,7 +80,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_closure_queries: int = 131072,
 ) -> DataFrame:
     """Exact cosine top-k. queries is expected to be small (same bounded-side
     assumption as a broadcast dimension); the query matrix rides into a
@@ -122,22 +91,12 @@ def brute_force_topk(
     64 s at 20k×400; this form moves each vector once). The final window
     ranks the candidate union — exact, because every true global top-k row
     is in its own batch's top-k under the same (cosine DESC, corpus_id ASC)
-    total order. A query side above ``max_closure_queries`` falls back to
-    the pair-join shape rather than materializing an unbounded matrix."""
+    total order. Zero-norm vectors score NaN and are dropped with the
+    self-pairs (only finite cosines are ranked); an empty query side yields
+    an empty result."""
     import numpy as np
 
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qvec")
-        )
-        .limit(max_closure_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_closure_queries:
-        return _brute_force_topk_pairs(corpus, queries, k, id_col, vec_col)
-    q_rows.sort(key=lambda r: r["query_id"])
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    qmat = np.array([r["qvec"] for r in q_rows], dtype=np.float64)
+    qids, qmat = _collect_query_matrix(queries, id_col, vec_col)
     # STORED width on the wire: the kernel's astype(float64) of a float32
     # value is exact, so rounding is identical at half the Arrow bytes
     c = corpus.select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec"))
@@ -172,29 +131,6 @@ def brute_force_topk(
             )
 
     scored = c.mapInPandas(kernel, "query_id long, corpus_id long, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def _brute_force_topk_pairs(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Pair-join brute force — fallback when the query side is too large to
-    carry as a kernel closure (still exact, costs a |corpus|·|Q| Arrow pass)."""
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"), _as_double(F.col(vec_col)).alias("cvec")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qvec")
-    )
-    pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("corpus_id")).select(
-        "query_id", "corpus_id", "qvec", "cvec"
-    )
-    scored = _cosine_np(pairs)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 

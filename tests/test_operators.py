@@ -120,6 +120,36 @@ def test_simhash_kernel_matches_catalyst(spark):
         assert TH.simhash64_py(t) == catalyst[i], f"simhash mismatch on {t!r}"
 
 
+def test_fingerprint_kernel_matches_catalyst(spark):
+    """dedup_exact_q's Python fingerprint kernel (str.lower + md5) must equal
+    the Catalyst doc_fingerprint on characters whose lowercase changes
+    length or maps into ASCII (U+0130 İ, U+212A Kelvin), on ß, and on mixed
+    Hangul/ASCII — otherwise dedup groups drift from the SQL oracle."""
+    from micro_lab_ocr_spark.functions import text as T
+    from micro_lab_ocr_spark.kernels import texthash as TH
+
+    texts = PARITY_TEXTS + [
+        "İSTANBUL İzmir DİYARBAKIR",
+        "\u212a \u212aelvin 5\u212a",
+        "Straße STRASSE ß",
+        "한국어Mixed문서 ABC-123 스크립트x",
+        "İ\u212aß한",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    catalyst = {
+        r["doc_id"]: r["fp"]
+        for r in df.select("doc_id", T.doc_fingerprint(F.col("text")).alias("fp")).collect()
+    }
+    kernel = {
+        r["doc_id"]: r["fingerprint"]
+        for r in df.mapInPandas(
+            TH.make_fingerprint_kernel("doc_id"), "doc_id long, fingerprint string"
+        ).collect()
+    }
+    for i, t in enumerate(texts):
+        assert kernel[i] == catalyst[i], f"fingerprint mismatch on {t!r}"
+
+
 def test_minhash_kernel_matches_catalyst(spark):
     """Shingle sets + band keys from the numpy kernel == the Catalyst
     minhash_signature/lsh_bands construction."""
@@ -192,6 +222,17 @@ def test_ann_lsh_recall_vs_brute(spark):
     for r in brute.collect():
         per_q.setdefault(r["query_id"], []).append(r["rank"])
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per_q.values())
+
+
+def test_brute_force_topk_empty_queries(spark):
+    """An empty query side yields an empty ranked result, not a kernel
+    crash in every task."""
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(20)], "vec_id long, embedding array<float>"
+    )
+    out = ann.brute_force_topk(emb, emb.where(F.lit(False)), k=5)
+    assert out.columns == ["query_id", "corpus_id", "cosine", "rank"]
+    assert out.collect() == []
 
 
 def test_embedding_cosine_pairs_block_bound(spark):

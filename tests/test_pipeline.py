@@ -336,27 +336,6 @@ def test_jpeg_image_spans_decode_end_to_end(spark):
                            "media_ref": "m://j/2", "offset": 2}
 
 
-def test_slim_pagetext_equivalent(spark, corpus, engine_result, monkeypatch):
-    """The default pre-concats record fields before the page_text
-    collect_list (slimming the sort/agg payload — the scaling protocol's
-    binding stage). The unslimmed mode (SPARK_GRAFT_SLIM_PAGETEXT=0) must be
-    byte-identical: the sort key (group_id, strain_rank, row) is unique per
-    page, so the record fields in the struct tail never act as tie-breakers."""
-    monkeypatch.setenv("SPARK_GRAFT_SLIM_PAGETEXT", "0")
-    docs, media, _ = corpus
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in docs],
-        DOCS_SCHEMA,
-    )
-    media_df = spark.createDataFrame(
-        [(m["media_ref"], bytearray(m["content"])) for m in media], MEDIA_SCHEMA
-    )
-    slim = {r["doc_id"]: [s.asDict() for s in r["spans"]]
-            for r in px.normalize_spans(docs_df, media_df).collect()}
-    assert slim == engine_result
-
-
 def test_salted_reassembly_equivalent(spark, corpus, engine_result):
     """The reassembly sort key (``offset``, the struct's first field) is
     unique per doc after the branch union — each source span yields at most
@@ -380,51 +359,3 @@ def test_salted_reassembly_equivalent(spark, corpus, engine_result):
               for r in px.normalize_spans(docs_df, media_df, salt_buckets=4).collect()}
     assert salted == engine_result
 
-
-def test_kernel_profiler_transparent(tmp_path):
-    """The env-gated kernel profiler (SPARK_GRAFT_KERNEL_PROF) must be a
-    pure observer: identical output frames to the unprofiled path, one
-    attribution line per task whose fetch+decode time splits are populated.
-    Driven outside Spark — mapInPandas semantics are just 'generator of
-    pandas frames in, generator out'."""
-    import json
-    import os
-
-    import pandas as pd
-
-    from micro_lab_ocr_spark.kernels import ocr as ok
-
-    raster = ok.render_lines_image(["AB 12", "cd"])
-    frames = [
-        pd.DataFrame({
-            "doc_id": ["d1", "d2"],
-            "offset": [0, 1],
-            "media_ref": ["m1", "m2"],
-            "span_text": ["", ""],
-            "content": [raster, b"MLIMGgarbage"],
-        })
-    ]
-    plain = list(px._ocr_grids(iter([f.copy() for f in frames])))
-
-    os.environ["SPARK_GRAFT_KERNEL_PROF"] = str(tmp_path)
-    try:
-        profiled = list(px._ocr_grids(iter([f.copy() for f in frames])))
-    finally:
-        del os.environ["SPARK_GRAFT_KERNEL_PROF"]
-
-    assert len(plain) == len(profiled) == 1
-    pd.testing.assert_frame_equal(plain[0], profiled[0])
-    assert plain[0]["ok"].tolist() == [True, False]  # corrupt blob -> pass-through
-
-    lines = []
-    for p in tmp_path.glob("*.jsonl"):
-        lines += [json.loads(ln) for ln in p.read_text().splitlines()]
-    assert len(lines) == 1
-    rec = lines[0]
-    assert rec["rows"] == 2
-    assert rec["wall"] >= rec["decode"] >= 0
-    # fetch/decode/emit are DISJOINT splits of the task wall (fetch happens
-    # inside the body's next(it) and is subtracted out of decode), so their
-    # sum can never exceed the wall
-    assert rec["fetch"] + rec["decode"] + rec["emit"] <= rec["wall"] + 0.01
-    assert set(rec) >= {"pid", "rows", "wall", "cpu", "fetch", "decode", "emit"}

@@ -85,7 +85,7 @@ def test_extract_page_lines_fused_single_pass(spark):
     (records→page_text groupBy ⋈ pages groupBy) read the exchange twice and
     ran the cells→rows aggregate twice (654 MB shuffle read vs 338 MB
     written on the scaling corpus, in the stage that caps scaling
-    efficiency — BENCH/BASELINE.md)."""
+    efficiency)."""
     from micro_lab_ocr_spark.operators import grid_extract
     from micro_lab_ocr_spark.sources import fixtures
     import random
