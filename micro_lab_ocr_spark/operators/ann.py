@@ -29,7 +29,9 @@ def _cosine_np_closure(pairs: DataFrame, qids, qmat) -> DataFrame:
     no query-vector broadcast join). Row-wise einsum dot products in
     float64, rounded to 4 dp — Catalyst higher-order-function dots are ~10×
     slower per pair. ``qids`` must be sorted; rows whose query_id is unknown
-    never occur (candidates derive from the same query set)."""
+    never occur (candidates derive from the same query set). Same NaN policy
+    as :func:`brute_force_topk`: a pair with a zero-norm side scores NaN and
+    is dropped, so only finite cosines are ranked."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -44,13 +46,15 @@ def _cosine_np_closure(pairs: DataFrame, qids, qmat) -> DataFrame:
             q = qmat[idx]
             c = np.stack(pdf["cvec"].to_numpy()).astype(np.float64)
             dots = np.einsum("ij,ij->i", q, c)
-            cos = dots / (np.sqrt(np.einsum("ij,ij->i", q, q))
-                          * np.sqrt(np.einsum("ij,ij->i", c, c)))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.round(dots / (np.sqrt(np.einsum("ij,ij->i", q, q))
+                                       * np.sqrt(np.einsum("ij,ij->i", c, c))), 4)
+            keep = np.isfinite(cos)
             yield pd.DataFrame(
                 {
-                    "query_id": pdf["query_id"],
-                    "corpus_id": pdf["corpus_id"],
-                    "cosine": np.round(cos, 4),
+                    "query_id": pdf["query_id"].to_numpy()[keep],
+                    "corpus_id": pdf["corpus_id"].to_numpy()[keep],
+                    "cosine": cos[keep],
                 }
             )
 
@@ -114,7 +118,8 @@ def brute_force_topk(
             cids = pdf["corpus_id"].to_numpy()[order]
             cm = np.stack(pdf["cvec"].to_numpy()[order]).astype(np.float64)
             cnorm = np.sqrt(np.einsum("ij,ij->i", cm, cm))
-            cos = np.round((cm @ qmat.T) / (cnorm[:, None] * qnorm[None, :]), 4)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.round((cm @ qmat.T) / (cnorm[:, None] * qnorm[None, :]), 4)
             cos[cids[:, None] == qids[None, :]] = -np.inf  # self-pairs excluded
             kk = min(k, len(cids))
             # rows pre-sorted by corpus_id ⇒ stable argsort on -cos realizes
@@ -429,8 +434,10 @@ def _cells_np(df: DataFrame, id_out: str, cent_ids, cent_mat, n_probe: int,
                 continue
             v = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
             vnorm = np.sqrt(np.einsum("ij,ij->i", v, v))
-            cos = np.round((v @ cent_mat.T) / (vnorm[:, None] * cnorm[None, :]), 4)
-            # stable argsort on -cos: rounded ties keep centroid-id order
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.round((v @ cent_mat.T) / (vnorm[:, None] * cnorm[None, :]), 4)
+            # stable argsort on -cos: rounded ties keep centroid-id order, and
+            # NaN (a zero-norm side) sorts last
             top = np.argsort(-cos, axis=1, kind="stable")[:, :n_probe]
             ids = np.repeat(pdf["id"].to_numpy(), top.shape[1])
             cells = cids[top].reshape(-1)

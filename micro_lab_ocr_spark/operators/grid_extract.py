@@ -216,10 +216,6 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
     # groupBy-branches-joined-back shape measured ~6× read amplification on
     # the cells exchange before the window rewrite).
     wp = Window.partitionBy(*PAGE)
-    wfull = (
-        Window.partitionBy(*PAGE).orderBy("row")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
     wcum = (
         Window.partitionBy(*PAGE).orderBy("row")
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -257,25 +253,31 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
             F.filter(F.map_entries(m), lambda e: pred(e["value"])), lambda e: e["key"]
         )
 
+    # Window functions that do not read each other's output are added in ONE
+    # withColumns: each withColumn is its own Project, and a Project between
+    # two Windows blocks CollapseWindow, so a withColumn per window function
+    # plans one Window operator (and its generated classes) per column.
     r = (
-        rows.withColumn("hdr1", F.min(F.when(
-            (F.col("row") < 5) & _contains_any(F.col("row_text_u"), _HEADER_KEYWORDS),
-            F.col("row"))).over(wp))
-        .withColumn("cand", F.min(F.when(
-            (F.col("row") < 15) & _contains_any(F.col("row_text_u"), _STRAIN_KEYWORDS),
-            F.struct("row", "has_cfu"))).over(wp))
-        # F19 pass 1: first row (<5) with ≥4 date cells; pass 2: first date cell
-        .withColumn("pass1", F.min(F.when(
-            (F.col("row") < 5) & (F.size("date_cells") >= 4),
-            F.struct("row", "date_cells"))).over(wp))
-        .withColumn("pass2", F.min(F.when(
-            (F.col("row") < 5) & (F.size("date_cells") >= 1),
-            F.struct(
-                "row",
-                F.element_at("date_cells", 1).getField("col").alias("col"),
-                F.element_at("date_cells", 1).getField("date_m").alias("m"),
-                F.element_at("date_cells", 1).getField("date_d").alias("d"),
-            ))).over(wp))
+        rows.withColumns({
+            "hdr1": F.min(F.when(
+                (F.col("row") < 5) & _contains_any(F.col("row_text_u"), _HEADER_KEYWORDS),
+                F.col("row"))).over(wp),
+            "cand": F.min(F.when(
+                (F.col("row") < 15) & _contains_any(F.col("row_text_u"), _STRAIN_KEYWORDS),
+                F.struct("row", "has_cfu"))).over(wp),
+            # F19 pass 1: first row (<5) with ≥4 date cells; pass 2: first date cell
+            "pass1": F.min(F.when(
+                (F.col("row") < 5) & (F.size("date_cells") >= 4),
+                F.struct("row", "date_cells"))).over(wp),
+            "pass2": F.min(F.when(
+                (F.col("row") < 5) & (F.size("date_cells") >= 1),
+                F.struct(
+                    "row",
+                    F.element_at("date_cells", 1).getField("col").alias("col"),
+                    F.element_at("date_cells", 1).getField("date_m").alias("m"),
+                    F.element_at("date_cells", 1).getField("date_d").alias("d"),
+                ))).over(wp),
+        })
         .withColumn(
             "header_row",
             F.when(F.col("hdr1").isNotNull(), F.col("hdr1")).otherwise(
@@ -317,28 +319,32 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
     # dominant interpreted cost of the binding stage, measured per stage
     # from the event log). Each classifier now evaluates on the one
     # row WHERE row == header_eff — when() short-circuits everywhere else —
-    # and first(ignorenulls) broadcasts the resulting column INDEX over the
-    # page frame, so the header map itself never rides the window payload.
-    # Value-identical: only the header row can be non-null, so ignorenulls
-    # picks exactly the value the hdr_map projection used to compute, and a
-    # classifier that finds no column stays null through the same path.
+    # and a page max broadcasts the resulting column INDEX over the page, so
+    # the header map itself never rides the window payload. Value-identical:
+    # only the header row can be non-null, so max picks exactly the value the
+    # hdr_map projection used to compute, and a classifier that finds no
+    # column stays null through the same path. max, not first(ignorenulls):
+    # Spark gives each first(ignorenulls) its own nth_value frame, keyed in a
+    # hash map by its input — here lambdas whose variable names are fresh on
+    # every plan build — so eight of them in one Window come out in a
+    # different slot order per build and their projections recompile on
+    # every pass (7–9 classes per warm pass, counted with CodegenMetrics);
+    # eight max aggregates share one frame.
     def _page_col(expr: Column) -> Column:
-        return F.first(
-            F.when(F.col("row") == F.col("header_eff"), expr), ignorenulls=True
-        ).over(wfull)
+        return F.max(F.when(F.col("row") == F.col("header_eff"), expr)).over(wp)
 
     rm = F.col("row_map")
-    r = (
-        r.withColumn("strain_col", _page_col(F.array_max(_cols_where(rm, _is_strain_cell))))
-        .withColumn("spec_col0", _page_col(F.array_max(_cols_where(rm, _is_spec_cell))))
-        .withColumn("cfu0_k", _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 0))))
-        .withColumn("cfu7_k", _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 7))))
-        .withColumn("cfu14_k", _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 14))))
-        .withColumn("cfu28_k", _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 28))))
-        .withColumn("judg_k", _page_col(F.array_min(
-            _cols_where(rm, lambda v: _is_judg_cell(v) & ~_is_final_cell(v)))))
-        .withColumn("final_k", _page_col(F.array_max(_cols_where(rm, _is_final_cell))))
-    )
+    r = r.withColumns({
+        "strain_col": _page_col(F.array_max(_cols_where(rm, _is_strain_cell))),
+        "spec_col0": _page_col(F.array_max(_cols_where(rm, _is_spec_cell))),
+        "cfu0_k": _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 0))),
+        "cfu7_k": _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 7))),
+        "cfu14_k": _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 14))),
+        "cfu28_k": _page_col(F.array_max(_cols_where(rm, lambda v: _cfu_class(v) == 28))),
+        "judg_k": _page_col(F.array_min(
+            _cols_where(rm, lambda v: _is_judg_cell(v) & ~_is_final_cell(v)))),
+        "final_k": _page_col(F.array_max(_cols_where(rm, _is_final_cell))),
+    })
     # A7 — Specification inference by value-pattern vote over the first 5
     # rows (after the header) that HAVE the strain_col+1 column: the rank
     # among qualifying rows is a cumulative count, the vote a page window sum.
@@ -421,11 +427,12 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
             "p_ext",
             F.when(F.col("is_data") & (F.col("bulk") != ""), C.extract_prescription_number(F.col("bulk"))),
         )
-        .withColumn("test_number", F.coalesce(F.last(F.nullif("t_ext", F.lit("")), True).over(w), F.lit("")))
-        .withColumn(
-            "prescription_number",
-            F.coalesce(F.last(F.nullif("p_ext", F.lit("")), True).over(w), F.lit("")),
-        )
+        .withColumns({
+            "test_number": F.coalesce(
+                F.last(F.nullif("t_ext", F.lit("")), True).over(w), F.lit("")),
+            "prescription_number": F.coalesce(
+                F.last(F.nullif("p_ext", F.lit("")), True).over(w), F.lit("")),
+        })
         .withColumn("strain", F.when(F.col("is_data"), C.normalize_strain(F.col("strain_raw"))))
         # strain cell must exist (reference: col in row) and normalize non-empty
         .withColumn(

@@ -72,6 +72,15 @@ def get_spark(
         # the fallback streams groups off one sort the partitioning already
         # paid for).
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
+        # generated-class cache sized to the plans, not the default 100: one
+        # media_job pass (24-doc checkpointed extraction) needs 137–184
+        # distinct generated classes, mostly grid_extract's Window operators
+        # and their projections, and a query_ops pass ~106. At 100 the LRU
+        # cache thrashed and Janino recompiled ~265 classes per warm
+        # media_job pass (measured at local[4]: 28–35 core-s per warm pass
+        # at 100, 15–21 at 1024, peak RSS not higher). 1024 leaves room for
+        # a multi-bucket job's plans. Static conf: builder only.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # --- scans -------------------------------------------------------
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # floor the scan split count at 8×cores: on a 100 TB corpus the

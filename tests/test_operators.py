@@ -235,6 +235,30 @@ def test_brute_force_topk_empty_queries(spark):
     assert out.collect() == []
 
 
+def test_ann_kernels_drop_zero_norm_vectors(spark):
+    """One NaN policy across the ANN kernels: a zero-norm vector has no
+    cosine, so brute force, sign-LSH and IVF all return no row for it as a
+    query and never rank it as a neighbour (no null or NaN cosine)."""
+    import math
+    import random
+
+    rng = random.Random(23)
+    rows = [(0, [0.0] * 8)] + [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(1, 41)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
+    queries = emb.where(F.col("vec_id").isin(0, 1, 2))
+    results = {
+        "brute": ann.brute_force_topk(emb, queries, k=3),
+        "lsh": ann.lsh_topk(emb, queries, dim=8, k=3, n_planes=2, n_tables=4),
+        "ivf": ann.ivf_topk(emb, queries, k=3, centroid_stride=20, n_probe=2),
+    }
+    for name, df in results.items():
+        got = df.collect()
+        assert got, f"{name}: no rows for the non-zero queries"
+        assert all(r["query_id"] != 0 and r["corpus_id"] != 0 for r in got), name
+        assert all(r["cosine"] is not None and not math.isnan(r["cosine"]) for r in got), name
+    assert sorted(r["query_id"] for r in results["brute"].collect()) == [1, 1, 1, 2, 2, 2]
+
+
 def test_embedding_cosine_pairs_block_bound(spark):
     """Block sizing is enforced: B derives from n/max_block_rows so packed
     rows stay bounded, an explicit undersized n_blocks raises loudly (not an

@@ -6,7 +6,8 @@ must actually appear in the plan — pinned here so regressions are loud.
 * dimension joins broadcast (BroadcastHashJoin),
 * the grid-extraction DAG reuses ONE repartition exchange (ReusedExchange),
 * no row-at-a-time Python UDFs anywhere (BatchEvalPython absent),
-* cleaner banks stay inside WholeStageCodegen.
+* cleaner banks stay inside WholeStageCodegen,
+* a warm pass of the extraction plan compiles no generated class.
 """
 
 from __future__ import annotations
@@ -106,6 +107,10 @@ def test_extract_page_lines_fused_single_pass(spark):
     # exactly ONE cells→rows aggregate pair (partial+final ObjectHashAggregate
     # on (page, row)) and one final page aggregate — no duplicated rollup
     assert plan.count("ObjectHashAggregate") <= 4, "duplicated rollup aggregate"
+    # one Window operator per dependency level of the enrichment: window
+    # functions that do not read each other share a withColumns (18 Windows
+    # when every window column had its own withColumn)
+    assert plan.count("Window [") == 7, "window ladder regrew"
 
 
 def test_ngram_jaccard_is_hash_join(spark):
@@ -259,3 +264,35 @@ def test_image_kernel_evaluates_once(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan
+
+
+def test_warm_pass_compiles_nothing(spark):
+    """A second pass of the extraction plan must find every generated class
+    in Spark's codegen cache: one pass needs more classes than the default
+    cache holds (100), which made every warm pass recompile hundreds of
+    classes with Janino. It also fails when two builds of the same plan
+    generate different code (several first(ignorenulls) window functions in
+    one Window operator did). Counted with CodegenMetrics around the warm
+    pass."""
+    from micro_lab_ocr_spark.pipeline.extract import normalize_spans
+    from micro_lab_ocr_spark.sources import fixtures
+
+    docs, media, _ = fixtures.generate_corpus(n_docs=12, seed=5)
+
+    def one_pass():
+        docs_df = spark.createDataFrame(
+            [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                            for s in d["spans"]]) for d in docs],
+            "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+        )
+        media_df = spark.createDataFrame(
+            [(m["media_ref"], bytearray(m["content"])) for m in media],
+            "media_ref string, content binary",
+        )
+        normalize_spans(docs_df, media_df).write.format("noop").mode("overwrite").save()
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before == 0, "warm pass recompiled generated classes"
