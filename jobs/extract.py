@@ -4,12 +4,14 @@
     scripts/package.sh   # builds dist/micro_lab_ocr_spark.zip
     spark-submit --py-files dist/micro_lab_ocr_spark.zip jobs/extract.py \
         --docs <parquet/iceberg path> --media <parquet path> \
-        --output <dir> --checkpoint <dir> [--buckets 512] [--resume]
+        --output <dir> --checkpoint <dir> [--buckets 512] [--batch-size 1] [--resume]
 
 Runs the full interleaved extraction with partition-granular checkpoint /
-lineage; a rerun with --resume skips DONE buckets. On a cluster the same file
-is submitted unchanged — master/cores come from spark-submit, and bucket
-count should be sized ≈ corpus_bytes / (executor_mem / 4).
+lineage; a rerun with --resume skips DONE buckets. Buckets run in batches of
+--batch-size (one plan and one write each, four batches in flight): a batch
+of one keeps crash re-work to one bucket, a larger one builds fewer plans.
+On a cluster the same file is submitted unchanged — master/cores come from
+spark-submit, and bucket count should be sized ≈ corpus_bytes / (executor_mem / 4).
 """
 
 from __future__ import annotations
@@ -48,14 +50,10 @@ def main() -> None:
                          "(bucketed by OWNING doc_id): prune the media scan per "
                          "bucket instead of re-reading the whole table N times")
     ap.add_argument("--batch-size", type=int, default=1,
-                    help="process buckets in batches of N: one plan + one "
-                         "dynamic-partition-overwrite write per batch "
-                         "(amortizes plan compile; crash re-work grows to "
-                         "batch granularity)")
-    ap.add_argument("--concurrent-buckets", type=int, default=4,
-                    help="pipeline up to N bucket jobs from a driver thread "
-                         "pool (overlaps plan compile with execution); 1 = "
-                         "strictly sequential")
+                    help="buckets per batch: one plan + one dynamic-partition-"
+                         "overwrite write per batch. 1 = bucket-granular crash "
+                         "re-work; larger batches amortize the plan build and "
+                         "redo the whole batch after a crash")
     ap.add_argument("--snapshot-id", default="unversioned")
     ap.add_argument("--resume", action="store_true",
                     help="skip buckets already DONE in the checkpoint table")
@@ -76,7 +74,6 @@ def main() -> None:
     ck = CheckpointedExtraction(
         args.checkpoint, args.output, n_buckets=args.buckets,
         media_join=args.media_join, media_copartitioned=args.media_copartitioned,
-        max_concurrent_buckets=args.concurrent_buckets,
         bucket_batch_size=args.batch_size,
     )
     if not args.resume:

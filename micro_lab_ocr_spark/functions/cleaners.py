@@ -522,11 +522,6 @@ def date_ladder(month: Column, day: Column) -> Column:
     )
 
 
-def zero_pad2(col: Column) -> Column:
-    """F21 — zfill(2)."""
-    return F.lpad(col, 2, "0")
-
-
 # ---------------------------------------------------------------------------
 # F20 — CFU → log₁₀, Azure variant (`backend_preservation.py:1615-1646`).
 # Output is the reference's canonical string form ('<2.0' or '4.7').

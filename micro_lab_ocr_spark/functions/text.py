@@ -30,10 +30,6 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(normalize_text(col), " "), lambda t: t != "")
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
 def word_shingles(col: Column, k: int = 3) -> Column:
     """k-word shingles (n-grams) of the normalized text → array<string>.
 
@@ -69,16 +65,6 @@ def char_ngrams(col: Column, n: int = 5) -> Column:
         return F.when(ln >= n, grams).otherwise(F.array().cast("array<string>"))
 
     return let(normalize_text(col), inner)
-
-
-def md5_hash(col: Column, seed: int | None = None) -> Column:
-    """Portable deterministic hash: md5 hex digest (optionally salted).
-
-    Comparable across Spark and DuckDB; MinHash uses lexicographic MIN over
-    these hex strings, which is engine-independent.
-    """
-    c = col if seed is None else F.concat(col, F.lit(f"#{seed}"))
-    return F.md5(c)
 
 
 def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:

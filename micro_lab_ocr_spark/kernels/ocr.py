@@ -279,15 +279,6 @@ def mlimg_bits(data: bytes) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _decode_glyph(seg: np.ndarray) -> str:
-    """Greedy best-path decode: min-Hamming glyph (exact match → distance 0)."""
-    canvas = np.zeros((GLYPH_ROWS, GLYPH_W), dtype=np.uint8)
-    h, w = seg.shape
-    canvas[: min(h, GLYPH_ROWS), : min(w, GLYPH_W)] = seg[:GLYPH_ROWS, :GLYPH_W]
-    dists = np.count_nonzero(_GLYPH_STACK != canvas.reshape(1, -1), axis=1)
-    return ALPHABET[int(np.argmin(dists))]
-
-
 _EXACT_GLYPHS = {g.tobytes(): ch for ch, g in _GLYPHS.items()}
 
 
@@ -393,16 +384,3 @@ def decode_image(data: bytes) -> list[tuple[int, int, str]]:
         if cur and cur_col is not None:
             cells.append((row_idx, cur_col, "".join(cur)))
     return cells
-
-
-def decode_real_image(data: bytes) -> list[tuple[int, int, str]]:
-    """Decode a real raster. PNG (stdlib codec, kernels/png.py) and baseline
-    JPEG (stdlib codec, kernels/jpeg.py) are handled natively by
-    :func:`decode_image`; other formats (TIFF, WebP, progressive JPEG)
-    raise ``ValueError`` so the caller routes the bytes to the pass-through
-    arm. On a production cluster, swap in pillow/opencv behind this same
-    signature — the downstream plumbing (grid schema, batching) is
-    unchanged."""
-    if data.startswith(_png.PNG_MAGIC) or data.startswith(_jpeg.JPEG_MAGIC):
-        return decode_image(data)
-    raise ValueError("unsupported raster format (PNG and baseline JPEG decode natively)")

@@ -140,38 +140,12 @@ def brute_force_topk(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def hyperplane_signature(vec, planes: list[list[float]]):
-    """Sign pattern of the vector against fixed hyperplanes → bucket string."""
-    bits = []
-    for p in planes:
-        dot = None
-        for i, w in enumerate(p):
-            term = F.element_at(vec, i + 1).cast("double") * F.lit(w)
-            dot = term if dot is None else dot + term
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def deterministic_planes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]]:
     """Fixed pseudo-random hyperplanes (seeded, reproducible across engines)."""
     import random
 
     rng = random.Random(seed)
     return [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def multi_table_buckets(vec, dim: int, n_tables: int, n_planes: int):
-    """(table, bucket) pairs for multi-table sign LSH → array<struct>."""
-    entries = []
-    for t in range(n_tables):
-        planes = deterministic_planes(dim, n_planes, seed=42 + t)
-        entries.append(
-            F.struct(
-                F.lit(t).alias("table"),
-                hyperplane_signature(vec, planes).alias("bucket"),
-            )
-        )
-    return F.array(*entries)
 
 
 def _signatures_np(df: DataFrame, id_out: str, dim: int, n_tables: int, n_planes: int,

@@ -35,7 +35,3 @@ def salt_spans(
         )
         .drop("_n_spans")
     )
-
-
-def repartition_salted(spans: DataFrame, num_partitions: int, doc_col: str = "doc_id") -> DataFrame:
-    return spans.repartition(num_partitions, F.col(doc_col), F.col("salt"))

@@ -6,8 +6,9 @@ an interrupted run resumes where it stopped. The engine's scale analogue:
 * the doc keyspace is split into ``n_buckets`` deterministic partitions
   (``pmod(hash(doc_id), n)`` — the same bucketing an Iceberg
   ``bucket(n, doc_id)`` table gives for free);
-* each bucket is processed and written independently and IDEMPOTENTLY
-  (output path keyed by bucket id, overwrite mode);
+* buckets are processed in batches, each batch one plan and one
+  IDEMPOTENT write (output dir keyed by bucket id, dynamic partition
+  overwrite);
 * a checkpoint table records, per bucket: status, input snapshot id, row
   counts and extraction metrics (lineage);
 * a resumed run reads the checkpoint table and skips buckets already DONE.
@@ -26,7 +27,7 @@ import os
 import time
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 
 def _layout_bucket_count(docs: DataFrame) -> int | None:
@@ -63,6 +64,32 @@ def _layout_bucket_count(docs: DataFrame) -> int | None:
     return (max(buckets) + 1) if buckets else None
 
 
+def _bucket_fold(df: DataFrame, n: int) -> Column | None:
+    """The partition-prunable column that maps ``df``'s ``bucket=N`` layout
+    onto ``n`` checkpoint buckets, or None when ``df`` has no such layout
+    (or one the checkpoint cannot trust). The layout's width may differ from
+    ``n`` (write_docs defaults to 64, jobs to 16): trusting ``bucket == b``
+    for b in range(n) would then silently drop every row in layout buckets
+    >= n while recording DONE checkpoints. When the width is a multiple of
+    ``n``, pmod folds each layout bucket onto exactly one checkpoint bucket
+    (h mod KN mod N = h mod N) and the filter stays an expression of the
+    partition column alone, so the scan prunes to its directories."""
+    if "bucket" not in df.columns:
+        return None
+    layout_n = _layout_bucket_count(df)
+    if layout_n is None or layout_n % n:
+        return None
+    return F.pmod(F.col("bucket"), F.lit(n))
+
+
+# Driver threads submitting batches. A batch's Catalyst analysis/codegen is
+# DRIVER work (seconds for the grid DAG) that a sequential loop serializes
+# with executor compute; submitting from a small pool overlaps the next
+# plan's compile with the current batch's execution (py4j calls release the
+# GIL; Spark's scheduler interleaves the jobs).
+_BATCH_WORKERS = 4
+
+
 @dataclass
 class BucketLineage:
     bucket: int
@@ -82,7 +109,6 @@ class CheckpointedExtraction:
         n_buckets: int = 16,
         media_join: str = "broadcast",
         media_copartitioned: bool = False,
-        max_concurrent_buckets: int = 4,
         bucket_batch_size: int = 1,
     ):
         self.checkpoint_dir = checkpoint_dir
@@ -102,14 +128,10 @@ class CheckpointedExtraction:
         # bucketed on any other key — pruning on a non-owner bucketing would
         # silently degrade matched spans to pass-throughs.
         self.media_copartitioned = media_copartitioned
-        # >1 pipelines bucket jobs from a driver thread pool so per-bucket
-        # plan compile overlaps executor compute (see run()); 1 = strictly
-        # sequential (deterministic bucket order, simplest failure story)
-        self.max_concurrent_buckets = max_concurrent_buckets
-        # >1 processes buckets in batches of this size: ONE plan + ONE
-        # dynamic-partition-overwrite write per batch (amortizes the
-        # per-bucket plan-compile fixed cost; see run_batch) at the price of
-        # batch-granular crash re-work instead of bucket-granular
+        # buckets per batch: ONE plan + ONE dynamic-partition-overwrite write
+        # per batch (see run). 1 = bucket-granular crash re-work; larger
+        # batches amortize the per-plan build (~5–8 core-s) over more buckets
+        # at the price of batch-granular re-work
         self.bucket_batch_size = bucket_batch_size
         os.makedirs(checkpoint_dir, exist_ok=True)
 
@@ -119,14 +141,7 @@ class CheckpointedExtraction:
         return os.path.join(self.checkpoint_dir, f"bucket_{bucket:05d}.json")
 
     def done_buckets(self) -> set[int]:
-        done = set()
-        for bucket in range(self.n_buckets):
-            p = self._ckpt_path(bucket)
-            if os.path.exists(p):
-                with open(p) as f:
-                    if json.load(f).get("status") == "DONE":
-                        done.add(bucket)
-        return done
+        return {row["bucket"] for row in self.lineage() if row.get("status") == "DONE"}
 
     def lineage(self) -> list[dict]:
         rows = []
@@ -136,6 +151,22 @@ class CheckpointedExtraction:
                 with open(p) as f:
                     rows.append(json.load(f))
         return rows
+
+    def _commit(self, bucket: int, snapshot_id: str, n_docs, n_spans, wall: float) -> BucketLineage:
+        """Record ``bucket`` DONE. Called only AFTER its data write completed,
+        so a checkpoint row never points at a partial bucket."""
+        row = BucketLineage(
+            bucket=bucket,
+            status="DONE",
+            snapshot_id=snapshot_id,
+            n_docs=int(n_docs or 0),
+            n_spans=int(n_spans or 0),
+            wall_sec=wall,
+            finished_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        )
+        with open(self._ckpt_path(bucket), "w") as f:
+            json.dump(asdict(row), f)
+        return row
 
     # -- run ------------------------------------------------------------------
 
@@ -147,56 +178,38 @@ class CheckpointedExtraction:
         snapshot_id: str = "unversioned",
         fail_at_bucket: int | None = None,
     ) -> list[BucketLineage]:
-        """Process all not-yet-done buckets; each bucket's write is idempotent
-        (per-bucket output path, overwrite). ``fail_at_bucket`` injects a
-        failure for resume tests."""
+        """Process all not-yet-done buckets in batches of
+        ``bucket_batch_size``; each batch's write is idempotent (per-bucket
+        output dirs, dynamic partition overwrite). ``fail_at_bucket`` runs
+        the buckets before it, then raises — a mid-job crash for resume
+        tests."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.sql import Observation
+
         from micro_lab_ocr_spark.pipeline.extract import normalize_spans
         from micro_lab_ocr_spark.sources.catalog import bucket_expr
 
-        done = self.done_buckets()
-        results: list[BucketLineage] = []
+        n = self.n_buckets
         # If the docs table carries the catalog layout's `bucket` partition
         # column (sources/catalog.write_docs), filtering on it gives
-        # PARTITION PRUNING — each bucket's run scans only its directory
-        # (Iceberg bucket(N, doc_id) metadata pruning on a real cluster).
-        # The layout's bucket count may DIFFER from this checkpoint's
-        # n_buckets (write_docs defaults to 64, jobs default to 16):
-        # trusting `bucket == b` for b in range(n_buckets) would then
-        # silently drop every doc in layout buckets >= n_buckets while
-        # recording DONE checkpoints. Detect the layout width from the scan's
-        # file listing; when it is a multiple of n_buckets, pmod folds each
-        # layout bucket onto exactly one checkpoint bucket (h mod KN mod N =
-        # h mod N) and the filter STAYS a partition-prunable expression of
-        # the partition column; otherwise fall back to re-hashing doc_id
-        # (full scan per bucket, but correct).
-        pruned = "bucket" in docs.columns
-        layout_n = _layout_bucket_count(docs) if pruned else None
-        if pruned and layout_n == self.n_buckets:
-            bucket_col = F.col("bucket")
-        elif pruned and layout_n is not None and layout_n % self.n_buckets == 0:
-            bucket_col = F.pmod(F.col("bucket"), F.lit(self.n_buckets))
-        else:
-            pruned = False
-            bucket_col = bucket_expr("doc_id", self.n_buckets)
-        if "bucket" in docs.columns and not pruned:
+        # PARTITION PRUNING — each batch scans only its directories (Iceberg
+        # bucket(N, doc_id) metadata pruning on a real cluster); otherwise
+        # re-hash doc_id (full scan per batch, but correct).
+        bucket_col = _bucket_fold(docs, n)
+        if bucket_col is None:
             docs = docs.drop("bucket")
+            bucket_col = bucket_expr("doc_id", n)
         # media-side pruning: only under the co-partitioned layout (see
-        # __init__), with the same divisible-fold rule as the docs side
-        media_bucket_col = None
-        if (
-            self.media_copartitioned
-            and media is not None
-            and "bucket" in media.columns
-        ):
-            m_layout = _layout_bucket_count(media)
-            if m_layout == self.n_buckets:
-                media_bucket_col = F.col("bucket")
-            elif m_layout is not None and m_layout % self.n_buckets == 0:
-                media_bucket_col = F.pmod(F.col("bucket"), F.lit(self.n_buckets))
-        if media is not None and "bucket" in media.columns and media_bucket_col is None:
-            media = media.drop("bucket")
+        # __init__), with the same fold rule as the docs side
+        media_col = None
+        if media is not None:
+            if self.media_copartitioned:
+                media_col = _bucket_fold(media, n)
+            if media_col is None:
+                media = media.drop("bucket")
         # probe the media side ONCE — normalize_spans would otherwise fire a
-        # driver-side isEmpty() action per bucket (16+ eager scans per job);
+        # driver-side isEmpty() action per batch (16+ eager scans per job);
         # under media_join="auto" the same single pass supplies the count.
         media_join, media_count = self.media_join, None
         if media_join == "auto":
@@ -204,165 +217,75 @@ class CheckpointedExtraction:
             media_present = media_count > 0
         else:
             media_present = media is not None and not media.isEmpty()
-        def run_bucket(bucket: int) -> BucketLineage:
-            t0 = time.perf_counter()
-            bucket_docs = docs.where(bucket_col == bucket)
-            if pruned:
-                bucket_docs = bucket_docs.drop("bucket")
-            bucket_media = media
-            if media_bucket_col is not None:
-                bucket_media = media.where(media_bucket_col == bucket).drop("bucket")
-            out = normalize_spans(
-                bucket_docs, bucket_media, media_present=media_present,
-                media_join=media_join, media_count=media_count,
-            )
-            # lineage metrics ride the WRITE itself (Observation), exactly
-            # like the batched path — the previous shape re-read the bucket
-            # it had just written, one extra full decompress pass per bucket
-            # on the batch_size=1 path
-            from pyspark.sql import Observation
-
-            obs = Observation(f"bucket_stats_single_{bucket}_{snapshot_id}")
-            out = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-            )
-            path = os.path.join(self.output_dir, f"bucket={bucket}")
-            out.write.mode("overwrite").parquet(path)
-            stats = obs.get
-            row = BucketLineage(
-                bucket=bucket,
-                status="DONE",
-                snapshot_id=snapshot_id,
-                n_docs=int(stats["n_docs"] or 0),
-                n_spans=int(stats["n_spans"] or 0),
-                wall_sec=round(time.perf_counter() - t0, 3),
-                finished_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            )
-            # the checkpoint row lands only AFTER the data write completed —
-            # unchanged under concurrency, so resume semantics hold
-            with open(self._ckpt_path(bucket), "w") as f:
-                json.dump(asdict(row), f)
-            return row
 
         def run_batch(batch: list[int]) -> list[BucketLineage]:
             """ONE Spark plan + ONE dynamic-partition-overwrite write for a
-            whole batch of buckets. Per-bucket plan compile is driver work
-            (seconds for this DAG, serialized on the Python side) — at B
-            buckets a bucket-at-a-time loop pays it B times per run, a fixed
-            cost that throttles every parallelism level equally. Batching
-            amortizes it to once; dynamic overwrite keeps per-bucket output
-            dirs + idempotency, and per-bucket lineage rows come from one
-            grouped aggregate over the written partitions. Trade-off vs
-            bucket-at-a-time: a crash mid-batch leaves NO checkpoint rows
-            for the batch (resume redoes the whole batch, not just the
-            unfinished bucket) — batch_size bounds that re-work."""
+            batch of buckets. Dynamic overwrite keeps per-bucket output dirs
+            and idempotency; a crash mid-batch leaves NO checkpoint rows for
+            the batch, so resume redoes the whole batch."""
             t0 = time.perf_counter()
-            batch_docs = docs.where(bucket_col.isin([int(b) for b in batch]))
-            if pruned:
-                batch_docs = batch_docs.drop("bucket")
+            batch_docs = docs.where(bucket_col.isin(batch)).drop("bucket")
             batch_media = media
-            if media_bucket_col is not None:
-                batch_media = media.where(
-                    media_bucket_col.isin([int(b) for b in batch])
-                ).drop("bucket")
+            if media_col is not None:
+                batch_media = media.where(media_col.isin(batch)).drop("bucket")
             out = normalize_spans(
                 batch_docs, batch_media, media_present=media_present,
                 media_join=media_join, media_count=media_count,
-            ).withColumn("bucket", bucket_expr("doc_id", self.n_buckets))
+            ).withColumn("bucket", bucket_expr("doc_id", n))
             # per-bucket lineage metrics ride the WRITE itself (Observation /
             # CollectMetrics) — re-reading the written output for stats would
-            # cost a second full decompress pass over every output byte
-            from pyspark.sql import Observation
-
-            obs = Observation(f"bucket_stats_{batch[0]}")
+            # cost a second full decompress pass over every output byte.
+            # Unnamed: batches in flight must never share a metric name.
+            obs = Observation()
             aggs = []
             for b in batch:
-                is_b = F.col("bucket") == int(b)
+                is_b = F.col("bucket") == b
                 aggs.append(F.sum(is_b.cast("long")).alias(f"docs_{b}"))
                 aggs.append(
                     F.sum(F.when(is_b, F.size("spans")).otherwise(0)).alias(f"spans_{b}")
                 )
-            out = out.observe(obs, aggs[0], *aggs[1:])
             (
-                out.write.mode("overwrite")
+                out.observe(obs, *aggs).write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(self.output_dir)
             )
-            wall = round(time.perf_counter() - t0, 3)
             m = obs.get
             # dynamic overwrite only replaces partitions that RECEIVE rows: a
-            # batch bucket producing zero output would leave a previous run's
-            # stale bucket=N files on disk while its checkpoint row records
-            # DONE with n_docs=0 (run_bucket's per-dir overwrite clears even
-            # empty buckets — keep the two modes equivalent)
-            import shutil as _shutil
-
+            # bucket producing zero output would keep a previous run's stale
+            # files (or, on a fresh output, leave no readable dir at all).
+            # Overwrite it with an empty frame — a zero limit plans as an
+            # empty relation, so nothing re-executes.
             for b in batch:
-                if int(m.get(f"docs_{b}") or 0) == 0:
-                    stale = os.path.join(self.output_dir, f"bucket={b}")
-                    if os.path.exists(stale):
-                        _shutil.rmtree(stale)
-            rows = []
-            for b in batch:
-                row = BucketLineage(
-                    bucket=b,
-                    status="DONE",
-                    snapshot_id=snapshot_id,
-                    n_docs=int(m.get(f"docs_{b}") or 0),
-                    n_spans=int(m.get(f"spans_{b}") or 0),
-                    wall_sec=wall,  # shared batch wall (documented)
-                    finished_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                )
-                with open(self._ckpt_path(b), "w") as f:
-                    json.dump(asdict(row), f)
-                rows.append(row)
-            return rows
+                if not m.get(f"docs_{b}"):
+                    out.limit(0).drop("bucket").write.mode("overwrite").parquet(
+                        os.path.join(self.output_dir, f"bucket={b}")
+                    )
+            wall = round(time.perf_counter() - t0, 3)  # shared by the batch
+            return [
+                self._commit(b, snapshot_id, m.get(f"docs_{b}"), m.get(f"spans_{b}"), wall)
+                for b in batch
+            ]
 
-        todo = []
-        for bucket in range(self.n_buckets):
-            if bucket in done:
-                continue
-            if fail_at_bucket is not None and bucket == fail_at_bucket:
-                # run everything scheduled before the injected failure, then
-                # die — mirrors a mid-job crash for resume tests
-                for b in todo:
-                    results.append(run_bucket(b))
-                raise RuntimeError(f"injected failure at bucket {bucket}")
-            todo.append(bucket)
-
-        if self.bucket_batch_size > 1:
-            for i in range(0, len(todo), self.bucket_batch_size):
-                results.extend(run_batch(todo[i : i + self.bucket_batch_size]))
-            return results
-        if self.max_concurrent_buckets <= 1:
-            for b in todo:
-                results.append(run_bucket(b))
-            return results
-        # Pipelined submission: Catalyst analysis/codegen of a bucket's plan
-        # is DRIVER work (~seconds for the grid DAG) that a sequential loop
-        # serializes with executor compute — at N buckets that fixed cost
-        # dominates small-bucket runs and burdens every parallelism level
-        # equally. Submitting buckets from a small thread pool overlaps the
-        # next plan's compile with the current bucket's execution (the JVM
-        # releases the GIL during py4j calls; Spark's scheduler interleaves
-        # the jobs). Each bucket's write+checkpoint stays atomic per bucket,
-        # so failure/resume semantics are unchanged — some buckets may finish
-        # after another fails, which a resume simply skips.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=self.max_concurrent_buckets) as pool:
-            futures = [pool.submit(run_bucket, b) for b in todo]
-            errs = []
+        done = self.done_buckets()
+        todo = [b for b in range(n) if b not in done]
+        failing = fail_at_bucket in todo
+        if failing:
+            todo = todo[: todo.index(fail_at_bucket)]
+        size = self.bucket_batch_size
+        results: list[BucketLineage] = []
+        # each batch's write + checkpoint rows stay atomic per batch, so a
+        # failing batch leaves the others' rows intact; leaving the pool
+        # drains every submitted batch before the first error surfaces
+        with ThreadPoolExecutor(max_workers=_BATCH_WORKERS) as pool:
+            futures = [
+                pool.submit(run_batch, todo[i : i + size])
+                for i in range(0, len(todo), size)
+            ]
             for fut in futures:
-                try:
-                    results.append(fut.result())
-                except Exception as exc:  # surface after draining the pool
-                    errs.append(exc)
-            if errs:
-                raise errs[0]
+                results.extend(fut.result())
+        if failing:
+            raise RuntimeError(f"injected failure at bucket {fail_at_bucket}")
         return results
 
     # -- S11: keyed corrections upsert ---------------------------------------
@@ -390,6 +313,8 @@ class CheckpointedExtraction:
         THEN UPDATE`` keyed on doc_id.
         """
         import shutil
+
+        from pyspark.sql import Observation
 
         from micro_lab_ocr_spark.pipeline.extract import normalize_spans
         from micro_lab_ocr_spark.sources.catalog import bucket_expr
@@ -429,7 +354,12 @@ class CheckpointedExtraction:
             else:
                 merged = new_rows
             tmp = path + ".tmp"
-            merged.write.mode("overwrite").parquet(tmp)
+            obs = Observation()
+            merged.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum(F.size("spans")).alias("n_spans"),
+            ).write.mode("overwrite").parquet(tmp)
             if os.path.exists(bak):
                 shutil.rmtree(bak)
             if os.path.exists(path):
@@ -437,19 +367,9 @@ class CheckpointedExtraction:
             os.rename(tmp, path)
             if os.path.exists(bak):
                 shutil.rmtree(bak)
-            written = spark.read.parquet(path)
-            n_docs = written.count()
-            n_spans = written.select(F.sum(F.size("spans"))).collect()[0][0] or 0
-            row = BucketLineage(
-                bucket=bucket,
-                status="DONE",
-                snapshot_id=snapshot_id,
-                n_docs=n_docs,
-                n_spans=int(n_spans),
-                wall_sec=round(time.perf_counter() - t0, 3),
-                finished_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            )
-            with open(self._ckpt_path(bucket), "w") as f:
-                json.dump(asdict(row), f)
-            results.append(row)
+            stats = obs.get
+            results.append(self._commit(
+                bucket, snapshot_id, stats["n_docs"], stats["n_spans"],
+                round(time.perf_counter() - t0, 3),
+            ))
         return results

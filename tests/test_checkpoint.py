@@ -234,8 +234,8 @@ def test_corrections_upsert_keyed_replace(spark, small_corpus, tmp_path):
 def test_batch_zero_output_bucket_clears_stale_files(spark, small_corpus, tmp_path):
     """Dynamic partition overwrite only replaces partitions that receive
     rows — a batched run whose input no longer populates a bucket must still
-    clear that bucket's previous files (parity with run_bucket's per-dir
-    overwrite), or readers see deleted docs resurrected."""
+    replace that bucket's previous files (with an empty frame that reads
+    back 0 rows), or readers see deleted docs resurrected."""
     from pyspark.sql import functions as F
 
     from micro_lab_ocr_spark.sources.catalog import bucket_expr
@@ -258,9 +258,59 @@ def test_batch_zero_output_bucket_clears_stale_files(spark, small_corpus, tmp_pa
     rows = ck2.run(spark, pruned, media_df, snapshot_id="pruned")
     by_bucket = {r.bucket: r for r in rows}
     assert by_bucket[int(b)].n_docs == 0
-    assert not os.path.exists(os.path.join(out, f"bucket={b}"))
+    assert spark.read.parquet(os.path.join(out, f"bucket={b}")).count() == 0
     survivors = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert survivors == {r["doc_id"] for r in pruned.select("doc_id").collect()}
+
+
+def test_checkpoint_empty_input_reads_back(spark, small_corpus, tmp_path):
+    """An empty docs table finishes every bucket with (b, 0, 0) lineage and
+    leaves an output that reads back 0 rows — at a batch of one bucket and at
+    a batch of all four, where dynamic partition overwrite writes no
+    partition at all."""
+    media_df = small_corpus[3]
+    empty = spark.createDataFrame([], DOCS_SCHEMA)
+    for size in (1, 4):
+        out = str(tmp_path / f"out_e{size}")
+        ck = CheckpointedExtraction(
+            str(tmp_path / f"ck_e{size}"), out, n_buckets=4, bucket_batch_size=size
+        )
+        rows = ck.run(spark, empty, media_df, snapshot_id="empty")
+        assert sorted((r.bucket, r.n_docs, r.n_spans) for r in rows) == [
+            (b, 0, 0) for b in range(4)
+        ]
+        assert spark.read.parquet(out).count() == 0
+
+
+def test_corrections_lineage_rides_the_write(spark, small_corpus, tmp_path, monkeypatch):
+    """apply_corrections takes each lineage row from an Observation on the
+    bucket's write — no count() re-read of the swapped bucket — and the row
+    still equals what the bucket holds."""
+    import os
+
+    docs, media, docs_df, media_df = small_corpus
+    out = str(tmp_path / "out_o")
+    ck = CheckpointedExtraction(str(tmp_path / "ck_o"), out, n_buckets=4)
+    ck.run(spark, docs_df, media_df, snapshot_id="base")
+    corr_df = spark.createDataFrame(
+        [(docs[5]["doc_id"], [("text", "fixed body", "", 0)])], DOCS_SCHEMA
+    )
+    cls = type(docs_df)
+    calls = {"n": 0}
+    orig = cls.count
+
+    def counted(self):
+        calls["n"] += 1
+        return orig(self)
+
+    monkeypatch.setattr(cls, "count", counted)
+    rows = ck.apply_corrections(spark, corr_df, media_df, snapshot_id="fix")
+    assert calls["n"] == 0
+    assert len(rows) == 1
+    for row in rows:
+        written = spark.read.parquet(os.path.join(out, f"bucket={row.bucket}")).collect()
+        assert row.n_docs == len(written)
+        assert row.n_spans == sum(len(r["spans"]) for r in written)
 
 
 def test_iceberg_contract(spark):
