@@ -39,12 +39,12 @@ def main() -> None:
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--buckets", type=int, default=16)
     ap.add_argument("--media-join", default="broadcast",
-                    choices=["broadcast", "shuffle_refs", "auto"],
+                    choices=["broadcast", "shuffle_refs"],
                     help="how span refs meet media content (content bytes never "
-                         "shuffle or broadcast in any mode): broadcast refs onto "
-                         "the media scan (default; refs bounded per bucket), "
-                         "shuffle the narrow refs to a bucketed media table, or "
-                         "auto-pick from a one-time media count")
+                         "shuffle or broadcast in either mode): broadcast refs "
+                         "onto the media scan (default; refs bounded per "
+                         "bucket) or shuffle the narrow refs to a bucketed "
+                         "media table")
     ap.add_argument("--media-copartitioned", action="store_true",
                     help="media was written by catalog.write_media_copartitioned "
                          "(bucketed by OWNING doc_id): prune the media scan per "

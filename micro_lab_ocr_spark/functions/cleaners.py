@@ -1,9 +1,12 @@
 """F1–F21 as Catalyst Column expressions (SURVEY.md §2.7).
 
-Every function here is ``Column -> Column`` built purely from
-``pyspark.sql.functions`` — the regex/CASE banks stay inside whole-stage
-codegen; the pure-Python oracle (:mod:`micro_lab_ocr_spark.oracle.cleaners`)
-pins their behavior via table-driven parity tests.
+Every bank here is built purely from ``pyspark.sql.functions`` — the
+regex/CASE banks stay inside whole-stage codegen; the pure-Python oracle
+(:mod:`micro_lab_ocr_spark.oracle.cleaners`) pins their behavior via
+table-driven parity tests. Single banks are ``Column -> Column``. The two
+hot chained banks, the CFU clean (:func:`clean_cfu_staged`) and the ID
+extraction (:func:`extract_ids_staged`), are DataFrame-level staged
+projections; the cold chains bind their stages with :func:`let`.
 
 Java-vs-Python regex notes (validated by the parity tests):
   * Python ``re.match(p, v)`` ≡ Spark ``rlike('^' + p)``;
@@ -229,29 +232,15 @@ def fix_7day_ambiguous(cleaned: Column, original: Column) -> Column:
 
 # ---------------------------------------------------------------------------
 # integrated per-cell clean (`backend_preservation.py:1503-1543`).
-# day is a plan-time constant ('0'|'7'|'14'|'28') — day-0 skips the F6 bank.
 # ---------------------------------------------------------------------------
 
 
-def clean_cfu_value(col: Column, day: str) -> Column:
-    # per-stage let-bindings keep the plan linear (see `let`). NB: the let()
-    # HOF barrier evaluates interpreted — on hot paths prefer the staged
-    # DataFrame-level :func:`clean_cfu_staged`, which gets whole-stage
-    # codegen AND shares the chain prefix across day-columns.
-    v = let(col, lambda c: remove_noise(split_merged_cells(c)))
-    if day == "0":
-        out = let(v, normalize_scientific)
-    else:
-        out = let(let(v, fix_less_than_10), normalize_scientific)
-        if day == "7":
-            out = let2(out, col, fix_7day_ambiguous)
-    return F.when(col.isNull() | (col == ""), F.lit("")).otherwise(out)
-
-
 def clean_cfu_staged(df, sources: dict, outputs: list):
-    """DataFrame-level F4→F5→F6(→F7→F11) clean chain as STAGED projections —
-    semantically identical to :func:`clean_cfu_value` per output column, but
-    each bank runs once per source in its own projection stage.
+    """The integrated per-cell CFU clean F4→F5→F6(→F7→F11) as STAGED
+    projections; each bank runs once per source in its own projection stage.
+    ``day`` ('0'|'7'|'14'|'28') is a plan-time constant: day 0 skips the F6
+    bank, day 7 adds the F11 ambiguity fix against the raw value. A null or
+    empty raw value cleans to ''.
 
     ``sources`` maps a short name to the raw Column; ``outputs`` is a list of
     ``(source_name, day, alias)``. Why stages instead of one nested Column
@@ -262,8 +251,9 @@ def clean_cfu_staged(df, sources: dict, outputs: list):
     day-columns over one raw value) share the F4→F5 and F6 work instead of
     recomputing it per column. CollapseProject keeps the stages separate
     because each stage's expression is non-trivial and multiply-referenced.
-    Measured on the f6_f7 bank query at sf0.1: 5.4 s → 3.2 s. Temp columns
-    are dropped; the returned frame adds exactly the ``alias`` columns."""
+    Measured on the f6_f7 bank query at sf0.1 against the let()-nested
+    form: 5.4 s → 3.2 s. Temp columns are dropped; the returned frame adds
+    exactly the ``alias`` columns."""
     df = df.withColumns({f"_ccv_{n}": c for n, c in sources.items()})
     df = df.withColumns(
         {
@@ -374,35 +364,15 @@ _PRESC_PATTERNS_ROW = [
 ]
 
 
-def extract_test_number(col: Column) -> Column:
-    """Test# from a bulk-name cell, with I/1 and |/! repairs (F3)."""
-
-    def inner(t: Column) -> Column:
-        raw = first_regexp_extract(t, _TEST_PATTERNS_ROW, group=1)
-        repaired = F.regexp_replace(raw, r"([A-Z])(\d{2})1(\d{2})", "$1$2I$3")
-        return F.translate(repaired, "|!", "II")
-
-    out = let(preprocess_bulk_name(col), inner)
-    return F.when(col.isNull(), F.lit("")).otherwise(out)
-
-
-def extract_prescription_number(col: Column) -> Column:
-    out = let(
-        preprocess_bulk_name(col),
-        lambda t: F.trim(first_regexp_extract(t, _PRESC_PATTERNS_ROW, group=1)),
-    )
-    return F.when(col.isNull(), F.lit("")).otherwise(out)
-
-
 def extract_ids_staged(df, src: Column, test_alias: str, presc_alias: str):
-    """F1→F2/F3 test#/prescription# extraction as STAGED projections —
-    semantically identical to :func:`extract_test_number` +
-    :func:`extract_prescription_number` over ``src``, but the F1 preprocess
-    runs ONCE as a materialized attribute shared by both extraction banks,
-    and the banks reference plain attributes so they run in whole-stage
-    codegen instead of the let() HOF barrier's interpreted eval (same move
-    as :func:`clean_cfu_staged`; measured 22.1 s → interpreted-free on the
-    f3 bench query). Adds exactly ``test_alias``/``presc_alias``."""
+    """F1→F2/F3 test#/prescription# extraction from a bulk-name cell as
+    STAGED projections: test# with its I/1 and |/! repairs (F3) and the
+    prescription# (F2); a null ``src`` yields ''. The F1 preprocess runs
+    ONCE as a materialized attribute shared by both extraction banks, and
+    the banks reference plain attributes so they run in whole-stage codegen
+    instead of a let() HOF barrier's interpreted eval (same move as
+    :func:`clean_cfu_staged`; measured 22.1 s → interpreted-free on the f3
+    bench query). Adds exactly ``test_alias``/``presc_alias``."""
     df = df.withColumn("_eis_src", src)
     df = df.withColumn("_eis_pre", preprocess_bulk_name(F.col("_eis_src")))
     raw_test = first_regexp_extract(F.col("_eis_pre"), _TEST_PATTERNS_ROW, group=1)

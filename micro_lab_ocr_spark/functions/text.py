@@ -203,17 +203,20 @@ def detect_language(col: Column) -> Column:
 
 def quality_staged(df, text_col: str, ratio_alias: str = "stopword_ratio",
                    quality_alias: str = "quality"):
-    """t_quality as HOF-free, allocation-free counting projections —
-    numerically identical to ``round(stopword_ratio(c), 4)`` +
-    ``quality_score(c)`` but built only from codegen-able ``regexp_count``
-    expressions over the ORIGINAL text. Two measured pathologies drove
-    this form: interpreted HOF subtrees (CodegenFallback) burn ~30× the
-    single-thread CPU per row under 32-way concurrency (allocation churn in
-    the interpreted eval path), and even codegen'd ``regexp_replace``
-    throttles on this box's memory subsystem because it materializes the
-    normalized string per row. Counting allocates nothing; every ratio
-    keeps the original int→double division, so rounded outputs match the
-    HOF form bit-for-bit.
+    """t_quality: ``round(stopword_ratio(c), 4)`` and the composite
+    document-quality score in [0,1] — the mean of four clipped linear
+    components (length, punctuation density, stopword ratio, mean word
+    length), rounded to 4 dp — as HOF-free, allocation-free counting
+    projections built only from codegen-able ``regexp_count`` expressions
+    over the ORIGINAL text. Two measured pathologies drove this form over a
+    let()-bound token-array one: interpreted HOF subtrees (CodegenFallback)
+    burn ~30× the single-thread CPU per row under 32-way concurrency
+    (allocation churn in the interpreted eval path), and even codegen'd
+    ``regexp_replace`` throttles on memory bandwidth because it
+    materializes the normalized string per row. Counting allocates nothing;
+    every ratio keeps the int→double division of the token-array
+    definition, so rounded outputs match it bit-for-bit (pinned against the
+    DuckDB oracle by the t_quality query).
     """
     c = F.col(text_col)
     # every component is a COUNTING regex over the original text — no
@@ -265,49 +268,7 @@ def quality_staged(df, text_col: str, ratio_alias: str = "stopword_ratio",
     return df.drop(*[col for col in df.columns if col.startswith("_tq_")])
 
 
-def quality_score(col: Column) -> Column:
-    """Composite document-quality score in [0,1]: length, punctuation
-    density, stopword ratio, mean word length — each clipped linear.
-    Token array is let-bound: one tokenize per row, not five."""
-    from micro_lab_ocr_spark.functions.cleaners import let
-
-    def inner(toks: Column) -> Column:
-        n_tok = F.size(toks)
-        len_score = F.least(n_tok / F.lit(100.0), F.lit(1.0))
-        punct = F.length(F.regexp_replace(col, r"[^!?.,;:]", ""))
-        punct_ratio = punct / F.greatest(F.length(col), F.lit(1))
-        punct_score = F.lit(1.0) - F.least(punct_ratio * 5, F.lit(1.0))
-        sw_score = F.least(_sw_ratio_of(toks) * 4, F.lit(1.0))
-        # mean word length over the same token set (chars incl. separators)
-        mean_wlen = F.length(normalize_text(col)) / F.greatest(n_tok, F.lit(1))
-        wlen_score = F.when((mean_wlen >= 3) & (mean_wlen <= 10), F.lit(1.0)).otherwise(F.lit(0.5))
-        return F.round((len_score + punct_score + sw_score + wlen_score) / 4, 4)
-
-    return let(tokens(col), inner)
-
-
 def doc_fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 of normalized text (content-defined key for
     exact dedup; portable across engines)."""
     return F.md5(normalize_text(col))
-
-
-# ---------------------------------------------------------------------------
-# embedding similarity (ANN building blocks)
-# ---------------------------------------------------------------------------
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))

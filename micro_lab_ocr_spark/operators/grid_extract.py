@@ -41,70 +41,31 @@ def _contains_any(col: Column, keywords: list[str]) -> Column:
     return out
 
 
-def extract_grid_records(grids: DataFrame) -> DataFrame:
-    """Records only — see :func:`extract`."""
-    return extract(grids)[0]
+def extract_page_lines(grids: DataFrame) -> DataFrame:
+    """Grid pages → one row per page: the only public grid entry point.
 
-
-def extract(grids: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """``grids(doc_id, offset, cells: array<struct<row:int,col:int,text:string>>)``
-    → (records, pages).
-
-    records: the 9 extraction fields + deterministic output ordering columns
-    (group_id, strain_rank, row). pages: one row per input page with
-    ``date_info`` (nullable struct) and ``header_row`` — dates are extracted
-    even for pages that yield no records (`backend_preservation.py:284-292`).
+    ``grids(doc_id, offset, cells: array<struct<row:int,col:int,text:string>>)``
+    → ``(*keys, lines, date_info)``. ``lines`` is the records serialized as
+    "|"-joined :data:`spanspec.RECORD_FIELDS` joined by "\\n" in output order
+    (group_id, strain_rank, row) — "" for pages with no records.
+    ``date_info`` is the nullable date struct, extracted even for pages that
+    yield no records (`backend_preservation.py:284-292`).
 
     PASSTHROUGH MODE: when ``grids`` additionally carries page-constant
     columns ``media_ref``, ``span_text``, ``ok`` (the pipeline's OCR-kernel
     output with decode-failure routing), they ride through as extra grouping
-    keys — constant per page, so the groups are unchanged — and come back on
-    ``pages``. ``explode_outer`` (not explode) keeps failed/empty pages
-    present in ``pages`` so the pipeline can route them.
+    keys — constant per page, so the groups are unchanged. ``explode_outer``
+    (not explode) keeps failed/empty pages present so the pipeline can route
+    them.
 
-    Both outputs are views over ONE shared per-row frame
-    (:func:`_enriched_rows`): records filters it, pages aggregates it. The
-    production pipeline consumes :func:`extract_page_lines` instead — the
-    fully fused single-aggregate form.
-    """
-    r, keys = _enriched_rows(grids)
-    records = r.where(F.col("is_record")).select(
-        *PAGE,
-        "row",
-        "test_number",
-        "prescription_number",
-        "strain",
-        "cfu_0day",
-        "cfu_7day",
-        "cfu_14day",
-        "cfu_28day",
-        "judgment",
-        "final_judgment",
-        "group_id",
-        "strain_rank",
-    )
-    pages = r.groupBy(*keys).agg(
-        F.first("date_info").alias("date_info"),
-        F.first("header_row").alias("header_row"),
-    )
-    return records, pages
-
-
-def extract_page_lines(grids: DataFrame) -> DataFrame:
-    """Fused page-level extraction for the production pipeline: ONE consumer
-    of the page-key exchange — per-row enrichment (windows) feeding a single
-    groupBy(page) that emits the serialized record block and the page-constant
-    metadata together.
-
-    Output: ``(*keys, date_info, header_row, lines)`` where ``lines`` is the
-    "|"-serialized records joined by "\\n" ("" for pages with no records).
-
-    Why fused: the previous shape (records → page_text groupBy) ⋈ (pages
-    groupBy) read the cells exchange TWICE and ran the cells→rows
-    ObjectHashAggregate twice — measured 654 MB shuffle read vs 338 MB
-    written on the 36k-doc scaling corpus, in the stage whose memory traffic
-    caps scaling efficiency. One consumer reads the exchange once,
-    aggregates once, and needs no join.
+    ONE consumer of the page-key exchange — per-row enrichment (windows)
+    feeding a single groupBy(page) that emits the serialized record block and
+    the page-constant metadata together. Why fused: the previous shape
+    (records → page_text groupBy) ⋈ (pages groupBy) read the cells exchange
+    TWICE and ran the cells→rows ObjectHashAggregate twice — measured 654 MB
+    shuffle read vs 338 MB written on the 36k-doc scaling corpus, in the
+    stage whose memory traffic caps scaling efficiency. One consumer reads
+    the exchange once, aggregates once, and needs no join.
 
     The 9 record fields are pre-concatenated into the final line BEFORE
     collect_list, so the sort/agg carries a 4-field struct instead of 12
@@ -128,15 +89,14 @@ def extract_page_lines(grids: DataFrame) -> DataFrame:
             "\n",
         ).alias("lines"),
         F.first("date_info").alias("date_info"),
-        F.first("header_row").alias("header_row"),
     )
 
 
 def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
-    """The shared per-row grid frame: cells → per-row rollup → header detect /
-    column classification / spec vote / fill-down / clean chain / A2 grouping,
-    ALL as window functions over the single page-key partitioning — no
-    filtering, so page-level consumers (pages metadata, fused page lines) see
+    """The per-row grid frame behind :func:`extract_page_lines`: cells →
+    per-row rollup → header detect / column classification / spec vote /
+    fill-down / clean chain / A2 grouping, ALL as window functions over the
+    single page-key partitioning — no filtering, so the page aggregate sees
     every page including empty/failed ones.
 
     Row-level predicates become flags instead of filters:
@@ -418,16 +378,14 @@ def _enriched_rows(grids: DataFrame) -> tuple[DataFrame, list[str]]:
     r = r.withColumn("is_data", is_data)
 
     w = Window.partitionBy(*PAGE).orderBy("row").rowsBetween(Window.unboundedPreceding, 0)
+    # staged F1→F2/F3 (see cleaners.extract_ids_staged): a row with no bulk
+    # cell to read gets "" from the null source, which the nullif below
+    # drops from the fill-down exactly like a miss.
+    r = C.extract_ids_staged(
+        r, F.when(F.col("is_data") & (F.col("bulk") != ""), F.col("bulk")), "t_ext", "p_ext"
+    )
     r = (
-        r.withColumn(
-            "t_ext",
-            F.when(F.col("is_data") & (F.col("bulk") != ""), C.extract_test_number(F.col("bulk"))),
-        )
-        .withColumn(
-            "p_ext",
-            F.when(F.col("is_data") & (F.col("bulk") != ""), C.extract_prescription_number(F.col("bulk"))),
-        )
-        .withColumns({
+        r.withColumns({
             "test_number": F.coalesce(
                 F.last(F.nullif("t_ext", F.lit("")), True).over(w), F.lit("")),
             "prescription_number": F.coalesce(

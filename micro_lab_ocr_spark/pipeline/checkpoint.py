@@ -117,8 +117,7 @@ class CheckpointedExtraction:
         # per checkpoint bucket the span-ref projection is bounded by the
         # bucket size, so broadcast is the right default; pass "shuffle_refs"
         # for very large buckets / bucketed media tables (see
-        # pipeline.extract.normalize_spans). "auto" would fire a media count
-        # per bucket — counted once here instead if requested.
+        # pipeline.extract.normalize_spans).
         self.media_join = media_join
         # Set ONLY when the media table was written co-partitioned with the
         # docs layout (catalog.write_media_copartitioned: media rows bucketed
@@ -209,14 +208,8 @@ class CheckpointedExtraction:
             if media_col is None:
                 media = media.drop("bucket")
         # probe the media side ONCE — normalize_spans would otherwise fire a
-        # driver-side isEmpty() action per batch (16+ eager scans per job);
-        # under media_join="auto" the same single pass supplies the count.
-        media_join, media_count = self.media_join, None
-        if media_join == "auto":
-            media_count = 0 if media is None else media.count()
-            media_present = media_count > 0
-        else:
-            media_present = media is not None and not media.isEmpty()
+        # driver-side isEmpty() action per batch (16+ eager scans per job)
+        media_present = media is not None and not media.isEmpty()
 
         def run_batch(batch: list[int]) -> list[BucketLineage]:
             """ONE Spark plan + ONE dynamic-partition-overwrite write for a
@@ -230,7 +223,7 @@ class CheckpointedExtraction:
                 batch_media = media.where(media_col.isin(batch)).drop("bucket")
             out = normalize_spans(
                 batch_docs, batch_media, media_present=media_present,
-                media_join=media_join, media_count=media_count,
+                media_join=self.media_join,
             ).withColumn("bucket", bucket_expr("doc_id", n))
             # per-bucket lineage metrics ride the WRITE itself (Observation /
             # CollectMetrics) — re-reading the written output for stats would

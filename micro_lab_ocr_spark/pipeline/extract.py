@@ -21,10 +21,9 @@ media scan and the decode kernels run in the scan's own stage (right when the
 refs side is bounded, e.g. per checkpoint bucket); under ``"shuffle_refs"``
 nothing is force-broadcast and the narrow refs exchange to meet a
 media table stored bucketed on media_ref (catalog.write_media_bucketed /
-Iceberg ``bucket(N, media_ref)`` + SPJ), whose scan plans NO exchange;
-``"auto"`` picks by a measured media count. With the docs table bucketed by
-doc_id (Iceberg ``bucket(N, doc_id)``) the W2 window and the final reassembly
-reuse storage partitioning (SPJ) too. The Upstage page kernel is an Arrow-batched
+Iceberg ``bucket(N, media_ref)`` + SPJ), whose scan plans NO exchange. With
+the docs table bucketed by doc_id (Iceberg ``bucket(N, doc_id)``) the W2
+window and the final reassembly reuse storage partitioning (SPJ) too. The Upstage page kernel is an Arrow-batched
 mapInPandas (one page per row — batch-level vectorization; per SURVEY §4.3 the
 FIFO fallback state is doc-local and deterministic). The Azure grid path is
 pure Catalyst — see operators/grid_extract.py. Arrow batches are capped at
@@ -214,9 +213,7 @@ def normalize_spans(
     media: DataFrame | None,
     salt_buckets: int = 0,
     media_present: bool | None = None,
-    media_join: str = "auto",
-    broadcast_ref_limit: int = 10_000_000,
-    media_count: int | None = None,
+    media_join: str = "broadcast",
 ) -> DataFrame:
     """docs(doc_id, spans:array<struct<kind,text,media_ref,offset>>) +
     media(media_ref, content:binary) → (doc_id, spans) normalized.
@@ -230,23 +227,15 @@ def normalize_spans(
     ``media_join`` picks how span refs meet media content (the content bytes
     NEVER shuffle or broadcast under any mode):
 
-    * ``"broadcast"`` — the narrow span-ref projection broadcasts onto the
-      media scan; decode kernels run in the scan's own stage. Right when the
-      refs side is bounded (per checkpoint bucket). UNBOUNDED refs through
-      the driver is the round-2 flagged risk — hence:
+    * ``"broadcast"`` (default) — the narrow span-ref projection broadcasts
+      onto the media scan; decode kernels run in the scan's own stage. Right
+      when the refs side is bounded (per checkpoint bucket). UNBOUNDED refs
+      through the driver is the round-2 flagged risk — hence:
     * ``"shuffle_refs"`` — no forced broadcast: the refs side (still narrow)
       shuffles to meet the media scan. With media stored as a bucketed table
       on media_ref (``catalog.write_media_bucketed`` / Iceberg
       ``bucket(N, media_ref)``), the media side needs NO exchange — content
-      flows scan→join→decode within one stage; only ref rows cross the wire.
-    * ``"auto"`` (default) — probe the media-table row count (one
-      column-pruned action, parquet metadata-cheap; pass ``media_count`` to
-      skip it) and pick: ≤ ``broadcast_ref_limit`` → broadcast, else
-      shuffle_refs. The boundedness assumption becomes a measured fact.
-      (Media rows bound the MATCHED ref set; a corpus where vastly many
-      spans share few media rows would under-estimate the spans-side
-      projection — such sharing is outside this engine's data model, where
-      each media row is referenced by one span.)"""
+      flows scan→join→decode within one stage; only ref rows cross the wire."""
     spans = docs.select(
         "doc_id",
         F.explode("spans").alias("s"),
@@ -310,11 +299,8 @@ def normalize_spans(
     # passes through unchanged via the *_missing arms, never lost.
     media = media.where(F.col("content").isNotNull())
 
-    if media_join == "auto":
-        n_media = media_count if media_count is not None else media.count()
-        media_join = "broadcast" if n_media <= broadcast_ref_limit else "shuffle_refs"
     if media_join not in ("broadcast", "shuffle_refs"):
-        raise ValueError(f"media_join must be broadcast|shuffle_refs|auto, got {media_join!r}")
+        raise ValueError(f"media_join must be broadcast|shuffle_refs, got {media_join!r}")
     # b() marks the SMALL side of every ref join. In broadcast mode it pins a
     # BroadcastHashJoin (refs ride onto the media scan — zero exchanges); in
     # shuffle_refs mode the hint is dropped and the narrow refs exchange to

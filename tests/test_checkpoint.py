@@ -88,21 +88,6 @@ def test_checkpoint_over_bucketed_catalog_layout(spark, small_corpus, tmp_path):
         assert got[d["doc_id"]] == ox.normalize_document(d["doc_id"], d["spans"], media_map)
 
 
-def test_salting_marks_heavy_docs(spark):
-    from micro_lab_ocr_spark.operators.salting import salt_spans
-
-    rows = [("heavy", i) for i in range(50)] + [("light", i) for i in range(3)]
-    df = spark.createDataFrame(rows, "doc_id string, offset int")
-    salted = salt_spans(df, heavy_threshold=10, salt_buckets=4)
-    out = salted.groupBy("doc_id").agg(F.countDistinct("salt").alias("n_salts")).collect()
-    by_doc = {r["doc_id"]: r["n_salts"] for r in out}
-    assert by_doc["heavy"] == 4      # spread over all salt buckets
-    assert by_doc["light"] == 1      # untouched
-    # reassembly-by-offset invariant: salts never permute content order
-    heavy = salted.where(F.col("doc_id") == "heavy").orderBy("offset").collect()
-    assert [r["offset"] for r in heavy] == list(range(50))
-
-
 def test_salted_reassembly_matches_oracle(spark, small_corpus):
     """normalize_spans with skew-salted reassembly must produce byte-identical
     span sequences (content-order sort, never task order)."""

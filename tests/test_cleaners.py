@@ -53,14 +53,22 @@ def _collect_map(df, incol, outcol):
     return {r[incol]: r[outcol] for r in df.collect()}
 
 
+def _clean_all_days(df):
+    """One staged clean over ``value`` with every day as an output
+    (``cfu_<day>``) — the shape the grid extraction runs."""
+    return C.clean_cfu_staged(
+        df, {"v": F.col("value")}, [("v", day, f"cfu_{day}") for day in DAYS]
+    )
+
+
 def test_clean_cfu_value_parity(spark, cfu_df):
-    for day in DAYS:
-        got = _collect_map(
-            cfu_df.withColumn("out", C.clean_cfu_value(F.col("value"), day)), "value", "out"
-        )
-        for v in CFU_CORPUS:
-            expected = O.clean_cfu_value(v, day)
-            assert got[v] == expected, f"day={day} value={v!r}: spark={got[v]!r} oracle={expected!r}"
+    rows = _clean_all_days(cfu_df).collect()
+    assert len(rows) == len(CFU_CORPUS)
+    for r in rows:
+        v = r["value"]
+        for day in DAYS:
+            got, expected = r[f"cfu_{day}"], O.clean_cfu_value(v, day)
+            assert got == expected, f"day={day} value={v!r}: spark={got!r} oracle={expected!r}"
 
 
 def test_fix_less_than_10_parity(spark, cfu_df):
@@ -136,14 +144,7 @@ LOG_KNOWN_ANSWERS = [
 
 def test_log_known_answers(spark):
     df = spark.createDataFrame([(r, d) for r, d, _ in LOG_KNOWN_ANSWERS], "value string, day string")
-    out = df.withColumn(
-        "cleaned",
-        F.when(F.col("day") == "0", C.clean_cfu_value(F.col("value"), "0"))
-        .when(F.col("day") == "7", C.clean_cfu_value(F.col("value"), "7"))
-        .when(F.col("day") == "14", C.clean_cfu_value(F.col("value"), "14"))
-        .otherwise(C.clean_cfu_value(F.col("value"), "28")),
-    ).collect()
-    got = {(r["value"], r["day"]): r["cleaned"] for r in out}
+    got = {(r["value"], r["day"]): r[f"cfu_{r['day']}"] for r in _clean_all_days(df).collect()}
     for raw, day, expected in LOG_KNOWN_ANSWERS:
         assert got[(raw, day)] == expected, f"({raw!r}, day {day})"
         assert O.clean_cfu_value(raw, day) == expected
@@ -193,11 +194,8 @@ BULK_CORPUS = [
 
 def test_extract_test_info_parity(spark):
     df = spark.createDataFrame([(v,) for v in BULK_CORPUS], "value string")
-    out = df.select(
-        "value",
-        C.extract_test_number(F.col("value")).alias("test"),
-        C.extract_prescription_number(F.col("value")).alias("presc"),
-    ).collect()
+    out = C.extract_ids_staged(df, F.col("value"), "test", "presc").collect()
+    assert len(out) == len(BULK_CORPUS)
     for r in out:
         exp_t, exp_p = O.extract_test_info_from_row(r["value"])
         assert r["test"] == exp_t, f"{r['value']!r}: test {r['test']!r} != {exp_t!r}"

@@ -97,11 +97,11 @@ def test_pipeline_independent_of_oracle():
     import re
 
     from micro_lab_ocr_spark.kernels import upstage
-    from micro_lab_ocr_spark.operators import drm, fallback, grid_extract, salting
+    from micro_lab_ocr_spark.operators import drm, fallback, grid_extract
     from micro_lab_ocr_spark.pipeline import checkpoint
 
     imp = re.compile(r"^\s*(from|import)\s+\S*oracle", re.MULTILINE)
-    for mod in (px, upstage, grid_extract, fallback, salting, drm, checkpoint):
+    for mod in (px, upstage, grid_extract, fallback, drm, checkpoint):
         assert not imp.search(inspect.getsource(mod)), mod.__name__
 
 
@@ -137,11 +137,12 @@ def test_drm_pdf_spans_pass_through(spark):
 
 def test_grid_records_parity_targeted(spark):
     """Azure grid extraction: Catalyst vs oracle on targeted grid shapes
-    (keyword header / strain-keyword header / headerless / spec variants)."""
+    (keyword header / strain-keyword header / headerless / spec variants),
+    through the production entry point: each page's serialized ``lines``
+    and its ``date_info``."""
     import random
 
-    from pyspark.sql import functions as F
-
+    from micro_lab_ocr_spark import spanspec
     from micro_lab_ocr_spark.operators import grid_extract
 
     rng = random.Random(7)
@@ -152,36 +153,24 @@ def test_grid_records_parity_targeted(spark):
     df = spark.createDataFrame(
         rows, "doc_id string, offset int, cells array<struct<row:int,col:int,text:string>>"
     )
-    records, pages = grid_extract.extract(df)
-    got_records = {}
-    for r in records.orderBy("doc_id", "group_id", "strain_rank", "row").collect():
-        got_records.setdefault(r["doc_id"], []).append(
-            {
-                "test_number": r["test_number"],
-                "prescription_number": r["prescription_number"],
-                "strain": r["strain"],
-                "cfu_0day": r["cfu_0day"],
-                "cfu_7day": r["cfu_7day"],
-                "cfu_14day": r["cfu_14day"],
-                "cfu_28day": r["cfu_28day"],
-                "judgment": r["judgment"],
-                "final_judgment": r["final_judgment"],
-            }
-        )
-    got_dates = {
-        r["doc_id"]: (r["date_info"].asDict() if r["date_info"] else {})
-        for r in pages.collect()
-    }
+    pages = {r["doc_id"]: r for r in grid_extract.extract_page_lines(df).collect()}
+    assert set(pages) == {f"g{i:03d}" for i in range(len(grids))}
+    assert any(p["lines"] for p in pages.values()), "no page yielded records"
     bad = []
     for i, g in enumerate(grids):
         doc = f"g{i:03d}"
         grid = ox.grid_from_cells(g)
-        exp_records = ox.extract_grid_records(grid)
+        exp_lines = "\n".join(
+            "|".join(rec[f] for f in spanspec.RECORD_FIELDS)
+            for rec in ox.extract_grid_records(grid)
+        )
         exp_dates = oc.extract_date_info_from_grid(grid)
-        if got_records.get(doc, []) != exp_records:
-            bad.append((doc, "records", got_records.get(doc, [])[:2], exp_records[:2]))
-        if got_dates.get(doc, {}) != exp_dates:
-            bad.append((doc, "dates", got_dates.get(doc), exp_dates))
+        got = pages[doc]
+        got_dates = got["date_info"].asDict() if got["date_info"] else {}
+        if got["lines"] != exp_lines:
+            bad.append((doc, "lines", got["lines"][:200], exp_lines[:200]))
+        if got_dates != exp_dates:
+            bad.append((doc, "dates", got_dates, exp_dates))
     assert not bad, f"{len(bad)} grid mismatches; first: {bad[:2]}"
 
 

