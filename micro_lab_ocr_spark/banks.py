@@ -1,15 +1,21 @@
 """Shared pattern vocabularies of the reference's cleaning banks.
 
-Single source of truth consumed by BOTH the pure-Python oracle
-(:mod:`micro_lab_ocr_spark.oracle`) and the Catalyst Column expressions
-(:mod:`micro_lab_ocr_spark.functions.cleaners`), so the two implementations
-cannot drift. Every constant cites the reference behavior it restates
-(semantics only — no code is copied; see SURVEY.md §2.7).
+Single source of truth consumed by the pure-Python oracle
+(:mod:`micro_lab_ocr_spark.oracle`), the Catalyst Column expressions
+(:mod:`micro_lab_ocr_spark.functions.cleaners`) and the production page
+kernels (:mod:`micro_lab_ocr_spark.kernels.upstage`,
+:mod:`micro_lab_ocr_spark.kernels.grid`), so the implementations cannot
+drift. The W8/A7 vocabularies and the *_ROW_PATTERNS have engine consumers
+only; the oracle keeps its own copies of those. Every constant cites the
+reference behavior it restates (semantics only — no code is copied; see
+SURVEY.md §2.7).
 
 Reference citations:
   * LESS_THAN_10_LITERALS .. LT10_*      — `backend_preservation.py:1278-1440` (F6)
   * PRESCRIPTION_PATTERNS                — `backend.py:450-466` (F2)
   * TEST_NUMBER grammar + repairs        — `backend.py:473-505` (F3)
+  * *_ROW_PATTERNS (Azure bulk-name cell) — `backend_preservation.py:925-1007` (F2/F3)
+  * HEADER_*_KEYWORDS / CFU / spec value  — `backend_preservation.py:737-923` (W8, A7)
   * STRAIN_SYNONYMS / STRAIN_ORDER       — `backend_preservation.py:1170-1203` (F12)
   * NOISE / merged-cell / scientific     — `backend_preservation.py:1205-1501` (F4/F5/F7)
   * judgment chars                       — `backend_preservation.py:1602-1613` (F13)
@@ -94,6 +100,47 @@ TEST_NUMBER_CORRECT = r"\b(\d{2}[A-L]\d{2}I\d{2,3})\b"
 TEST_NUMBER_I_AS_1 = r"\b(\d{2}[A-L]\d{2}1\d{2,3})\b"
 TEST_NUMBER_MISSING_I = r"\b(\d{2}[A-L]\d{5,6})\b"
 TEST_NUMBER_SPACED = r"(\d{2})([A-L])(\d)\s+(\d)(\d{2,3})"
+
+# F3/F2 — Azure single-row variant over one bulk-name cell
+# (`backend_preservation.py:925-1007`): the first matching pattern wins; the
+# test# then gets its I/1 and |/! repairs.
+TEST_NUMBER_ROW_PATTERNS: list[str] = [
+    r"\b(2[0-9][A-Z]\d{2}[I!|1]\d{2})\b",
+    r"\b(2[0-9][E]\d{2}1\d{2})\b",
+]
+PRESCRIPTION_ROW_PATTERNS: list[str] = [
+    r"\b([A-Z]{2,4}\d{4,5}[A-Z]?-[A-Z]{1,5}\d?)\b",
+    r"\b([A-Z]{3}\d{5}-[A-Z]{2,4})\b",
+    r"\b(M-[A-Z]{2,4}\d{4,5}-[A-Z]{1,4}\d?)\b",
+    r"\b([A-Z]{2,4}\d{3,6}-[A-Z]{1,5})\b",
+    r"\b([A-Z]{2,5}\d{4}-[A-Z]{1,3}\d{0,2})\b",
+    r"\b([A-Z]{1,3}\d{4,5}-[A-Z]{2,4}[A-Z]?)\b",
+    r"\b([A-Z]{2,4}\d{4}-[A-Z]\d[A-Z]{1,3})\b",
+    r"\b([A-Z]{2,4}\d{3,4}[A-Z]?-[A-Z]{1,4}\d*)\b",
+    r"\b([A-Z]{2,4}\d{4}-\d{1,2}[A-Z]{1,2})\b",
+    r"\b([A-Z]{2,4}\d{4,5}[A-Z]?-\s*[A-Z]{1,5}\d?)\b",
+    r"\b([A-Z]{2,4}\d{4,5}[A-Z]?-\s*[A-Z]+\d+[A-Z]+)\b",
+    r"\b([A-Z]{2,4}\d{4,5}[A-Z]?-[A-Z]{1,5}\d[A-Z]+)\b",
+    r"\b([A-Z]{2,4}\d{3,5}-[A-Z]{1,4}\d{1,2})\b",
+    r"\b([A-Z]{2,5}\d{3,5}-[A-Z]{2,5}[A-Z\d]*)\b",
+]
+
+# ---------------------------------------------------------------------------
+# W8 — Azure header detection (`backend_preservation.py:737-806`), matched
+# against a row's upper-cased cell text: a tier-1 keyword within the first 5
+# rows is the header; else the first strain-keyword row within 15, which is
+# the headerless sentinel (-1) when one of its cells already holds a CFU
+# value. A7 (`backend_preservation.py:808-923`): a cell right of the strain
+# column that looks like a specification votes that column as one.
+# ---------------------------------------------------------------------------
+HEADER_KEYWORDS: list[str] = ["CHALLENGED ORGANISM", "BULK NAME", "SPECIFICATION"]
+HEADER_STRAIN_KEYWORDS: list[str] = [
+    "E.COLI", "ESCHERICHIA", "P.AERUGINOSA", "PSEUDOMONAS",
+    "S.AUREUS", "STAPHYLOCOCCUS", "C.ALBICANS", "CANDIDA",
+    "A.BRASILIENSIS", "ASPERGILLUS", "균주", "STRAIN",
+]
+CFU_VALUE_PATTERN = r"\d+\.?\d*\s*[×xX]\s*10[\^]?\d+"
+SPEC_VALUE_PATTERN = r"^(≤[0-9]+[°cC]?|[0-9]{1,2}[°cC]?|SI)$"
 
 # ---------------------------------------------------------------------------
 # F12 — strain synonym map. Insertion order = match precedence (the reference

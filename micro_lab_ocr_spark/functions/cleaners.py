@@ -309,15 +309,6 @@ def normalize_strain(col: Column, passthrough: bool = False) -> Column:
     return let(col, inner)
 
 
-def strain_rank(col: Column) -> Column:
-    """A2 — canonical strain sort key (`backend_preservation.py:546-578`)."""
-    chain = None
-    for strain, rank in banks.STRAIN_ORDER.items():
-        cond = col == strain
-        chain = F.when(cond, F.lit(rank)) if chain is None else chain.when(cond, F.lit(rank))
-    return chain.otherwise(F.lit(999))
-
-
 # ---------------------------------------------------------------------------
 # F13 — judgment decode (`backend_preservation.py:1602-1613`)
 # ---------------------------------------------------------------------------
@@ -341,29 +332,6 @@ def extract_judgment(col: Column) -> Column:
 # `backend_preservation.py:925-1007`).
 # ---------------------------------------------------------------------------
 
-_TEST_PATTERNS_ROW = [
-    r"\b(2[0-9][A-Z]\d{2}[I!|1]\d{2})\b",
-    r"\b(2[0-9][E]\d{2}1\d{2})\b",
-]
-
-_PRESC_PATTERNS_ROW = [
-    r"\b([A-Z]{2,4}\d{4,5}[A-Z]?-[A-Z]{1,5}\d?)\b",
-    r"\b([A-Z]{3}\d{5}-[A-Z]{2,4})\b",
-    r"\b(M-[A-Z]{2,4}\d{4,5}-[A-Z]{1,4}\d?)\b",
-    r"\b([A-Z]{2,4}\d{3,6}-[A-Z]{1,5})\b",
-    r"\b([A-Z]{2,5}\d{4}-[A-Z]{1,3}\d{0,2})\b",
-    r"\b([A-Z]{1,3}\d{4,5}-[A-Z]{2,4}[A-Z]?)\b",
-    r"\b([A-Z]{2,4}\d{4}-[A-Z]\d[A-Z]{1,3})\b",
-    r"\b([A-Z]{2,4}\d{3,4}[A-Z]?-[A-Z]{1,4}\d*)\b",
-    r"\b([A-Z]{2,4}\d{4}-\d{1,2}[A-Z]{1,2})\b",
-    r"\b([A-Z]{2,4}\d{4,5}[A-Z]?-\s*[A-Z]{1,5}\d?)\b",
-    r"\b([A-Z]{2,4}\d{4,5}[A-Z]?-\s*[A-Z]+\d+[A-Z]+)\b",
-    r"\b([A-Z]{2,4}\d{4,5}[A-Z]?-[A-Z]{1,5}\d[A-Z]+)\b",
-    r"\b([A-Z]{2,4}\d{3,5}-[A-Z]{1,4}\d{1,2})\b",
-    r"\b([A-Z]{2,5}\d{3,5}-[A-Z]{2,5}[A-Z\d]*)\b",
-]
-
-
 def extract_ids_staged(df, src: Column, test_alias: str, presc_alias: str):
     """F1→F2/F3 test#/prescription# extraction from a bulk-name cell as
     STAGED projections: test# with its I/1 and |/! repairs (F3) and the
@@ -375,14 +343,14 @@ def extract_ids_staged(df, src: Column, test_alias: str, presc_alias: str):
     bench query). Adds exactly ``test_alias``/``presc_alias``."""
     df = df.withColumn("_eis_src", src)
     df = df.withColumn("_eis_pre", preprocess_bulk_name(F.col("_eis_src")))
-    raw_test = first_regexp_extract(F.col("_eis_pre"), _TEST_PATTERNS_ROW, group=1)
+    raw_test = first_regexp_extract(F.col("_eis_pre"), banks.TEST_NUMBER_ROW_PATTERNS, group=1)
     df = df.withColumn("_eis_traw", raw_test)
     test_out = F.translate(
         F.regexp_replace(F.col("_eis_traw"), r"([A-Z])(\d{2})1(\d{2})", "$1$2I$3"),
         "|!", "II",
     )
     presc_out = F.trim(
-        first_regexp_extract(F.col("_eis_pre"), _PRESC_PATTERNS_ROW, group=1)
+        first_regexp_extract(F.col("_eis_pre"), banks.PRESCRIPTION_ROW_PATTERNS, group=1)
     )
     df = df.withColumns(
         {
@@ -439,11 +407,6 @@ def parse_consecutive_dates(col: Column) -> Column:
         ),
     )
     return F.when(ok, dates).otherwise(F.array().cast("array<string>"))
-
-
-def fix_date_cell(col: Column) -> Column:
-    """F18 — '0.5 15' → '05 15'."""
-    return F.regexp_replace(col, r"^(\d)\.(\d)\s+(\d{1,2})$", "$1$2 $3")
 
 
 def parse_date_multi(col: Column) -> Column:

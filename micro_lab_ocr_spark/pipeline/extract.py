@@ -8,9 +8,9 @@ Dataflow (SURVEY §3.1 lifecycle, Spark-first):
       pdf         → DRM detect → media scan ⋈ broadcast(refs) →
                     mapInPandas(XY-cut kernel)                  [no content shuffle]
       image       → media scan ⋈ broadcast(refs) →
-                    mapInPandas(OCR kernel: MLIMG/PNG/JPEG,
-                    decode failure → ok=false) ──►
-                    grid_extract (pure Catalyst)                [1 shuffle: page]
+                    mapInPandas(OCR decode (MLIMG/PNG/JPEG) +
+                    Azure page pass → table span;
+                    decode failure → original span)             [no shuffle]
       table_html  → mapInPandas(Upstage page kernel) ──►
                     W2 date-carry window over (doc_id, offset)  [1 shuffle: doc_id]
     ──unionByName──► groupBy(doc_id) collect+sort → dense offsets [1 shuffle: doc_id]
@@ -25,8 +25,9 @@ Iceberg ``bucket(N, media_ref)`` + SPJ), whose scan plans NO exchange. With
 the docs table bucketed by doc_id (Iceberg ``bucket(N, doc_id)``) the W2
 window and the final reassembly reuse storage partitioning (SPJ) too. The Upstage page kernel is an Arrow-batched
 mapInPandas (one page per row — batch-level vectorization; per SURVEY §4.3 the
-FIFO fallback state is doc-local and deterministic). The Azure grid path is
-pure Catalyst — see operators/grid_extract.py. Arrow batches are capped at
+FIFO fallback state is doc-local and deterministic). The Azure grid page pass
+(kernels/grid.py) is page-local too and runs inside the OCR kernel, which
+already holds each page's cells in Python. Arrow batches are capped at
 512 rows (session.py) so media batches stay cache-friendly.
 """
 
@@ -39,7 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from micro_lab_ocr_spark import spanspec
-from micro_lab_ocr_spark.operators import drm, grid_extract
+from micro_lab_ocr_spark.operators import drm
 
 SPAN_SCHEMA = "doc_id string, offset int, kind string, text string, media_ref string"
 OUT_FIELDS = ["doc_id", "offset", "kind", "text", "media_ref"]
@@ -101,36 +102,33 @@ def _pdf_layout(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def _ocr_grids(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """OCR decode with per-row failure routing: magic-valid bytes whose
-    payload fails to decode (truncated PNG/JPEG, progressive JPEG, corrupt
-    MLIMG) yield ``ok=false`` and carry the ORIGINAL span text, so the
-    pipeline routes them to the pass-through arm — one corrupt blob must
+    """OCR decode + the Azure page pass (kernels/grid.py) → final span rows.
+    A decoded page becomes a ``table`` span; magic-valid bytes whose payload
+    fails to decode (truncated PNG/JPEG, progressive JPEG, corrupt MLIMG)
+    pass through as the ORIGINAL ``image`` span — one corrupt blob must
     never fail a 10^12-doc job (same contract as the pdf branch's
     no-text-layer fallback)."""
+    from micro_lab_ocr_spark.kernels import grid as gk
     from micro_lab_ocr_spark.kernels import ocr as ok
 
     for pdf in it:
-        cells, oks = [], []
-        for content in pdf["content"]:
+        kinds, texts = [], []
+        for content, orig_text in zip(pdf["content"], pdf["text"]):
             try:
-                cells.append(
-                    [
-                        {"row": r, "col": c, "text": t}
-                        for r, c, t in ok.decode_image(bytes(content))
-                    ]
-                )
-                oks.append(True)
+                cells = ok.decode_image(bytes(content))
             except ok.DECODE_ERRORS:
-                cells.append([])
-                oks.append(False)
+                kinds.append("image")
+                texts.append(orig_text)
+                continue
+            kinds.append("table")
+            texts.append(gk.page_text(cells))
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
                 "offset": pdf["offset"],
+                "kind": kinds,
+                "text": texts,
                 "media_ref": pdf["media_ref"],
-                "span_text": pdf["span_text"],
-                "ok": oks,
-                "cells": cells,
             }
         )
 
@@ -178,22 +176,8 @@ def _upstage_pages(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# serialization helpers (Catalyst mirror of spanspec.serialize_table)
+# serialization helper (Catalyst mirror of spanspec.serialize_table)
 # ---------------------------------------------------------------------------
-
-
-def _dates_line(date_struct: Column) -> Column:
-    return F.when(
-        date_struct.isNull(), F.lit(",,,")
-    ).otherwise(
-        F.concat_ws(
-            ",",
-            date_struct.getField("date_0"),
-            date_struct.getField("date_7"),
-            date_struct.getField("date_14"),
-            date_struct.getField("date_28"),
-        )
-    )
 
 
 def _with_dates(dates_line: Column, lines: Column) -> Column:
@@ -329,13 +313,15 @@ def normalize_spans(
         .unionByName(pdf_missing)
     )
 
-    # ---- image branch: OCR → Catalyst grid extraction ---------------------
+    # ---- image branch: OCR + Azure page pass in one kernel -----------------
     # Only decodable-magic rasters (MLIMG fixture container, real PNG, real
     # baseline JPEG — stdlib codecs) reach the OCR kernel; other bytes
     # (TIFF, junk) pass through unchanged like dangling refs, and
-    # magic-valid-but-corrupt payloads come back from the kernel with
-    # ok=false and pass through too — a 10^12-doc run must not crash on one
-    # undecodable blob.
+    # magic-valid-but-corrupt payloads come back from the kernel as the
+    # original span — a 10^12-doc run must not crash on one undecodable blob.
+    # The kernel holds each page's cells in Python already, so the whole
+    # page pass (kernels/grid.py) runs there and the kernel emits final span
+    # rows: no page-key exchange, window or re-aggregation in the plan.
     img_decodable = drm.is_decodable_image(F.col("content"))
     image_missing = image_spans.join(media_keys, "media_ref", "left_anti")
     image_undecodable = (
@@ -344,49 +330,11 @@ def normalize_spans(
         .join(b(image_spans), "media_ref")
         .select(*span_cols)
     )
-    grids = (
+    image_out = (
         media.where(img_decodable)
         .join(b(image_spans.select("doc_id", "offset", "media_ref", "text")), "media_ref")
-        .select(
-            "doc_id", "offset", "media_ref",
-            F.col("text").alias("span_text"), "content",
-        )
-        .mapInPandas(
-            _ocr_grids,
-            "doc_id string, offset int, media_ref string, span_text string, "
-            "ok boolean, cells array<struct<row:int,col:int,text:string>>",
-        )
-    )
-    # The kernel output feeds grid_extract ONLY; span identity, the original
-    # text and the decode-failure flag ride THROUGH the grid DAG as
-    # page-constant grouping keys (grid_extract passthrough mode). The fused
-    # extract_page_lines is the page-key exchange's SINGLE consumer: per-row
-    # enrichment windows feed one groupBy(page) that emits the serialized
-    # record block + page metadata together. The previous two-consumer shape
-    # (records→page_text groupBy ⋈ pages groupBy) read the exchange twice and
-    # ran the cells→rows aggregate twice — 654 MB shuffle read vs 338 MB
-    # written on the 36k-doc scaling corpus, in the memory-traffic-bound
-    # stage that caps scaling efficiency. Sort key (group_id, strain_rank,
-    # row) is unique per page; the 9 record fields are pre-concatenated into
-    # the final "|"-joined line BEFORE collect_list so the sort/agg carries a
-    # 4-field struct instead of 12.
-    paged = grid_extract.extract_page_lines(grids)
-    # `paged` covers every matched decodable-magic row 1:1 (explode_outer in
-    # grid_extract keeps failed/empty pages) and carries span identity plus
-    # the ok flag, so the whole image output — table spans AND decode-failure
-    # pass-throughs — is one CASE over it (no join, no further shuffle)
-    image_out = (
-        paged
-        .select(
-            "doc_id",
-            "offset",
-            F.when(F.col("ok"), F.lit("table")).otherwise(F.lit("image")).alias("kind"),
-            F.when(
-                F.col("ok"),
-                _with_dates(_dates_line(F.col("date_info")), F.col("lines")),
-            ).otherwise(F.col("span_text")).alias("text"),
-            "media_ref",
-        )
+        .select("doc_id", "offset", "media_ref", "text", "content")
+        .mapInPandas(_ocr_grids, SPAN_SCHEMA)
         .unionByName(image_missing)
         .unionByName(image_undecodable)
     )

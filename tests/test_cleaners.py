@@ -244,14 +244,6 @@ def test_date_ladder_parity(spark):
         assert got == exp, f"{r['m']}/{r['d']}: {got} != {exp}"
 
 
-def test_fix_date_cell_parity(spark):
-    vals = ["0.5 15", "0.6 12", "05 15", "5.5×10^5", "1.2 3"]
-    df = spark.createDataFrame([(v,) for v in vals], "value string")
-    got = _collect_map(df.withColumn("out", C.fix_date_cell(F.col("value"))), "value", "out")
-    for v in vals:
-        assert got[v] == O.fix_date_cell(v), f"{v!r}"
-
-
 # -- property: cleaner idempotence (SURVEY §5.2(4)) ---------------------------
 
 

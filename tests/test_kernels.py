@@ -1,5 +1,5 @@
 """Pure-Python kernel tests (no Spark session): OCR raster round-trip,
-HTML DOM/table/boilerplate, XY-cut reading order."""
+HTML DOM/table/boilerplate, XY-cut reading order, the Azure page pass."""
 
 from __future__ import annotations
 
@@ -7,6 +7,7 @@ import random
 
 import pytest
 
+from micro_lab_ocr_spark.kernels import grid as gk
 from micro_lab_ocr_spark.kernels import html as hk
 from micro_lab_ocr_spark.kernels import ocr as ok
 from micro_lab_ocr_spark.kernels import pdf as pk
@@ -373,3 +374,73 @@ def test_jpeg_color_444_decodes_to_luma():
     assert int(np.abs(dec.astype(int) - ref.astype(int)).max()) == 0  # identical Y path
     with pytest.raises(ValueError):
         jpeg.decode_jpeg(frame(0x22))  # 4:2:0 subsampled chroma unsupported
+
+
+_HDR = ["Bulk Name", "Challenged Organism", "0일", "7일", "14일", "28일", "판정", "FINAL 판정"]
+
+
+def _row(r, *texts):
+    return [(r, c, t) for c, t in enumerate(texts) if t is not None]
+
+
+_DEGENERATE_PAGES = {
+    "no cells": [],
+    "header row only": _row(0, *_HDR),
+    "headerless (-1)": (
+        _row(0, "PROD ABC1234-XY 24A12I34", "E.coli", "1.5x10^3", "40", "CIO", "<10", "O", "X")
+        + _row(1, None, "S.aureus", "2.0 x 10 4", "<10", "<10", "410", "O", "")
+        + _row(2, "PROD DEF5678-ZZ 24B01134", "Candida", "3X102", "90", "<10^2", "", "V", "O")
+    ),
+    "row-index gaps": (
+        _row(0, *_HDR)
+        + _row(2, "PROD ABC1234-XY 24A12I34", "P. aeruginosa", "1.0×10^5", "<10", "<10", "<10", "O", "O")
+        + _row(3, None, "E.coli", "1.2×10^5", "40", "<10", "<10", "O", "O")
+        + _row(7, None, "S.aureus", "1.3×10^5", "<10", "<10", "<10", "O", "O")
+        + _row(9, None, "C.albicans", "1.4×10^5", "<10", "<10", "<10", "O", "O")
+    ),
+    "fewer than 5 rows": (
+        _row(0, *_HDR)
+        + _row(1, None, "0.5 15", "05 22", "06 15", "06 22")
+        + _row(2, "PROD ABC1234-XY 24A12I34", "Staphylococcus", "2×10^4", "<10", "", "", "O", "")
+    ),
+    "pass-2 date not a calendar date": (
+        _row(0, "13/40", "02/30")
+        + _row(1, None, "1.2 3")
+        + _row(2, "BULK NAME", "STRAIN", "0일", "7일")
+        + _row(3, "24A12I34", "E.coli", "1×10^2", "<10")
+    ),
+    "strain normalizes to empty": (
+        _row(0, *_HDR)
+        + _row(1, "PROD ABC1234-XY 24A12I34", "Bacillus subtilis", "1×10^2", "<10", "<10", "<10", "O", "O")
+        + _row(2, None, "", "1×10^2", "<10", "<10", "<10", "O", "O")
+        + _row(3, None, "A.brasiliensis", "1×10^2", "<10", "<10", "<10", "O", "O")
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_DEGENERATE_PAGES))
+def test_grid_kernel_degenerate_pages_match_oracle(name):
+    """The Azure page kernel against the oracle's grid records and F19 dates
+    on pages the seeded fixtures never produce. The oracle reads rows by
+    index up to ``len(grid) - 1`` (so a gap page ends early), and a pass-2
+    date cell that is no calendar date falls through to the next cell."""
+    from micro_lab_ocr_spark.oracle import cleaners as oc
+    from micro_lab_ocr_spark.oracle import extract as ox
+
+    cells = _DEGENERATE_PAGES[name]
+    grid = ox.grid_from_cells(cells)
+    date_info, records = gk.extract_page(cells)
+    assert records == ox.extract_grid_records(grid)
+    assert date_info == oc.extract_date_info_from_grid(grid)
+    expected = {
+        "no cells": (0, {}),
+        "header row only": (0, {}),
+        "headerless (-1)": (3, {}),
+        "row-index gaps": (2, {}),  # rows 2 and 3 of len(grid) == 5 rows
+        "fewer than 5 rows": (1, {"date_0": "05/15", "date_7": "05/22",
+                                  "date_14": "06/15", "date_28": "06/22"}),
+        "pass-2 date not a calendar date": (1, {"date_0": "12/03", "date_7": "12/10",
+                                                "date_14": "12/17", "date_28": "12/31"}),
+        "strain normalizes to empty": (1, {}),
+    }[name]
+    assert (len(records), date_info) == expected

@@ -96,12 +96,12 @@ def test_pipeline_independent_of_oracle():
     import inspect
     import re
 
-    from micro_lab_ocr_spark.kernels import upstage
+    from micro_lab_ocr_spark.kernels import grid, upstage
     from micro_lab_ocr_spark.operators import drm, fallback, grid_extract
     from micro_lab_ocr_spark.pipeline import checkpoint
 
     imp = re.compile(r"^\s*(from|import)\s+\S*oracle", re.MULTILINE)
-    for mod in (px, upstage, grid_extract, fallback, drm, checkpoint):
+    for mod in (px, upstage, grid, grid_extract, fallback, drm, checkpoint):
         assert not imp.search(inspect.getsource(mod)), mod.__name__
 
 
@@ -136,7 +136,7 @@ def test_drm_pdf_spans_pass_through(spark):
 
 
 def test_grid_records_parity_targeted(spark):
-    """Azure grid extraction: Catalyst vs oracle on targeted grid shapes
+    """Azure grid extraction: page kernel vs oracle on targeted grid shapes
     (keyword header / strain-keyword header / headerless / spec variants),
     through the production entry point: each page's serialized ``lines``
     and its ``date_info``."""

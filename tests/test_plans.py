@@ -4,7 +4,7 @@ must actually appear in the plan — pinned here so regressions are loud.
 * filter pushdown reaches the parquet scan (PushedFilters),
 * column pruning reaches the scan (ReadSchema ⊂ table schema),
 * dimension joins broadcast (BroadcastHashJoin),
-* the grid-extraction DAG reads ONE page-key exchange, once,
+* the OCR kernel arm feeds the branch union with no exchange between,
 * no row-at-a-time Python UDFs anywhere (BatchEvalPython absent),
 * cleaner banks stay inside WholeStageCodegen,
 * a warm pass of the extraction plan compiles no generated class.
@@ -52,38 +52,53 @@ def test_no_row_python_udfs_anywhere(spark):
     assert "BatchEvalPython" not in entry_plan
 
 
-def test_extract_page_lines_fused_single_pass(spark):
-    """The production grid consumer (extract_page_lines) must stay FUSED:
-    one page-key exchange with ONE consumer — per-row window enrichment
-    feeding a single final groupBy(page). The previous two-consumer shape
-    (records→page_text groupBy ⋈ pages groupBy) read the exchange twice and
-    ran the cells→rows aggregate twice (654 MB shuffle read vs 338 MB
-    written on the scaling corpus, in the stage that caps scaling
-    efficiency)."""
-    from micro_lab_ocr_spark.operators import grid_extract
-    from micro_lab_ocr_spark.sources import fixtures
-    import random
+def _plan_paths(node, path=()):
+    """Every physical-plan node with its root-to-node path of node names;
+    descends into AQE's final plan and into each query stage's exchange."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_paths(node.executedPlan(), path)
+        return
+    path = (*path, node.nodeName())
+    yield node, path
+    if cls.endswith("QueryStageExec"):
+        yield from _plan_paths(node.plan(), path)
+        return
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_paths(kids.apply(i), path)
 
-    rng = random.Random(7)
-    rows = [(f"g{i}", 0, [tuple(c) for c in fixtures.make_grid(rng)]) for i in range(4)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, offset int, cells array<struct<row:int,col:int,text:string>>"
+
+def test_image_branch_is_one_kernel_arm(spark):
+    """The Azure page pass runs inside the OCR kernel, so the image branch
+    is one MapInPandas feeding the branch union directly: no page-key
+    exchange between them, and the only Window in the whole extraction plan
+    is the table_html branch's W2 date carry. The previous shape shuffled
+    the decoded cells on the page key and ran 7 Window operators over
+    them."""
+    from micro_lab_ocr_spark.pipeline.extract import normalize_spans
+    from micro_lab_ocr_spark.sources import fixtures
+
+    docs, media, _ = fixtures.generate_corpus(n_docs=12, seed=5)
+    docs_df = spark.createDataFrame(
+        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
+         for d in docs],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    paged = grid_extract.extract_page_lines(df)
-    paged.write.format("noop").mode("overwrite").save()  # materialize w/ AQE
-    plan = plan_of(paged)
-    assert plan.count("ENSURE_REQUIREMENTS") == 0, "unexpected implicit re-shuffle"
-    assert plan.count("REPARTITION_BY_NUM") == 1, "page-key exchange must be single"
-    assert "ReusedExchange" not in plan, "exchange consumed twice — fusion regressed"
-    for join_op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
-        assert join_op not in plan, f"{join_op} crept back into the fused grid DAG"
-    # exactly ONE cells→rows aggregate pair (partial+final ObjectHashAggregate
-    # on (page, row)) and one final page aggregate — no duplicated rollup
-    assert plan.count("ObjectHashAggregate") <= 4, "duplicated rollup aggregate"
-    # one Window operator per dependency level of the enrichment: window
-    # functions that do not read each other share a withColumns (18 Windows
-    # when every window column had its own withColumn)
-    assert plan.count("Window [") == 7, "window ladder regrew"
+    media_df = spark.createDataFrame(
+        [(m["media_ref"], bytearray(m["content"])) for m in media],
+        "media_ref string, content binary",
+    )
+    out = normalize_spans(docs_df, media_df)
+    out.write.format("noop").mode("overwrite").save()  # materialize w/ AQE
+    nodes = list(_plan_paths(out._jdf.queryExecution().executedPlan()))
+    windows = [n.toString() for n, _ in nodes if n.nodeName() == "Window"]
+    assert len(windows) == 1 and "carried" in windows[0], windows
+    assert "REPARTITION_BY_NUM" not in plan_of(out)
+    ocr = [p for n, p in nodes if n.nodeName() == "MapInPandas" and "_ocr_grids" in n.toString()]
+    assert len(ocr) == 1, "OCR kernel arm missing or duplicated"
+    below_union = ocr[0][len(ocr[0]) - ocr[0][::-1].index("Union"):]
+    assert not any("Exchange" in n or "QueryStage" in n for n in below_union), below_union
 
 
 def test_ngram_jaccard_is_hash_join(spark):
@@ -189,8 +204,8 @@ def test_image_kernel_evaluates_once(spark):
     Exchange reuse is fragile: consumers that prune different columns (or
     acquire different inferred not-null filters) canonicalize to DIFFERENT
     exchanges and silently re-run the kernel per branch — measured 3x media
-    decodes before the passthrough-keys structure (pipeline/extract.py,
-    grid_extract.extract). Counted with an accumulator, not plan text,
+    decodes before the passthrough-keys structure (pipeline/extract.py).
+    Counted with an accumulator, not plan text,
     because AQE prints reused stages with their full subtree."""
     from micro_lab_ocr_spark.pipeline import extract as px
     from micro_lab_ocr_spark.sources import fixtures
