@@ -1,5 +1,5 @@
-"""Production Azure-engine page pass (runs inside the OCR Arrow kernel; see
-pipeline/extract._ocr_grids).
+"""Production Azure-engine page pass (runs inside the extraction media
+kernel; see pipeline/extract._media_spans).
 
 One decoded page — the ``(row, col, text)`` cells of
 :func:`micro_lab_ocr_spark.kernels.ocr.decode_image` — becomes its

@@ -1,5 +1,6 @@
-"""Production Upstage-engine page parser (runs inside the table_html Arrow
-kernel; see pipeline/extract._upstage_pages).
+"""Production Upstage-engine page parser (:func:`parse_page` runs inside the
+extraction row kernel, pipeline/extract._span_rows, and the records query,
+queries._flagship_records).
 
 Re-creates the reference's HTML-table record extraction (`backend.py:312-426`
 row walk, `backend.py:115-171` FIFO fallback, `backend.py:648-739` clean
@@ -16,7 +17,8 @@ from __future__ import annotations
 import re
 from datetime import datetime, timedelta
 
-from micro_lab_ocr_spark import banks
+from micro_lab_ocr_spark import banks, spanspec
+from micro_lab_ocr_spark.kernels import html as hk
 
 # hard-coded column layouts (`backend.py:371,377`)
 _COLS_WITH_BULK = (3, 4, 5, 6, 7, 8)   # cfu0, cfu7, cfu14, cfu28, judg, final
@@ -286,3 +288,23 @@ def parse_page_records(rows) -> list[dict]:
         if any(rec[f].strip() for f in rec if f.startswith("cfu_")):   # P5
             records.append(rec)
     return records
+
+
+def parse_page(html: str) -> tuple[str, bool, str | None]:
+    """One ``table_html`` page → ``(lines, ok, own_date)``.
+
+    ``lines``: the page's records, "|"-joined :data:`spanspec.RECORD_FIELDS`
+    joined by "\\n" ("" when none). ``ok`` is False when the first table
+    fails the min-row gate (`backend.py:235-238`); such a page neither
+    carries nor consumes a date. ``own_date``: the page's own date header as
+    "d0,d7,d14,d28", or None — the W2 carry across pages happens downstream.
+    """
+    rows = hk.parse_first_table(html)
+    if not rows or len(rows) < 3:
+        return "", False, None
+    date_found = date_header(rows)
+    lines = "\n".join(
+        "|".join(str(r[f]) for f in spanspec.RECORD_FIELDS) for r in parse_page_records(rows)
+    )
+    own_date = ",".join(date_found[k] for k in spanspec.DATE_KEYS) if date_found else None
+    return lines, True, own_date

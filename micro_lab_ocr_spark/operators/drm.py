@@ -75,8 +75,9 @@ def is_decodable_image(content: Column) -> Column:
     and real baseline JPEG (stdlib codec, kernels/jpeg.py). Anything else
     (TIFF, WebP, junk bytes) passes through unchanged rather than crashing
     the decode stage; magic-valid bytes whose PAYLOAD fails to decode
-    (truncation, progressive JPEG) are caught in the kernel and routed to
-    the same pass-through arm (pipeline/extract._ocr_grids)."""
+    (truncation, progressive JPEG) are caught in the kernel, which emits
+    nothing for them, so the span passes through unchanged
+    (pipeline/extract._media_spans)."""
     return F.when(content.isNull(), F.lit(False)).otherwise(
         F.startswith(content, F.lit(MLIMG_MAGIC))
         | F.startswith(content, F.lit(PNG_MAGIC))

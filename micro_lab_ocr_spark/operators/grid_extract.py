@@ -2,7 +2,7 @@
 
 The page pass itself (W8 header detect, column map + A7 vote, W1 fill-down,
 F-chain cleaning, A2 sort, F19 dates) is :mod:`micro_lab_ocr_spark.kernels.grid`;
-the pipeline runs it inside the OCR kernel (pipeline/extract._ocr_grids).
+the pipeline runs it inside the media kernel (pipeline/extract._media_spans).
 This operator applies the same kernel to already-decoded grids.
 """
 

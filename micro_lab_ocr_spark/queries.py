@@ -1518,26 +1518,28 @@ def flagship_entry(spark, sf_dir, mult: int | None = None):
 # extraction — both expected blanks, not bugs).
 # ===========================================================================
 
-_UPSTAGE_SCHEMA = (
-    "doc_id string, offset int, lines string, ok boolean, "
-    "d0 string, d7 string, d14 string, d28 string"
-)
+
+def _upstage_lines(it):
+    """Arrow kernel: one table_html page per row → its record lines, via the
+    page parser the extraction row kernel runs (kernels.upstage.parse_page)."""
+    from micro_lab_ocr_spark.kernels import upstage as uk
+
+    for pdf in it:
+        yield pdf.assign(lines=[uk.parse_page(h)[0] for h in pdf["text"]])[["doc_id", "lines"]]
 
 
 def _flagship_records(spark, sf_dir):
     """(key, 9 record fields) rows out of the real table_html kernel path."""
     from micro_lab_ocr_spark import spanspec
-    from micro_lab_ocr_spark.pipeline import extract as px
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     docs = load(spark, sf_dir, "documents").repartition(n_part, "doc_id")
     k = F.col("doc_id")
     pages = docs.select(
         k.cast("string").alias("doc_id"),
-        F.lit(0).alias("offset"),
         _flagship_table_html(k, _flagship_test(k), _flagship_presc(k)).alias("text"),
     )
-    up = pages.mapInPandas(px._upstage_pages, _UPSTAGE_SCHEMA)
+    up = pages.mapInPandas(_upstage_lines, "doc_id string, lines string")
     lines = up.select(
         F.col("doc_id").cast("long").alias("key"),
         F.explode(F.split("lines", "\n")).alias("line"),

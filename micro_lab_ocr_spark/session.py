@@ -61,12 +61,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-        # subset co-partitioning: children partitioned on a subset of a
-        # join/agg's keys satisfy it without a re-shuffle. Written for the
-        # page-keyed grid DAG, which the OCR page kernel replaced; the
-        # extraction plan now plans the same 3 exchanges with it on or off
-        # (media_job corpus, seed 1). Kept until an A/B settles it.
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # ObjectHashAggregate sort-based fallback stays at the DEFAULT (128
         # keys): an A/B probe of the production job at local[16] measured the
         # raised-threshold hash path at +33% executor CPU and 4× the GC of
@@ -76,9 +70,8 @@ def get_spark(
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
         # generated-class cache sized to the plans, not the default 100: a
         # cold media_job pass (24-doc checkpointed extraction, local[4])
-        # compiles 69 generated classes since the grid DAG's Windows left
-        # the plan (137 with them), a query_ops pass ~106. At 100 the LRU
-        # cache thrashed and Janino recompiled ~265 classes per warm
+        # compiles 36 generated classes, a query_ops pass ~106. At 100 the
+        # LRU cache thrashed and Janino recompiled ~265 classes per warm
         # media_job pass when the grid DAG was in the plan (measured at
         # local[4]: 28–35 core-s per warm pass at 100, 15–21 at 1024, peak
         # RSS not higher). 1024 leaves room for a multi-bucket job's plans.

@@ -4,7 +4,7 @@ Generates the BASELINE.json input shape — ``(doc_id, spans:
 array<struct<kind,text,media_ref,offset>>)`` plus a media table (media_ref →
 bytes) and the enrichment progress master — with seeded OCR-noise drawn from
 the reference's misread banks so the cleaners have genuine work. A heavy-tail
-knob marks ~1% of docs as skewed (10×–100× span count) to exercise salting.
+knob marks ~1% of docs as skewed (10×–100× span count) to exercise heavy-doc handling.
 """
 
 from __future__ import annotations

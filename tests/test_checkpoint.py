@@ -1,4 +1,4 @@
-"""Checkpoint/lineage/resume + skew salting tests (SURVEY §4.2)."""
+"""Checkpoint/lineage/resume tests (SURVEY §4.2)."""
 
 from __future__ import annotations
 
@@ -84,19 +84,6 @@ def test_checkpoint_over_bucketed_catalog_layout(spark, small_corpus, tmp_path):
     got = {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in out.collect()}
     media_map = {m["media_ref"]: m["content"] for m in media}
     assert set(got) == {d["doc_id"] for d in docs}
-    for d in docs:
-        assert got[d["doc_id"]] == ox.normalize_document(d["doc_id"], d["spans"], media_map)
-
-
-def test_salted_reassembly_matches_oracle(spark, small_corpus):
-    """normalize_spans with skew-salted reassembly must produce byte-identical
-    span sequences (content-order sort, never task order)."""
-    from micro_lab_ocr_spark.pipeline.extract import normalize_spans
-
-    docs, media, docs_df, media_df = small_corpus
-    out = normalize_spans(docs_df, media_df, salt_buckets=8).collect()
-    got = {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in out}
-    media_map = {m["media_ref"]: m["content"] for m in media}
     for d in docs:
         assert got[d["doc_id"]] == ox.normalize_document(d["doc_id"], d["spans"], media_map)
 

@@ -325,26 +325,66 @@ def test_jpeg_image_spans_decode_end_to_end(spark):
                            "media_ref": "m://j/2", "offset": 2}
 
 
-def test_salted_reassembly_equivalent(spark, corpus, engine_result):
-    """The reassembly sort key (``offset``, the struct's first field) is
-    unique per doc after the branch union — each source span yields at most
-    one output row keyed by its original offset — so the lexicographic
-    struct sort is fully determined by the int field and both the plain and
-    the skew-salted reassembly branches must produce byte-identical output
-    regardless of task arrival order."""
-    docs, media, _ = corpus
+def _frames(spark, docs, media):
     docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
+        [(d["doc_id"], None if d["spans"] is None else
+          [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
          for d in docs],
         DOCS_SCHEMA,
     )
     media_df = spark.createDataFrame(
         [(m["media_ref"], bytearray(m["content"])) for m in media], MEDIA_SCHEMA
     )
-    plain = {r["doc_id"]: [s.asDict() for s in r["spans"]]
-             for r in px.normalize_spans(docs_df, media_df).collect()}
-    assert plain == engine_result
-    salted = {r["doc_id"]: [s.asDict() for s in r["spans"]]
-              for r in px.normalize_spans(docs_df, media_df, salt_buckets=4).collect()}
-    assert salted == engine_result
+    return docs_df, media_df
 
+
+def test_duplicate_media_rows_and_empty_docs(spark):
+    """A media_ref listed twice in the media table must not duplicate its
+    span: each span resolves to exactly one output row. Zero-span and
+    NULL-spans docs survive with an empty span list next to a non-empty
+    media table (test_edge_docs_not_lost covers them with empty media)."""
+    docs, media, _ = fixtures.generate_corpus(
+        n_docs=6, seed=3, skew=False, mix=fixtures.MEDIA_HEAVY_MIX
+    )
+    duplicated = media + media[:5]
+    docs = docs + [{"doc_id": "empty", "spans": []}, {"doc_id": "null", "spans": None}]
+    docs_df, media_df = _frames(spark, docs, duplicated)
+    got = {r["doc_id"]: [s.asDict() for s in r["spans"]]
+           for r in px.normalize_spans(docs_df, media_df).collect()}
+    assert set(got) == {d["doc_id"] for d in docs}
+    media_map = {m["media_ref"]: m["content"] for m in media}
+    dup_refs = {m["media_ref"] for m in media[:5]}
+    assert any(s["media_ref"] in dup_refs for d in docs for s in d["spans"] or [])
+    for d in docs:
+        expected = ox.normalize_document(d["doc_id"], d["spans"] or [], media_map)
+        assert got[d["doc_id"]] == expected, d["doc_id"]
+
+
+def test_mega_doc_matches_oracle(spark):
+    """One doc of >=10^4 spans, mostly text/html and stored out of offset
+    order, among ordinary docs: the W2 window and the reassembly both run
+    it on one task of the doc_id exchange and it must still match the
+    oracle span for span."""
+    import random
+
+    parts, media, _ = fixtures.generate_corpus(
+        n_docs=1500, seed=17, skew=False, mix=(0.80, 0.96, 0.985, 0.993)
+    )
+    # the ordinary docs below reuse the fixture's media_ref names: prefix
+    # the mega doc's refs so that each ref names one blob
+    spans = [dict(s, offset=i, media_ref=s["media_ref"] and "mega:" + s["media_ref"])
+             for i, s in enumerate(s for d in parts for s in d["spans"])]
+    assert len(spans) >= 10_000
+    random.Random(17).shuffle(spans)
+    docs, more_media, _ = fixtures.generate_corpus(n_docs=12, seed=18, skew=False)
+    docs = docs + [{"doc_id": "mega", "spans": spans}]
+    media = [dict(m, media_ref="mega:" + m["media_ref"]) for m in media] + more_media
+    docs_df, media_df = _frames(spark, docs, media)
+    got = {r["doc_id"]: [s.asDict() for s in r["spans"]]
+           for r in px.normalize_spans(docs_df, media_df).collect()}
+    media_map = {m["media_ref"]: m["content"] for m in media}
+    assert len(got["mega"]) == len(spans)
+    for d in docs:
+        assert got[d["doc_id"]] == ox.normalize_document(d["doc_id"], d["spans"], media_map), (
+            d["doc_id"]
+        )

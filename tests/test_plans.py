@@ -4,7 +4,8 @@ must actually appear in the plan — pinned here so regressions are loud.
 * filter pushdown reaches the parquet scan (PushedFilters),
 * column pruning reaches the scan (ReadSchema ⊂ table schema),
 * dimension joins broadcast (BroadcastHashJoin),
-* the OCR kernel arm feeds the branch union with no exchange between,
+* the extraction plan is one pass: one ref broadcast, two Arrow kernels,
+  one doc_id exchange shared by the W2 window and the reassembly,
 * no row-at-a-time Python UDFs anywhere (BatchEvalPython absent),
 * cleaner banks stay inside WholeStageCodegen,
 * a warm pass of the extraction plan compiles no generated class.
@@ -69,14 +70,7 @@ def _plan_paths(node, path=()):
         yield from _plan_paths(kids.apply(i), path)
 
 
-def test_image_branch_is_one_kernel_arm(spark):
-    """The Azure page pass runs inside the OCR kernel, so the image branch
-    is one MapInPandas feeding the branch union directly: no page-key
-    exchange between them, and the only Window in the whole extraction plan
-    is the table_html branch's W2 date carry. The previous shape shuffled
-    the decoded cells on the page key and ran 7 Window operators over
-    them."""
-    from micro_lab_ocr_spark.pipeline.extract import normalize_spans
+def _fixture_frames(spark):
     from micro_lab_ocr_spark.sources import fixtures
 
     docs, media, _ = fixtures.generate_corpus(n_docs=12, seed=5)
@@ -89,16 +83,50 @@ def test_image_branch_is_one_kernel_arm(spark):
         [(m["media_ref"], bytearray(m["content"])) for m in media],
         "media_ref string, content binary",
     )
+    return docs, media, docs_df, media_df
+
+
+def _output_names(node):
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def test_extraction_plan_is_one_pass(spark):
+    """The extraction plan explodes the docs once: the AQE final plan scans
+    the docs at most twice (span rows, ref projection), broadcasts only the
+    narrow ref projection, once, runs two Arrow kernels (row, media), and
+    has ONE hash exchange, on doc_id, which feeds both the W2 date-carry
+    Window and the reassembly aggregate. No join back to docs: the only
+    join feeds the media kernel."""
+    from micro_lab_ocr_spark.pipeline.extract import normalize_spans
+
+    _, _, docs_df, media_df = _fixture_frames(spark)
     out = normalize_spans(docs_df, media_df)
     out.write.format("noop").mode("overwrite").save()  # materialize w/ AQE
     nodes = list(_plan_paths(out._jdf.queryExecution().executedPlan()))
+    leaves = [n for n, _ in nodes if n.children().size() == 0]
+    docs_scans = [n for n in leaves if "spans" in _output_names(n)]
+    assert 1 <= len(docs_scans) <= 2, [n.toString() for n in docs_scans]
+
+    bx = [(n, p) for n, p in nodes if n.nodeName() == "BroadcastExchange"]
+    assert len(bx) == 1, [n.toString() for n, _ in bx]
+    assert _output_names(bx[0][0]) == {"doc_id", "pos", "offset", "kind", "media_ref"}
+    # never above the aggregate: the broadcast never carries assembled output
+    below_bx = {n.nodeName() for n, p in nodes if len(p) > len(bx[0][1])
+                and p[:len(bx[0][1])] == bx[0][1]}
+    assert not any("Aggregate" in name for name in below_bx), below_bx
+
+    assert sum(n.nodeName() == "MapInPandas" for n, _ in nodes) == 2
+    shuffles = [(n, p) for n, p in nodes if n.nodeName() == "Exchange"]
+    assert len(shuffles) == 1, [n.toString() for n, _ in shuffles]
+    exchange, path = shuffles[0]
+    assert exchange.toString().startswith("Exchange hashpartitioning(doc_id#")
+    assert "Window" in path and "ObjectHashAggregate" in path, path
+    assert path.index("ObjectHashAggregate") < path.index("Window"), path
     windows = [n.toString() for n, _ in nodes if n.nodeName() == "Window"]
-    assert len(windows) == 1 and "carried" in windows[0], windows
-    assert "REPARTITION_BY_NUM" not in plan_of(out)
-    ocr = [p for n, p in nodes if n.nodeName() == "MapInPandas" and "_ocr_grids" in n.toString()]
-    assert len(ocr) == 1, "OCR kernel arm missing or duplicated"
-    below_union = ocr[0][len(ocr[0]) - ocr[0][::-1].index("Union"):]
-    assert not any("Exchange" in n or "QueryStage" in n for n in below_union), below_union
+    assert len(windows) == 1 and "last(own_date" in windows[0], windows
+    joins = [p for n, p in nodes if "Join" in n.nodeName()]
+    assert len(joins) == 1 and "MapInPandas" in joins[0], joins
 
 
 def test_ngram_jaccard_is_hash_join(spark):
@@ -200,18 +228,15 @@ def test_shuffle_refs_media_join_content_stationary(spark, tmp_path):
 
 
 def test_image_kernel_evaluates_once(spark):
-    """The OCR kernel must decode each media row exactly ONCE at runtime.
-    Exchange reuse is fragile: consumers that prune different columns (or
-    acquire different inferred not-null filters) canonicalize to DIFFERENT
-    exchanges and silently re-run the kernel per branch — measured 3x media
-    decodes before the passthrough-keys structure (pipeline/extract.py).
-    Counted with an accumulator, not plan text,
-    because AQE prints reused stages with their full subtree."""
+    """The media kernel must decode each matched media row exactly ONCE at
+    runtime: a second consumer of the join would silently re-run the
+    decode stage. Counted with an accumulator, not plan text, because AQE
+    prints reused stages with their full subtree. The plan broadcasts the
+    ref projection once and has nothing to reuse."""
     from micro_lab_ocr_spark.pipeline import extract as px
-    from micro_lab_ocr_spark.sources import fixtures
 
     acc = spark.sparkContext.accumulator(0)
-    orig = px._ocr_grids
+    orig = px._media_spans
 
     def counting(it):
         def gen():
@@ -220,38 +245,33 @@ def test_image_kernel_evaluates_once(spark):
                 yield pdf
         return orig(gen())
 
-    docs, media, _ = fixtures.generate_corpus(n_docs=12, seed=5)
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
-         for d in docs],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-    media_df = spark.createDataFrame(
-        [(m["media_ref"], bytearray(m["content"])) for m in media],
-        "media_ref string, content binary",
-    )
+    docs, media, docs_df, media_df = _fixture_frames(spark)
     media_map = {m["media_ref"]: m["content"] for m in media}
-    expected = sum(
-        1 for d in docs for s in d["spans"]
-        if s["kind"] == "image" and media_map.get(s["media_ref"]) is not None
-        and (media_map[s["media_ref"]].startswith(b"MLIMG")
-             or media_map[s["media_ref"]].startswith(b"\x89PNG")
-             or media_map[s["media_ref"]].startswith(b"\xff\xd8\xff"))
-    )
-    assert expected > 0
-    old = px._ocr_grids
-    px._ocr_grids = counting
+
+    def decodable(s):
+        blob = media_map.get(s["media_ref"])
+        if blob is None:
+            return False
+        if s["kind"] == "image":
+            return blob.startswith((b"MLIMG", b"\x89PNG", b"\xff\xd8\xff"))
+        return s["kind"] == "pdf" and (
+            blob.startswith(b"MLPDF") or (blob.startswith(b"%PDF") and b"/Encrypt" not in blob)
+        )
+
+    expected = sum(1 for d in docs for s in d["spans"] if decodable(s))
+    assert any(s["kind"] == "image" and decodable(s) for d in docs for s in d["spans"])
+    px._media_spans = counting
     try:
         out = px.normalize_spans(docs_df, media_df)
         out.collect()
     finally:
-        px._ocr_grids = old
+        px._media_spans = orig
     assert acc.value == expected, (
-        f"OCR kernel processed {acc.value} rows for {expected} media rows — "
-        "a consumer branch re-evaluates the decode stage"
+        f"media kernel processed {acc.value} rows for {expected} media rows — "
+        "a consumer re-evaluates the decode stage"
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan
+    nodes = list(_plan_paths(out._jdf.queryExecution().executedPlan()))
+    assert sum(n.nodeName() == "BroadcastExchange" for n, _ in nodes) == 1
 
 
 def test_warm_pass_compiles_nothing(spark):
