@@ -361,35 +361,6 @@ def extract_ids_staged(df, src: Column, test_alias: str, presc_alias: str):
     return df.drop(*[c for c in df.columns if c.startswith("_eis_")])
 
 
-def extract_multiple_test_numbers(col: Column) -> Column:
-    """Upstage multi-extract (`backend.py:557-575`) → array<string>."""
-    t = F.upper(col)
-    t = F.regexp_replace(t, r"!", "I")
-    t = F.regexp_replace(t, r"-\s+", "-")
-    t = F.regexp_replace(t, r"\s+", " ")
-    matches = F.concat(
-        F.regexp_extract_all(t, F.lit(banks.TEST_NUMBER_CORRECT), 1),
-        F.regexp_extract_all(t, F.lit(banks.TEST_NUMBER_I_AS_1), 1),
-    )
-    repaired = F.transform(
-        matches,
-        lambda m: F.when(
-            F.substring(m, 6, 2).contains("1"),
-            F.concat(F.substring(m, 1, 5), F.lit("I"), m.substr(F.lit(7), F.length(m))),
-        ).otherwise(m),
-    )
-    return F.array_distinct(repaired)
-
-
-def extract_multiple_prescriptions(col: Column) -> Column:
-    t = F.upper(col)
-    t = F.regexp_replace(t, r"!", "I")
-    t = F.regexp_replace(t, r"-\s+", "-")
-    t = F.regexp_replace(t, r"\s+", " ")
-    parts = [F.regexp_extract_all(t, F.lit(p), 0) for p in banks.PRESCRIPTION_PATTERNS]
-    return F.array_distinct(F.concat(*parts))
-
-
 # ---------------------------------------------------------------------------
 # F15–F19 — dates
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ valid — these kernels only change WHERE the arithmetic runs. The Catalyst
 forms build 64 higher-order ``aggregate()`` calls per doc which evaluate
 interpreted (let()-bound HOF chains fall out of codegen; see
 tests/test_plans.py) — round-1's two slowest bench queries. One numpy pass
-per Arrow batch replaces them, mirroring the ``ann._signatures_np`` pattern.
+per Arrow batch replaces them, the shape of the ``ann._cosine_topk`` kernel.
 
 Tokenization parity: Python ``str.lower()`` here vs Spark/DuckDB ``lower()``
 — identical on ASCII and on case-less scripts (Hangul/CJK); chars where
@@ -176,7 +176,7 @@ def minhash_buckets_py(
 def make_minhash_kernel(shingle_k: int, num_hashes: int, bands: int):
     """(id, text) → (id, buckets): band keys only — the shingle arrays (the
     dominant bytes at scale) never leave the kernel; candidate verification
-    re-derives them for the tiny candidate set (make_shingle_kernel)."""
+    re-derives them for the tiny candidate set (make_pair_overlap_kernel)."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -185,21 +185,6 @@ def make_minhash_kernel(shingle_k: int, num_hashes: int, bands: int):
                 sh = word_shingles_py(t, shingle_k)
                 bk_col.append(minhash_buckets_py(sh, num_hashes, bands) if sh else [])
             yield pd.DataFrame({"id": pdf["id"], "buckets": bk_col})
-
-    return kernel
-
-
-def make_shingle_kernel(shingle_k: int):
-    """(id, text) → (id, shingles) — used only over candidate docs."""
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "shingles": [word_shingles_py(t, shingle_k) for t in pdf["text"]],
-                }
-            )
 
     return kernel
 

@@ -1,64 +1,30 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-* brute-force cosine top-k — the exact baseline: the (small) query matrix
-  rides in the kernel closure over the corpus; one narrow pass + per-query
-  top-k via window.
-* LSH-bucketed variant (random hyperplane signs) — the scale path: corpus and
-  queries hash to sign-pattern buckets; only same-bucket candidates are
-  scored. Probes > 1 multiply recall by scoring neighboring buckets.
+Every cosine top-k here runs ONE kernel (:func:`_cosine_topk`): the bounded
+query matrix rides in a mapInPandas closure over the corpus, each corpus
+Arrow batch takes one BLAS matmul against it, and only each batch's
+per-query top-k leaves the kernel; a ``row_number`` window ranks the union.
+The variants differ only in which (corpus, query) pairs may be ranked:
 
-All arithmetic in doubles with explicit rounding so the DuckDB oracle matches
-bit-for-bit at the rounded precision.
+* brute-force cosine top-k — the exact baseline: every pair.
+* LSH (random hyperplane signs) — a pair is a candidate when its sign
+  pattern matches in ANY of ``n_tables`` hash tables.
+* IVF-flat (sampled centroids) — a pair is a candidate when the corpus
+  vector's nearest centroid is among the query's ``n_probe`` nearest.
+
+The candidate sets are masks on the batch × queries cosine block, so the
+plan is one scan, one kernel and one ``query_id`` exchange whatever the
+variant. All arithmetic in doubles with explicit rounding so the DuckDB
+oracle matches bit-for-bit at the rounded precision.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from micro_lab_ocr_spark.functions import text as T
-
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _cosine_np_closure(pairs: DataFrame, qids, qmat) -> DataFrame:
-    """Score (query_id, corpus_id, cvec) pairs against a bounded query
-    matrix carried in the kernel closure — the qvec side never crosses the
-    Arrow boundary per pair (half the pair bytes of shipping both vectors,
-    no query-vector broadcast join). Row-wise einsum dot products in
-    float64, rounded to 4 dp — Catalyst higher-order-function dots are ~10×
-    slower per pair. ``qids`` must be sorted; rows whose query_id is unknown
-    never occur (candidates derive from the same query set). Same NaN policy
-    as :func:`brute_force_topk`: a pair with a zero-norm side scores NaN and
-    is dropped, so only finite cosines are ranked."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            idx = np.searchsorted(qids, pdf["query_id"].to_numpy())
-            q = qmat[idx]
-            c = np.stack(pdf["cvec"].to_numpy()).astype(np.float64)
-            dots = np.einsum("ij,ij->i", q, c)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.round(dots / (np.sqrt(np.einsum("ij,ij->i", q, q))
-                                       * np.sqrt(np.einsum("ij,ij->i", c, c))), 4)
-            keep = np.isfinite(cos)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy()[keep],
-                    "corpus_id": pdf["corpus_id"].to_numpy()[keep],
-                    "cosine": cos[keep],
-                }
-            )
-
-    return pairs.mapInPandas(score, "query_id long, corpus_id long, cosine double")
 
 
 def _collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str):
@@ -78,36 +44,36 @@ def _collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str):
     return ids, mat
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k. queries is expected to be small (same bounded-side
-    assumption as a broadcast dimension); the query matrix rides into a
+def _cosine_topk(corpus: DataFrame, queries: DataFrame, k: int, id_col: str,
+                 vec_col: str, corpus_keys=None, query_keys=None) -> DataFrame:
+    """Cosine top-k of every query over the corpus, optionally restricted to
+    candidate pairs. queries is expected to be small (same bounded-side
+    assumption as a broadcast dimension): its matrix rides into a
     mapInPandas kernel over the corpus, which scores one BLAS matmul per
-    Arrow batch and emits ONLY each batch's per-query top-k candidates. The
-    Python boundary therefore carries O(n_batches · |Q| · k) narrow rows
-    instead of O(|corpus| · |Q|) vector pairs (the previous join-then-score
-    shape moved every corpus vector |Q| times through Arrow — 8.2 GB and
-    64 s at 20k×400; this form moves each vector once). The final window
-    ranks the candidate union — exact, because every true global top-k row
-    is in its own batch's top-k under the same (cosine DESC, corpus_id ASC)
-    total order. Zero-norm vectors score NaN and are dropped with the
-    self-pairs (only finite cosines are ranked); an empty query side yields
-    an empty result."""
+    Arrow batch and emits ONLY each batch's per-query top-k. The Python
+    boundary therefore carries O(n_batches · |Q| · k) narrow rows instead of
+    O(|corpus| · |Q|) vector pairs, and each corpus vector crosses it once.
+    The final window ranks the candidate union — exact, because every true
+    global top-k row is in its own batch's top-k under the same
+    (cosine DESC, corpus_id ASC) total order.
+
+    Candidates: ``query_keys(qmat)`` runs once on the driver and gives a
+    |Q| × T integer key matrix; the kernel maps each batch through
+    ``corpus_keys`` to n × T, and a pair is a candidate when ANY column t
+    matches. The miss mask is built one column at a time, so it stays one
+    n × |Q| boolean, the shape of the cosine block. Non-candidates, self-pairs
+    and zero-norm vectors (NaN cosine) are never ranked; an empty query side
+    yields an empty result."""
+    from collections.abc import Iterator
+
     import numpy as np
+    import pandas as pd
 
     qids, qmat = _collect_query_matrix(queries, id_col, vec_col)
+    qkeys = query_keys(qmat) if query_keys is not None and len(qids) else None
     # STORED width on the wire: the kernel's astype(float64) of a float32
     # value is exact, so rounding is identical at half the Arrow bytes
     c = corpus.select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec"))
-
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qnorm = np.sqrt(np.einsum("ij,ij->i", qmat, qmat))
@@ -121,6 +87,12 @@ def brute_force_topk(
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.round((cm @ qmat.T) / (cnorm[:, None] * qnorm[None, :]), 4)
             cos[cids[:, None] == qids[None, :]] = -np.inf  # self-pairs excluded
+            if qkeys is not None:
+                ckeys = corpus_keys(cm)
+                miss = np.ones(cos.shape, dtype=bool)
+                for t in range(qkeys.shape[1]):
+                    miss &= ckeys[:, t, None] != qkeys[None, :, t]
+                cos[miss] = -np.inf
             kk = min(k, len(cids))
             # rows pre-sorted by corpus_id ⇒ stable argsort on -cos realizes
             # the exact (cosine DESC, corpus_id ASC) total order per query
@@ -140,49 +112,24 @@ def brute_force_topk(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
+def brute_force_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact cosine top-k: every (query, corpus) pair is a candidate of the
+    shared kernel (:func:`_cosine_topk`)."""
+    return _cosine_topk(corpus, queries, k, id_col, vec_col)
+
+
 def deterministic_planes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]]:
     """Fixed pseudo-random hyperplanes (seeded, reproducible across engines)."""
     import random
 
     rng = random.Random(seed)
     return [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def _signatures_np(df: DataFrame, id_out: str, dim: int, n_tables: int, n_planes: int,
-                   id_col: str, vec_col: str) -> DataFrame:
-    """(id, table, bucket) rows via one numpy matmul over all tables' planes
-    — the Catalyst expression form (n_tables·n_planes·dim terms) blows past
-    Janino's 64 KB method limit and falls back to slow interpreted eval."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        planes = np.array(
-            [p for t in range(n_tables) for p in deterministic_planes(dim, n_planes, seed=42 + t)],
-            dtype=np.float64,
-        ).T  # dim × (n_tables·n_planes)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            signs = (v @ planes) >= 0  # n × (n_tables·n_planes)
-            ids, tables, buckets = [], [], []
-            chars = np.where(signs, "1", "0")
-            for t in range(n_tables):
-                block = chars[:, t * n_planes:(t + 1) * n_planes]
-                keys = ["".join(row) for row in block]
-                ids.extend(pdf["id"].tolist())
-                tables.extend([t] * len(pdf))
-                buckets.extend(keys)
-            yield pd.DataFrame({"id": ids, "table": tables, "bucket": buckets})
-
-    # stored width on the wire; astype(float64) in the kernel is exact
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    out = base.mapInPandas(kernel, "id long, table int, bucket string")
-    return out.select(F.col("id").alias(id_out), "table", "bucket")
 
 
 def lsh_topk(
@@ -197,34 +144,27 @@ def lsh_topk(
 ) -> DataFrame:
     """Multi-table LSH cosine top-k: a pair is a candidate when its sign
     pattern matches in ANY of ``n_tables`` hash tables (the classical
-    recall-boosting construction). At 100 TB this avoids the full cross
-    product — fan-in per query ≈ n_tables · corpus / 2^n_planes."""
-    c = _signatures_np(corpus, "corpus_id", dim, n_tables, n_planes, id_col, vec_col)
-    q = _signatures_np(queries, "query_id", dim, n_tables, n_planes, id_col, vec_col)
-    # dedup candidates as bare id pairs FIRST (don't shuffle vectors through
-    # the distinct), then re-attach vectors and score with the numpy kernel
-    candidates = (
-        c.join(F.broadcast(q), ["table", "bucket"])
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id")
-        .dropDuplicates(["query_id", "corpus_id"])
-    )
-    corpus_vecs = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
-    )  # stored width; the scoring kernel widens exactly
-    # query matrix rides the scoring kernel's closure (bounded, same
-    # assumption as the broadcast it replaces): pair rows carry only the
-    # corpus vector — half the Arrow bytes, one join fewer. (Broadcasting
-    # the bare candidate pairs onto the corpus scan was A/B'd and LOST —
-    # building a ~500k-row broadcast relation costs more than the narrow
-    # equi-join it removes: 6.8 s vs 2.6 s at sf1.0.)
-    qids, qmat = _collect_query_matrix(queries, id_col, vec_col)
-    pairs = candidates.join(corpus_vecs, "corpus_id")
-    scored = _cosine_np_closure(
-        pairs.select("query_id", "corpus_id", "cvec"), qids, qmat
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    recall-boosting construction). Table t's ``n_planes`` hyperplanes are
+    ``deterministic_planes(dim, n_planes, seed=42 + t)``; a vector's sign
+    bits ``v @ planes >= 0`` pack into one integer code per table. Query
+    codes come once from the collected query matrix, corpus codes from the
+    same matmul per batch inside the shared kernel, so candidates cost one
+    (dim × n_tables·n_planes) product per batch and no join or shuffle."""
+    import numpy as np
+
+    if n_planes > 63:
+        raise ValueError(f"n_planes={n_planes}: a table's sign bits pack into an int64 code")
+    planes = np.array(
+        [p for t in range(n_tables) for p in deterministic_planes(dim, n_planes, seed=42 + t)],
+        dtype=np.float64,
+    ).T  # dim × (n_tables·n_planes)
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
+
+    def codes(v):
+        bits = ((v @ planes) >= 0).reshape(len(v), n_tables, n_planes)
+        return bits @ weights  # n × n_tables
+
+    return _cosine_topk(corpus, queries, k, id_col, vec_col, codes, codes)
 
 
 def _choose_blocks(n: int, max_block_rows: int, slots: int) -> int:
@@ -387,42 +327,6 @@ def sampled_centroids(corpus: DataFrame, stride: int,
     return ids, mat
 
 
-def _cells_np(df: DataFrame, id_out: str, cent_ids, cent_mat, n_probe: int,
-              id_col: str, vec_col: str) -> DataFrame:
-    """(id, cell) rows: each vector's ``n_probe`` nearest centroids by
-    cosine, rounded to 4 dp with ties broken toward the LOWEST centroid id —
-    the exact argsort the DuckDB oracle's ROW_NUMBER expresses, so cell
-    assignment is engine-portable. One numpy matmul per Arrow batch; the
-    centroid matrix rides into the workers via the closure (bounded)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        cnorm = np.sqrt(np.einsum("ij,ij->i", cent_mat, cent_mat))
-        cids = np.array(cent_ids, dtype=np.int64)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            vnorm = np.sqrt(np.einsum("ij,ij->i", v, v))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.round((v @ cent_mat.T) / (vnorm[:, None] * cnorm[None, :]), 4)
-            # stable argsort on -cos: rounded ties keep centroid-id order, and
-            # NaN (a zero-norm side) sorts last
-            top = np.argsort(-cos, axis=1, kind="stable")[:, :n_probe]
-            ids = np.repeat(pdf["id"].to_numpy(), top.shape[1])
-            cells = cids[top].reshape(-1)
-            yield pd.DataFrame({"id": ids, "cell": cells})
-
-    # stored width on the wire; astype(float64) in the kernel is exact
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    out = base.mapInPandas(kernel, "id long, cell long")
-    return out.select(F.col("id").alias(id_out), "cell")
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -433,44 +337,45 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat cosine top-k — the cell-partitioned ANN scale path next to
-    the sign-LSH variant: corpus vectors assign to their nearest centroid
-    cell (an inverted file), queries probe their ``n_probe`` nearest cells,
-    and only same-cell pairs are scored.
+    the sign-LSH variant: each corpus vector belongs to its nearest centroid
+    cell (an inverted file), each query probes its ``n_probe`` nearest
+    cells, and a pair is a candidate when the corpus cell is among the
+    query's probed cells. Nearness is cosine rounded to 4 dp with ties broken
+    toward the LOWEST centroid id — the exact order the DuckDB oracle's
+    ROW_NUMBER expresses, so cell assignment is engine-portable; a zero-norm
+    vector (NaN cosines) falls in the lowest-id cell.
 
-    Scale shape: the centroid set is a bounded model artifact (driver +
-    closure, like any broadcast dimension); the corpus takes ONE narrow
-    (id, cell) pass and ONE shuffle on the cell key; per-query fan-in ≈
-    n_probe/C of the corpus — at 10^12 docs C grows with the corpus so cells
-    stay bounded, and the inverted file would persist bucketed by cell so
-    repeated query batches join shuffle-free (same storage trick as the
-    bucketed media table). Exactness: recall < 1 when a true neighbor lives
-    in an unprobed cell (pinned by the recall-vs-brute test); candidates are
-    already unique (one cell per corpus vector, distinct probe cells per
-    query), so no dedup pass is needed."""
+    The centroid set is a bounded model artifact (driver + closure, like any
+    broadcast dimension). Query cells come once from the collected query
+    matrix; corpus cells cost one (dim × C) matmul per batch inside the
+    shared kernel. Exactness: recall < 1 when a true neighbor lives in an
+    unprobed cell (pinned by the recall-vs-brute test)."""
+    import numpy as np
+
     cent_ids, cent_mat = sampled_centroids(corpus, centroid_stride, id_col, vec_col)
     if not cent_ids:
         raise ValueError(
             f"centroid_stride={centroid_stride} sampled zero centroids (no "
             f"corpus {id_col} divisible by it) — lower the stride so the "
             "coarse quantizer has at least one cell")
-    c_cells = _cells_np(corpus, "corpus_id", cent_ids, cent_mat, 1, id_col, vec_col)
-    q_cells = _cells_np(queries, "query_id", cent_ids, cent_mat, n_probe, id_col, vec_col)
-    candidates = (
-        c_cells.join(F.broadcast(q_cells), "cell")
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id")
-    )
-    corpus_vecs = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
-    )  # stored width; the scoring kernel widens exactly
-    # same closure-scored shape as lsh_topk: pair rows carry only cvec
-    qids, qmat = _collect_query_matrix(queries, id_col, vec_col)
-    pairs = candidates.join(corpus_vecs, "corpus_id")
-    scored = _cosine_np_closure(
-        pairs.select("query_id", "corpus_id", "cvec"), qids, qmat
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    cent_norm = np.sqrt(np.einsum("ij,ij->i", cent_mat, cent_mat))
+    n_cells = min(n_probe, len(cent_ids))
+
+    def cells(v, n):
+        """Row-wise positions of the n nearest centroids (ids are sorted)."""
+        vnorm = np.sqrt(np.einsum("ij,ij->i", v, v))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.round((v @ cent_mat.T) / (vnorm[:, None] * cent_norm[None, :]), 4)
+        # stable argsort on -cos: rounded ties keep centroid-id order, and
+        # NaN (a zero-norm side) sorts last
+        return np.argsort(-cos, axis=1, kind="stable")[:, :n]
+
+    def corpus_cells(v):
+        # one cell per corpus row, repeated so column t meets probe t
+        return np.repeat(cells(v, 1), n_cells, axis=1)
+
+    return _cosine_topk(corpus, queries, k, id_col, vec_col,
+                        corpus_cells, lambda q: cells(q, n_cells))
 
 
 def quantize_int8(

@@ -76,7 +76,8 @@ def minhash_lsh_pairs(
     ``stats['oversize_buckets']`` (number of dropped bucket keys; requires
     one extra action on the tiny bucket-count aggregate).
 
-    Shape matters at 100 TB (mirrors ann.lsh_topk): the signature kernel
+    Shape matters at 100 TB (unlike ann.lsh_topk, neither side is bounded,
+    so candidates are a bucket self-join, not a mask): the signature kernel
     emits only (id, band-bucket keys) — the shingle arrays, the dominant
     bytes, never enter a shuffle. Bucket sizes are counted over a
     (bucket)-only projection, oversized keys (a tiny set) broadcast

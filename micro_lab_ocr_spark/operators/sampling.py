@@ -31,16 +31,6 @@ def hash_sample_flag(id_col: Column, threshold_hex: str) -> Column:
     return F.substring(F.md5(id_col.cast("string")), 1, width) < F.lit(threshold_hex)
 
 
-def hash_sample(df: DataFrame, id_col: str, threshold_hex: str) -> DataFrame:
-    """Deterministic sample of ``df`` at rate int(threshold_hex,16)/16**len.
-
-    e.g. ``threshold_hex='1a'`` keeps ~26/256 ≈ 10.2% of rows. Pure
-    map-side filter: survives pushdown to the parquet scan when ``id_col``
-    feeds no other expression, and never shuffles.
-    """
-    return df.where(hash_sample_flag(F.col(id_col), threshold_hex))
-
-
 def stratified_sample_summary(
     df: DataFrame,
     strata_col: str,

@@ -1,12 +1,12 @@
 """Operator-level tests: dedup recall on planted near-dups, SimHash pairing,
-enrichment join semantics, ANN recall of the LSH path vs brute force."""
+ANN recall of the LSH and IVF paths vs brute force."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from micro_lab_ocr_spark.operators import ann, dedup, enrich
+from micro_lab_ocr_spark.operators import ann, dedup
 
 
 @pytest.fixture(scope="module")
@@ -187,22 +187,6 @@ def test_minhash_oversize_bucket_guard(spark):
     assert stats["oversize_buckets"] == 4  # all 4 bands degenerate
 
 
-def test_enrich_join_fills_empty(spark):
-    records = spark.createDataFrame(
-        [("GB1-A", "25E15I14"), ("NOPE-X", "25E15I15")],
-        "prescription_number string, test_number string",
-    )
-    progress = spark.createDataFrame(
-        [("GB1-A", "크림", "O/W", "1팀", "글리세린 5%")],
-        "prescription_number string, product_name string, formulation string, "
-        "team string, preservative_info string",
-    )
-    out = {r["prescription_number"]: r for r in enrich.enrich_records(records, progress).collect()}
-    assert out["GB1-A"]["product_name"] == "크림"
-    assert out["NOPE-X"]["product_name"] == ""      # miss → '' not null
-    assert out["NOPE-X"]["preservative_info"] == ""
-
-
 def test_ann_lsh_recall_vs_brute(spark):
     import random
 
@@ -225,14 +209,20 @@ def test_ann_lsh_recall_vs_brute(spark):
 
 
 def test_brute_force_topk_empty_queries(spark):
-    """An empty query side yields an empty ranked result, not a kernel
-    crash in every task."""
+    """An empty query side ((0, 0) query matrix) yields an empty ranked
+    result, not a kernel crash in every task, for brute force and both
+    candidate masks."""
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(20)], "vec_id long, embedding array<float>"
     )
-    out = ann.brute_force_topk(emb, emb.where(F.lit(False)), k=5)
-    assert out.columns == ["query_id", "corpus_id", "cosine", "rank"]
-    assert out.collect() == []
+    none = emb.where(F.lit(False))
+    for out in (
+        ann.brute_force_topk(emb, none, k=5),
+        ann.lsh_topk(emb, none, dim=2, k=5, n_planes=2, n_tables=3),
+        ann.ivf_topk(emb, none, k=5, centroid_stride=5, n_probe=2),
+    ):
+        assert out.columns == ["query_id", "corpus_id", "cosine", "rank"]
+        assert out.collect() == []
 
 
 def test_ann_kernels_drop_zero_norm_vectors(spark):
@@ -384,8 +374,12 @@ def test_hash_sample_deterministic_and_near_rate(spark):
     from micro_lab_ocr_spark.operators import sampling
 
     df = spark.range(0, 4000).withColumnRenamed("id", "doc_id")
-    a = {r["doc_id"] for r in sampling.hash_sample(df, "doc_id", "1a").collect()}
-    b = {r["doc_id"] for r in sampling.hash_sample(df, "doc_id", "1a").collect()}
+    def sample(threshold_hex):
+        flag = sampling.hash_sample_flag(F.col("doc_id"), threshold_hex)
+        return {r["doc_id"] for r in df.where(flag).collect()}
+
+    a = sample("1a")
+    b = sample("1a")
     # pure function of the data: identical selection across runs (rand()/
     # TABLESAMPLE would not be — that is the operator's whole point)
     assert a == b
@@ -393,7 +387,7 @@ def test_hash_sample_deterministic_and_near_rate(spark):
     expected = 4000 * 26 / 256
     assert 0.75 * expected <= len(a) <= 1.25 * expected
     # widening the threshold strictly grows the sample (prefix monotonicity)
-    wider = {r["doc_id"] for r in sampling.hash_sample(df, "doc_id", "40").collect()}
+    wider = sample("40")
     assert a < wider
 
 
@@ -408,7 +402,7 @@ def test_stratified_summary_counts_consistent(spark):
            sampling.stratified_sample_summary(df, "lang", "doc_id", "20", "n_chars").collect()}
     assert set(out) == {"en", "de"}
     assert out["en"]["n_total"] == out["de"]["n_total"] == 250
-    flat = sampling.hash_sample(df, "doc_id", "20")
+    flat = df.where(sampling.hash_sample_flag(F.col("doc_id"), "20"))
     n_by_lang = {r["lang"]: r["n"] for r in flat.groupBy("lang").agg(F.count("*").alias("n")).collect()}
     for lang in ("en", "de"):
         assert out[lang]["n_sampled"] == n_by_lang.get(lang, 0)

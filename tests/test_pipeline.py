@@ -97,11 +97,11 @@ def test_pipeline_independent_of_oracle():
     import re
 
     from micro_lab_ocr_spark.kernels import grid, upstage
-    from micro_lab_ocr_spark.operators import drm, fallback, grid_extract
+    from micro_lab_ocr_spark.operators import drm, grid_extract
     from micro_lab_ocr_spark.pipeline import checkpoint
 
     imp = re.compile(r"^\s*(from|import)\s+\S*oracle", re.MULTILINE)
-    for mod in (px, upstage, grid, grid_extract, fallback, drm, checkpoint):
+    for mod in (px, upstage, grid, grid_extract, drm, checkpoint):
         assert not imp.search(inspect.getsource(mod)), mod.__name__
 
 

@@ -6,6 +6,7 @@ must actually appear in the plan — pinned here so regressions are loud.
 * dimension joins broadcast (BroadcastHashJoin),
 * the extraction plan is one pass: one ref broadcast, two Arrow kernels,
   one doc_id exchange shared by the W2 window and the reassembly,
+* each ANN query is one Arrow kernel under one query_id exchange,
 * no row-at-a-time Python UDFs anywhere (BatchEvalPython absent),
 * cleaner banks stay inside WholeStageCodegen,
 * a warm pass of the extraction plan compiles no generated class.
@@ -127,6 +128,27 @@ def test_extraction_plan_is_one_pass(spark):
     assert len(windows) == 1 and "last(own_date" in windows[0], windows
     joins = [p for n, p in nodes if "Join" in n.nodeName()]
     assert len(joins) == 1 and "MapInPandas" in joins[0], joins
+
+
+@pytest.mark.parametrize(
+    "name", ["ann_brute_cosine_topk", "ann_lsh_cosine_topk", "ann_ivf_cosine_topk"]
+)
+def test_ann_is_one_kernel(spark, name):
+    """Brute force, LSH and IVF share one kernel: candidates are a mask on
+    the batch × queries cosine block, so the final plan is one MapInPandas
+    over the corpus scan, no join, and one shuffle (query_id) under the
+    ranking window. A candidate join or a corpus-vector re-join shows up as
+    a second kernel, a join or a second exchange."""
+    df = Q.queries_dict()[name](spark, SF)
+    df.collect()  # materialize: the AQE final plan
+    nodes = list(_plan_paths(df._jdf.queryExecution().executedPlan()))
+    assert sum(n.nodeName() == "MapInPandas" for n, _ in nodes) == 1
+    assert not [n.nodeName() for n, _ in nodes if "Join" in n.nodeName()]
+    shuffles = [(n, p) for n, p in nodes if n.nodeName() == "Exchange"]
+    assert len(shuffles) == 1, [n.toString() for n, _ in shuffles]
+    exchange, path = shuffles[0]
+    assert exchange.toString().startswith("Exchange hashpartitioning(query_id#")
+    assert "Window" in path, path
 
 
 def test_ngram_jaccard_is_hash_join(spark):

@@ -1,6 +1,8 @@
 """Local replica of the driver's correctness gate: every queries() entry runs
 in Spark AND its oracle_sql() runs in DuckDB over the same sf0.001 parquet;
 row-count + column names + order-insensitive stringified values must match.
+The ANN queries run again over sf0.1, whose corpus spans several Arrow
+batches.
 """
 
 from __future__ import annotations
@@ -56,14 +58,33 @@ def _normalize(pdf):
     return [cols[i] for i in order], out
 
 
-@pytest.mark.parametrize("name", sorted(Q.queries_dict()))
-def test_query_matches_oracle(spark, ddb, name):
-    spdf = Q.queries_dict()[name](spark, SF_DIR).toPandas()
-    dpdf = ddb.execute(Q.oracle_sql_dict()[name]).fetch_df()
-
+def _assert_matches(spdf, dpdf, name):
     s_cols, s_norm = _normalize(spdf)
     d_cols, d_norm = _normalize(dpdf)
     assert s_cols == d_cols, f"{name}: columns {s_cols} != {d_cols}"
     assert len(s_norm) == len(d_norm), f"{name}: rows {len(s_norm)} != {len(d_norm)}"
     mism = [(a, b) for a, b in zip(s_norm, d_norm) if a != b][:3]
     assert not mism, f"{name}: first value mismatches {mism}"
+
+
+@pytest.mark.parametrize("name", sorted(Q.queries_dict()))
+def test_query_matches_oracle(spark, ddb, name):
+    spdf = Q.queries_dict()[name](spark, SF_DIR).toPandas()
+    _assert_matches(spdf, ddb.execute(Q.oracle_sql_dict()[name]).fetch_df(), name)
+
+
+@pytest.mark.parametrize(
+    "name", ["ann_brute_cosine_topk", "ann_ivf_cosine_topk", "ann_lsh_cosine_topk"]
+)
+def test_ann_matches_oracle_across_batches(spark, name):
+    """The ANN kernel keeps each Arrow batch's per-query top-k and the
+    window ranks their union. sf0.001's 500 vectors fit in one batch, so
+    the merge is checked on sf0.1's 2,000 (several batches)."""
+    sf_dir = "/root/testdata/sf0.1"
+    path = f"{sf_dir}/embeddings.parquet"
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    assert spark.read.parquet(path).count() > 2 * batch
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    spdf = Q.queries_dict()[name](spark, sf_dir).toPandas()
+    _assert_matches(spdf, con.execute(Q.oracle_sql_dict()[name]).fetch_df(), name)
