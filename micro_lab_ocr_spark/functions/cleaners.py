@@ -51,17 +51,6 @@ def let(col: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
-def let2(a: Column, b: Column, fn) -> Column:
-    """Two-input let-binding (see :func:`let`)."""
-    return F.element_at(
-        F.transform(
-            F.array(F.struct(a.alias("a"), b.alias("b"))),
-            lambda s: fn(s.getField("a"), s.getField("b")),
-        ),
-        1,
-    )
-
-
 def first_regexp_extract(col: Column, patterns: list[str], group: int = 0) -> Column:
     """First-pattern-wins extraction over an ordered regex bank (F2 chain).
 

@@ -1,9 +1,11 @@
 """Text-analysis and similarity Column expressions for training-data pipelines.
 
-All pure Catalyst (JVM-side). The hash primitives are deliberately *portable*
-(md5-based) so the DuckDB correctness oracle can reproduce them bit-for-bit —
+All pure Catalyst (JVM-side). The fingerprint hash is deliberately *portable*
+(md5-based) so the DuckDB correctness oracle can reproduce it bit-for-bit —
 ``xxhash64``/``hash`` would be faster but engine-specific; at 100 TB the md5
-cost is still scan-dominated and stays inside whole-stage codegen.
+cost is still scan-dominated and stays inside whole-stage codegen. The
+SimHash / MinHash signatures run as numpy kernels (kernels.texthash) over the
+same normalization.
 """
 
 from __future__ import annotations
@@ -21,8 +23,14 @@ TOKEN_SPLIT = r"[^a-zA-Z0-9]+"
 
 
 def normalize_text(col: Column) -> Column:
-    """Lowercase + collapse non-alphanumerics to single spaces + trim."""
-    return F.trim(F.regexp_replace(F.lower(col), TOKEN_SPLIT, " "))
+    """Lowercase + collapse non-alphanumerics to single spaces + trim.
+
+    U+0130 (İ) folds to ``I`` first: JVM ``lower()`` turns it into ``i`` +
+    U+0307, which the split rule would cut into two tokens, while DuckDB's
+    ``lower()`` gives plain ``i``. It is the only code point whose
+    normalization differs between the two engines."""
+    lowered = F.lower(F.translate(col, "İ", "I"))
+    return F.trim(F.regexp_replace(lowered, TOKEN_SPLIT, " "))
 
 
 def tokens(col: Column) -> Column:
@@ -30,30 +38,11 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(normalize_text(col), " "), lambda t: t != "")
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """k-word shingles (n-grams) of the normalized text → array<string>.
-
-    The token array is let-bound — without it every ``element_at`` reference
-    re-tokenizes the document (observed 150× recompute per doc). And
-    ``sequence(1, 0)`` DESCENDS in Spark, so short docs need an explicit
-    empty-array guard.
-    """
-    from micro_lab_ocr_spark.functions.cleaners import let
-
-    def inner(toks: Column) -> Column:
-        n = F.size(toks)
-        shingles = F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]),
-        )
-        return F.when(n >= k, shingles).otherwise(F.array().cast("array<string>"))
-
-    return let(tokens(col), inner)
-
-
 def char_ngrams(col: Column, n: int = 5) -> Column:
-    """Character n-grams of normalized text → array<string> (normalized text
-    let-bound — see word_shingles)."""
+    """Character n-grams of normalized text → array<string>. The normalized
+    text is let-bound: without it every ``substring`` reference re-normalizes
+    the document. ``sequence(1, 0)`` DESCENDS in Spark, so short texts need
+    the explicit empty-array guard."""
     from micro_lab_ocr_spark.functions.cleaners import let
 
     def inner(t: Column) -> Column:
@@ -65,103 +54,6 @@ def char_ngrams(col: Column, n: int = 5) -> Column:
         return F.when(ln >= n, grams).otherwise(F.array().cast("array<string>"))
 
     return let(normalize_text(col), inner)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: array of ``num_hashes`` lexicographic-min salted
-    md5 digests over the shingle set. array_min is a partial-aggregatable
-    per-row op — no shuffle.
-
-    NB: the salt must be captured in a real closure — a two-arg lambda
-    (``lambda s, i=i``) would make F.transform pass the ARRAY INDEX as ``i``.
-    """
-
-    from micro_lab_ocr_spark.functions.cleaners import let
-
-    def inner(sh: Column) -> Column:
-        def min_hash(salt: int) -> Column:
-            return F.array_min(
-                F.transform(sh, lambda s: F.md5(F.concat(s, F.lit(f"#{salt}"))))
-            )
-
-        return F.array(*[min_hash(i) for i in range(num_hashes)])
-
-    return let(shingles, inner)
-
-
-def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Band the signature for LSH: array<struct<band:int, key:string>>.
-
-    Two docs sharing any band key are near-dup candidates (join on key).
-    The signature is let-bound so each band key references it without
-    recomputing the full MinHash (Catalyst re-inlines plain column refs).
-    """
-    from micro_lab_ocr_spark.functions.cleaners import let
-
-    def inner(sig: Column) -> Column:
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.element_at(sig, b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    ).alias("key"),
-                )
-                for b in range(bands)
-            ]
-        )
-
-    return let(signature, inner)
-
-
-def simhash64(col: Column) -> Column:
-    """64-bit SimHash over word tokens, built from md5 nibbles (portable).
-
-    For each of 64 bit positions, sum +1/-1 votes across tokens; bit=1 when
-    the vote is positive. Bits derive from the md5 hex digest of each token:
-    bit i = parity of hex digit i mod 32 (two digests salted for 64 bits).
-    """
-    from micro_lab_ocr_spark.functions.cleaners import let, let2
-
-    def with_digests(d0: Column, d1: Column) -> Column:
-        def bit_votes(bit: int) -> Column:
-            # bit 0..63 → salted digest half + hex char position; the two
-            # md5 digests per token are computed ONCE (let2-bound arrays) —
-            # inlining them here would cost 64 digests per token
-            digests = d0 if bit < 32 else d1
-            pos = bit % 32
-            digit = F.transform(
-                digests,
-                lambda d: F.when(
-                    F.substring(d, pos + 1, 1).rlike("[89abcdef]"), F.lit(1)
-                ).otherwise(F.lit(-1)),
-            )
-            votes = F.aggregate(digit, F.lit(0), lambda acc, x: acc + x)
-            return F.when(votes > 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-
-        out = F.lit(0).cast("long")
-        for i in range(64):
-            # shiftleft (not a 1<<63 literal — that overflows LongType); bit
-            # 63 lands on the sign bit → full two's-complement 64-bit hash
-            out = out + F.shiftleft(bit_votes(i), i)
-        return out
-
-    def inner(toks: Column) -> Column:
-        d0 = F.transform(toks, lambda t: F.md5(F.concat(t, F.lit("#s0"))))
-        d1 = F.transform(toks, lambda t: F.md5(F.concat(t, F.lit("#s1"))))
-        return let2(d0, d1, with_digests)
-
-    return let(tokens(col), inner)
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def jaccard(a: Column, b: Column) -> Column:

@@ -1,19 +1,18 @@
 """Vectorized text-hash kernels (mapInPandas) for the dedup operators.
 
-The SimHash / MinHash signature definitions are EXACTLY the portable md5
-constructions in :mod:`micro_lab_ocr_spark.functions.text` (same salts, same
-bit layout), so the DuckDB oracle SQL and the Catalyst expression forms stay
-valid — these kernels only change WHERE the arithmetic runs. The Catalyst
-forms build 64 higher-order ``aggregate()`` calls per doc which evaluate
-interpreted (let()-bound HOF chains fall out of codegen; see
-tests/test_plans.py) — round-1's two slowest bench queries. One numpy pass
-per Arrow batch replaces them, the shape of the ``ann._cosine_topk`` kernel.
+The SimHash / MinHash signatures are the portable md5 constructions of the
+DuckDB oracle SQL in :mod:`micro_lab_ocr_spark.queries` (same salts, same bit
+layout): ``_sql_simhash_bit`` for SimHash, ``_shingles3_sql``,
+``_minhash_sql`` and the band keys of ``_MINHASH_CTES`` for MinHash. One
+numpy pass per Arrow batch computes them, the shape of the
+``ann._cosine_topk`` kernel; tests/test_operators.py runs the kernels against
+that SQL in DuckDB.
 
-Tokenization parity: Python ``str.lower()`` here vs Spark/DuckDB ``lower()``
-— identical on ASCII and on case-less scripts (Hangul/CJK); chars where
-Unicode case-mapping could diverge are non-alphanumeric in ASCII terms and
-are collapsed to spaces by the same regex on every engine, so the token
-streams agree (pinned by tests/test_operators.py parity cases).
+Tokenization parity: :func:`_normalize` is ``functions.text.normalize_text``
+in Python, U+0130 fold included (see there). On every other character the
+Python, JVM and DuckDB ``lower()`` either agree or give a character that is
+not ASCII-alphanumeric, which the same regex collapses to a space — so the
+token streams agree on all three engines.
 """
 
 from __future__ import annotations
@@ -32,31 +31,31 @@ _NON_ALNUM = re.compile(r"[^a-zA-Z0-9]+")
 _CACHE_CAP = 1_000_000
 
 
+def _normalize(text: str) -> str:
+    """functions.text.normalize_text: fold U+0130 → lower → non-alnum runs to
+    single spaces → trim. After the substitution only ASCII spaces can remain
+    at the ends, so strip(' ') equals Spark's space-only trim."""
+    return _NON_ALNUM.sub(" ", text.replace("İ", "I").lower()).strip(" ")
+
+
 def norm_tokens(text: str | None) -> list[str]:
-    """Mirror of functions.text.tokens(): lower → non-alnum runs to single
-    spaces → trim → split, empty-safe."""
+    """Mirror of functions.text.tokens(), empty-safe."""
     if not text:
         return []
-    return _NON_ALNUM.sub(" ", text.lower()).strip().split()
+    return _normalize(text).split()
 
 
-def make_fingerprint_kernel(id_col: str = "doc_id", idtype: str = "bigint"):
+def make_fingerprint_kernel(id_col: str = "doc_id"):
     """mapInPandas kernel for functions.text.doc_fingerprint: md5 of the
-    normalized text. ``_NON_ALNUM.sub(' ', lower).strip(' ')`` mirrors
-    ``trim(regexp_replace(lower(text), '[^a-zA-Z0-9]+', ' '))`` exactly —
-    after the substitution only ASCII spaces can remain at the ends, so
-    strip(' ') equals Spark's space-only trim (lower() parity per module
-    docstring). Moves the per-row regex+digest off the JVM, whose
-    allocation-heavy string path is memory-bound on this box."""
+    normalized text. Moves the per-row regex+digest off the JVM, whose
+    allocation-heavy string path is memory-bound."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             fps = [
                 None
                 if t is None
-                else hashlib.md5(
-                    _NON_ALNUM.sub(" ", t.lower()).strip(" ").encode("utf-8")
-                ).hexdigest()
+                else hashlib.md5(_normalize(t).encode("utf-8")).hexdigest()
                 for t in pdf["text"]
             ]
             yield pd.DataFrame({id_col: pdf[id_col], "fingerprint": fps})
@@ -65,7 +64,7 @@ def make_fingerprint_kernel(id_col: str = "doc_id", idtype: str = "bigint"):
 
 
 # ---------------------------------------------------------------------------
-# SimHash64 (functions.text.simhash64 definition)
+# SimHash64 (queries._sql_simhash_bit definition)
 # ---------------------------------------------------------------------------
 
 _sim_cache: dict[str, np.ndarray] = {}
@@ -94,7 +93,9 @@ _POW2 = (np.uint64(1) << np.arange(64, dtype=np.uint64))
 
 
 def simhash64_py(text: str | None) -> int:
-    """Signed 64-bit SimHash, bit-identical to functions.text.simhash64."""
+    """Signed 64-bit SimHash: bit i is 1 when most tokens vote for it (see
+    :func:`_token_bits`), bit 63 the sign bit. Bit-identical to the 16 hex
+    nibbles of queries._simhash_hex_sql."""
     toks = norm_tokens(text)
     if not toks:
         return 0
@@ -117,7 +118,7 @@ def simhash_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH band keys (functions.text.minhash_signature / lsh_bands)
+# MinHash + LSH band keys (queries._minhash_sql / _MINHASH_CTES definition)
 # ---------------------------------------------------------------------------
 
 _min_cache: dict[str, tuple[bytes, ...]] = {}
@@ -140,7 +141,7 @@ def _salted_digests(s: str, num_hashes: int) -> tuple[bytes, ...]:
 
 def word_shingles_py(text: str | None, k: int) -> list[str]:
     """Distinct k-word shingles, order of first appearance (mirrors
-    array_distinct(word_shingles(...)) — set membership, order irrelevant
+    queries._shingles3_sql for k=3 — set membership, order irrelevant
     downstream since signatures are mins)."""
     toks = norm_tokens(text)
     if len(toks) < k:

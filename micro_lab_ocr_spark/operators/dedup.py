@@ -1,10 +1,8 @@
 """Deduplication operators for training-data pipelines (task brief §extras).
 
-Hash primitives are portable md5 (see functions.text) so the DuckDB oracle
-reproduces them exactly; the SimHash/MinHash signatures run in numpy
-mapInPandas kernels (kernels.texthash) with the SAME definitions — the
-Catalyst expression forms evaluate interpreted and were round-1's two
-slowest bench queries.
+Hash primitives are portable md5 so the DuckDB oracle reproduces them
+exactly; the fingerprint and the SimHash/MinHash signatures run in numpy
+mapInPandas kernels (kernels.texthash), tested against the oracle SQL.
 
 Scale notes (100 TB):
 * exact dedup — one hash-shuffle on the 32-hex fingerprint; map-side partial
@@ -13,7 +11,7 @@ Scale notes (100 TB):
   are counted on a (bucket)-only projection and oversized keys anti-joined
   away BEFORE any shingle array enters a shuffle (stop-shingle storms);
   the only wide shuffle is the band-bucket self-join, AQE-skew-splittable.
-* SimHash — signature is map-side; pairing joins on the 16-bit chunk bucket.
+* SimHash — signature is map-side, no shuffle.
 * n-gram Jaccard — equi-join on a log-scale length-bucket blocking key (hash
   join, not a nested-loop theta join), exact length band as a post-filter.
 """
@@ -29,26 +27,17 @@ from micro_lab_ocr_spark.kernels import texthash as TH
 
 
 def dedup_exact(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fingerprint_col: str | None = None,
+    docs: DataFrame, id_col: str = "doc_id", fingerprint_col: str = "fingerprint"
 ) -> DataFrame:
-    """Exact duplicate groups by normalized-text fingerprint.
+    """Exact duplicate groups over per-doc normalized-text fingerprints
+    (``functions.text.doc_fingerprint`` or its kernel
+    ``kernels.texthash.make_fingerprint_kernel``).
 
     Returns (fingerprint, n_docs, keeper_id) for groups with ≥2 members —
-    the keeper is the smallest id (deterministic). Pass ``fingerprint_col``
-    when the frame already carries the fingerprint (lets a caller that
-    derives exact copies reuse one fingerprint pass instead of re-hashing
-    identical text).
+    the keeper is the smallest id (deterministic).
     """
-    fp = (
-        T.doc_fingerprint(F.col(text_col))
-        if fingerprint_col is None
-        else F.col(fingerprint_col)
-    )
     return (
-        docs.select(F.col(id_col).alias("id"), fp.alias("fingerprint"))
+        docs.select(F.col(id_col).alias("id"), F.col(fingerprint_col).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(F.count("*").alias("n_docs"), F.min("id").alias("keeper_id"))
         .where(F.col("n_docs") >= 2)
@@ -223,68 +212,14 @@ def ngram_jaccard_pairs(
 
 def simhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-doc 64-bit SimHash (as bigint) — near-dup candidates are pairs
-    within small Hamming distance (see :func:`simhash_pairs`).
+    within small Hamming distance.
 
-    Runs the numpy kernel (kernels.texthash.simhash_kernel); bit-identical to
-    the Catalyst ``functions.text.simhash64`` definition (parity-tested) and
-    to the generated DuckDB oracle SQL. Map-side on the scan partitions — no
-    shuffle at all."""
+    Runs the numpy kernel (kernels.texthash.simhash_kernel), bit-identical to
+    the DuckDB oracle SQL (``queries._simhash_hex_sql``). Map-side on the
+    scan partitions — no shuffle at all."""
     idtype = docs.schema[id_col].dataType.simpleString()
     return docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).mapInPandas(
         TH.simhash_kernel, f"id {idtype}, simhash long"
-    )
-
-
-def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs: block on each of 4 16-bit chunks, then verify
-    exact Hamming distance on the collided pairs (Manku et al., WWW'07).
-
-    RECALL GUARANTEE: pigeonhole over 4 chunks covers Hamming ≤ 3 — any pair
-    within 3 bit flips leaves at least one 16-bit chunk untouched, so recall
-    is exactly 1.0 for ``max_hamming <= 3`` (default). Larger values are
-    accepted but BEST-EFFORT: a pair whose flips spread across all 4 chunks
-    (possible from d = 4) shares no chunk and is missed; measured recall in
-    the d ∈ [4, 8] band is pinned by ``test_simhash_recall_vs_brute``. The
-    16-bit keys (not narrower) matter at scale: key cardinality 65,536 keeps
-    per-bucket membership ~n/65,536 so the verify join stays near-linear —
-    8-bit chunks would guarantee d ≤ 7 but collapse to 256 buckets and a
-    quadratic candidate blowup."""
-    sigs = simhash_signatures(docs, text_col, id_col)
-    chunks = sigs.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftright("simhash", 16 * i).bitwiseAND(F.lit(0xFFFF)).alias("key"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "simhash", F.col("c.chunk").alias("chunk"), F.col("c.key").alias("key"))
-    a, b = chunks.alias("a"), chunks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            T.hamming64(F.col("a.simhash"), F.col("b.simhash")).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .where(F.col("hamming") <= max_hamming)
     )
 
 

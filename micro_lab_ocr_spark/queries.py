@@ -573,9 +573,7 @@ def dedup_exact_q(spark, sf_dir):
     exact = fps.where((F.col("doc_id") % 11 == 0) & (F.col("doc_id") < 1000000)).select(
         (F.col("doc_id") + 2000000).alias("doc_id"), "fingerprint"
     )
-    return dedup.dedup_exact(
-        fps.unionByName(exact), id_col="doc_id", fingerprint_col="fingerprint"
-    )
+    return dedup.dedup_exact(fps.unionByName(exact))
 
 
 DEDUP_EXACT_SQL = f"""
@@ -720,8 +718,7 @@ WHERE ROUND(len(list_intersect(a.grams, b.grams))
 
 
 def dedup_simhash_q(spark, sf_dir):
-    """SimHash signatures (hex) per planted-dup corpus doc; pairing is
-    covered by the Spark-side operator test (non-SQL-friendly bit kernel).
+    """SimHash signatures (hex) per planted-dup corpus doc.
     spread=True: the numpy signature kernel scales across cores (A/B at
     sf1.0: 0.77 s spread vs 2.8 s unspread)."""
     corpus = _with_planted_dups(spark, sf_dir, spread=True)

@@ -26,16 +26,6 @@ ALLOWED = {
         "test-side encoder beside its decoder, like encode_pdf (used by the fixtures)",
     ("sinks/xlsx.py", "export_cells"):
         "the reference's S13 workbook export; no job exposes it yet",
-    ("operators/dedup.py", "simhash_pairs"):
-        "SimHash near-dup pairing; no query exposes it yet",
-    ("functions/text.py", "word_shingles"):
-        "Catalyst definition the kernels/texthash shingles are parity-tested against",
-    ("functions/text.py", "minhash_signature"):
-        "Catalyst definition the kernels/texthash MinHash is parity-tested against",
-    ("functions/text.py", "lsh_bands"):
-        "Catalyst definition the kernels/texthash band keys are parity-tested against",
-    ("functions/text.py", "simhash64"):
-        "Catalyst definition the kernels/texthash SimHash is parity-tested against",
 }
 
 

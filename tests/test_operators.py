@@ -1,11 +1,15 @@
-"""Operator-level tests: dedup recall on planted near-dups, SimHash pairing,
-ANN recall of the LSH and IVF paths vs brute force."""
+"""Operator-level tests: dedup recall on planted near-dups, text-hash kernel
+parity with the DuckDB oracle SQL and with Catalyst, ANN recall of the LSH
+and IVF paths vs brute force."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from micro_lab_ocr_spark import queries as Q
+from micro_lab_ocr_spark.functions import text as T
+from micro_lab_ocr_spark.kernels import texthash as TH
 from micro_lab_ocr_spark.operators import ann, dedup
 
 
@@ -28,7 +32,10 @@ def doc_df(spark):
 
 
 def test_dedup_exact_finds_planted(doc_df):
-    groups = dedup.dedup_exact(doc_df).collect()
+    fps = doc_df.mapInPandas(
+        TH.make_fingerprint_kernel("doc_id"), "doc_id long, fingerprint string"
+    )
+    groups = dedup.dedup_exact(fps).collect()
     keepers = {r["keeper_id"] for r in groups}
     assert keepers == {i for i in range(0, 200, 25)}
     assert all(r["n_docs"] == 2 for r in groups)
@@ -44,53 +51,6 @@ def test_minhash_lsh_recall(doc_df):
     assert not missing, f"missed planted pairs: {sorted(missing)[:5]}"
 
 
-def test_simhash_pairs_find_exact_dups(doc_df):
-    pairs = dedup.simhash_pairs(doc_df, max_hamming=8).collect()
-    found = {(r["id_a"], r["id_b"]) for r in pairs}
-    expected_exact = {(i, i + 20000) for i in range(0, 200, 25)}
-    assert expected_exact <= found
-    # exact dups have identical simhash → hamming 0
-    zero = {(r["id_a"], r["id_b"]) for r in pairs if r["hamming"] == 0}
-    assert expected_exact <= zero
-
-
-def test_simhash_recall_vs_brute(doc_df):
-    """Pin simhash_pairs recall against brute-force Hamming: exactly 1.0 in
-    the pigeonhole-guaranteed band (d ≤ 3, the default), and in the
-    best-effort band (4 ≤ d ≤ 8) exactly the pairs that share ≥1 16-bit
-    chunk — so the operator's documented contract is the measured one."""
-    from micro_lab_ocr_spark.operators.dedup import simhash_signatures
-
-    sigs = {
-        r["id"]: r["simhash"] & 0xFFFFFFFFFFFFFFFF
-        for r in simhash_signatures(doc_df).collect()
-    }
-    ids = sorted(sigs)
-    brute = {}  # (a, b) -> (hamming, shares_chunk)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            x = sigs[a] ^ sigs[b]
-            d = bin(x).count("1")
-            if d <= 8:
-                shares = any((x >> (16 * k)) & 0xFFFF == 0 for k in range(4))
-                brute[(a, b)] = (d, shares)
-    for max_h in (3, 8):
-        found = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.simhash_pairs(doc_df, max_hamming=max_h).collect()
-        }
-        reachable = {p for p, (d, s) in brute.items() if d <= max_h and s}
-        assert found == reachable, f"max_hamming={max_h}: blocking contract broken"
-        truth = {p for p, (d, _) in brute.items() if d <= max_h}
-        recall = len(found & truth) / len(truth) if truth else 1.0
-        if max_h <= 3:
-            assert recall == 1.0, "guaranteed band must have full recall"
-        else:
-            # best-effort band: every miss must be a no-shared-chunk pair
-            assert truth - found == {p for p, (d, s) in brute.items()
-                                     if d <= max_h and not s}
-
-
 PARITY_TEXTS = [
     "",
     None,
@@ -100,42 +60,75 @@ PARITY_TEXTS = [
     "x",
     "one two",
     "repeat repeat repeat repeat repeat",
+    # lowercase changes length or maps into ASCII: U+0130 İ, U+212A Kelvin, ß
+    "İSTANBUL İzmir DİYARBAKIR",
+    "\u212a \u212aelvin 5\u212a",
+    "Straße STRASSE ß",
+    "한국어Mixed문서 ABC-123 스크립트x",
+    "İ\u212aß한",
 ]
 
 
-def test_simhash_kernel_matches_catalyst(spark):
-    """The numpy kernel must be bit-identical to the Catalyst simhash64
-    definition (which the DuckDB oracle SQL restates)."""
-    from micro_lab_ocr_spark.functions import text as T
-    from micro_lab_ocr_spark.kernels import texthash as TH
+def _duckdb_oracle(sql: str) -> dict:
+    """Run one oracle query in an in-memory DuckDB over PARITY_TEXTS as the
+    ``documents`` table; the first column keys the second. The planted
+    copies the dedup queries add (ids ≥ 1,000,000) are never looked up."""
+    import duckdb
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(PARITY_TEXTS)], "doc_id long, text string"
-    )
-    catalyst = {
-        r["doc_id"]: r["sh"]
-        for r in df.select("doc_id", T.simhash64(F.col("text")).alias("sh")).collect()
-    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(PARITY_TEXTS)))
+    return dict(con.execute(sql).fetchall())
+
+
+def test_simhash_kernel_matches_duckdb_oracle():
+    """simhash64_py equals the oracle's DEDUP_SIMHASH_SQL signature."""
+    sims = _duckdb_oracle(Q.DEDUP_SIMHASH_SQL)
     for i, t in enumerate(PARITY_TEXTS):
-        assert TH.simhash64_py(t) == catalyst[i], f"simhash mismatch on {t!r}"
+        sim = TH.simhash64_py(t) & (2**64 - 1)
+        assert f"{sim:016X}" == sims[i], f"simhash mismatch on {t!r}"
+
+
+def test_minhash_kernel_matches_duckdb_oracle():
+    """Shingles and the 8-hash / 4-band LSH keys equal the ``sh`` and
+    ``buckets`` CTEs of the oracle's _MINHASH_CTES."""
+    shingles = _duckdb_oracle(f"WITH {Q._MINHASH_CTES} SELECT id, shingles FROM sh")
+    bands = _duckdb_oracle(
+        f"WITH {Q._MINHASH_CTES} SELECT id, list(key ORDER BY band) FROM buckets GROUP BY id"
+    )
+    for i, t in enumerate(PARITY_TEXTS):
+        sh = TH.word_shingles_py(t, 3)
+        assert sorted(sh) == sorted(shingles.get(i, [])), f"shingles mismatch on {t!r}"
+        if sh:
+            assert TH.minhash_buckets_py(sh, 8, 4) == bands[i], f"bands mismatch on {t!r}"
+
+
+def test_fingerprint_kernel_matches_duckdb_oracle():
+    """The fingerprint kernel equals the oracle's T_FINGERPRINT_SQL."""
+    import pandas as pd
+
+    fps = _duckdb_oracle(Q.T_FINGERPRINT_SQL)
+    pdf = pd.DataFrame({"doc_id": range(len(PARITY_TEXTS)), "text": PARITY_TEXTS})
+    kernel_fps = next(TH.make_fingerprint_kernel("doc_id")(iter([pdf])))["fingerprint"]
+    for i, t in enumerate(PARITY_TEXTS):
+        assert kernel_fps[i] == fps[i], f"fingerprint mismatch on {t!r}"
+
+
+def test_tokenizer_matches_catalyst(spark):
+    """norm_tokens, the tokenizer of every text-hash kernel, equals the
+    Catalyst ``tokens`` that t_token_stats runs."""
+    df = spark.createDataFrame(list(enumerate(PARITY_TEXTS)), "doc_id long, text string")
+    catalyst = dict(df.select("doc_id", T.tokens(F.col("text"))).collect())
+    for i, t in enumerate(PARITY_TEXTS):
+        assert TH.norm_tokens(t) == (catalyst[i] or []), f"tokens mismatch on {t!r}"
 
 
 def test_fingerprint_kernel_matches_catalyst(spark):
-    """dedup_exact_q's Python fingerprint kernel (str.lower + md5) must equal
-    the Catalyst doc_fingerprint on characters whose lowercase changes
-    length or maps into ASCII (U+0130 İ, U+212A Kelvin), on ß, and on mixed
-    Hangul/ASCII — otherwise dedup groups drift from the SQL oracle."""
-    from micro_lab_ocr_spark.functions import text as T
-    from micro_lab_ocr_spark.kernels import texthash as TH
-
-    texts = PARITY_TEXTS + [
-        "İSTANBUL İzmir DİYARBAKIR",
-        "\u212a \u212aelvin 5\u212a",
-        "Straße STRASSE ß",
-        "한국어Mixed문서 ABC-123 스크립트x",
-        "İ\u212aß한",
-    ]
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    """dedup_exact_q's Python fingerprint kernel (normalize + md5) must equal
+    the Catalyst doc_fingerprint that t_fingerprint runs, also on the
+    Unicode parity texts — otherwise dedup groups drift from the SQL
+    oracle."""
+    df = spark.createDataFrame(list(enumerate(PARITY_TEXTS)), "doc_id long, text string")
     catalyst = {
         r["doc_id"]: r["fp"]
         for r in df.select("doc_id", T.doc_fingerprint(F.col("text")).alias("fp")).collect()
@@ -146,33 +139,8 @@ def test_fingerprint_kernel_matches_catalyst(spark):
             TH.make_fingerprint_kernel("doc_id"), "doc_id long, fingerprint string"
         ).collect()
     }
-    for i, t in enumerate(texts):
-        assert kernel[i] == catalyst[i], f"fingerprint mismatch on {t!r}"
-
-
-def test_minhash_kernel_matches_catalyst(spark):
-    """Shingle sets + band keys from the numpy kernel == the Catalyst
-    minhash_signature/lsh_bands construction."""
-    from micro_lab_ocr_spark.functions import text as T
-    from micro_lab_ocr_spark.kernels import texthash as TH
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(PARITY_TEXTS)], "doc_id long, text string"
-    )
-    sh = F.array_distinct(T.word_shingles(F.col("text"), 3))
-    cat = {
-        r["doc_id"]: (r["shingles"], [b["key"] for b in r["bands"]])
-        for r in df.select(
-            "doc_id",
-            sh.alias("shingles"),
-            T.lsh_bands(T.minhash_signature(sh, 8), 4, 2).alias("bands"),
-        ).collect()
-    }
     for i, t in enumerate(PARITY_TEXTS):
-        shingles = TH.word_shingles_py(t, 3)
-        assert sorted(shingles) == sorted(cat[i][0]), f"shingles mismatch on {t!r}"
-        if shingles:
-            assert TH.minhash_buckets_py(shingles, 8, 4) == cat[i][1], f"bands mismatch on {t!r}"
+        assert kernel[i] == catalyst[i], f"fingerprint mismatch on {t!r}"
 
 
 def test_minhash_oversize_bucket_guard(spark):
