@@ -98,20 +98,24 @@ def quality_staged(df, text_col: str, ratio_alias: str = "stopword_ratio",
     """t_quality: ``round(stopword_ratio(c), 4)`` and the composite
     document-quality score in [0,1] — the mean of four clipped linear
     components (length, punctuation density, stopword ratio, mean word
-    length), rounded to 4 dp — as HOF-free, allocation-free counting
-    projections built only from codegen-able ``regexp_count`` expressions
-    over the ORIGINAL text. Two measured pathologies drove this form over a
-    let()-bound token-array one: interpreted HOF subtrees (CodegenFallback)
-    burn ~30× the single-thread CPU per row under 32-way concurrency
-    (allocation churn in the interpreted eval path), and even codegen'd
-    ``regexp_replace`` throttles on memory bandwidth because it
-    materializes the normalized string per row. Counting allocates nothing;
-    every ratio keeps the int→double division of the token-array
-    definition, so rounded outputs match it bit-for-bit (pinned against the
-    DuckDB oracle by the t_quality query).
+    length), rounded to 4 dp — as HOF-free counting projections built only
+    from codegen-able ``regexp_count`` expressions over the original text
+    (two code points folded, see below). Two measured pathologies drove this
+    form over a let()-bound token-array one: interpreted HOF subtrees
+    (CodegenFallback) burn ~30× the single-thread CPU per row under 32-way
+    concurrency (allocation churn in the interpreted eval path), and even
+    codegen'd ``regexp_replace`` throttles on memory bandwidth because it
+    materializes the normalized string per row. Every ratio keeps the
+    int→double division of the token-array definition, so rounded outputs
+    match it bit-for-bit (pinned against the DuckDB oracle by the t_quality
+    query and by tests/test_operators.py over the Unicode parity texts).
     """
-    c = F.col(text_col)
-    # every component is a COUNTING regex over the original text — no
+    # U+0130 (İ) and U+212A (Kelvin K) are the only non-ASCII code points
+    # whose DuckDB lower() lands in [a-z0-9]; folding them 1:1 to ASCII
+    # first keeps every count, and length(), equal to the oracle's.
+    df = df.withColumn("_tq_text", F.translate(F.col(text_col), "\u0130\u212a", "IK"))
+    c = F.col("_tq_text")
+    # every component is a COUNTING regex over the folded text — no
     # normalized string is ever built (regexp_replace materializing the
     # normalized copy was the dominant cost: string building is memory
     # traffic, counting is not; measured 2.5 s vs 0.25 s per pass at sf1.0):

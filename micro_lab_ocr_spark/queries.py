@@ -24,84 +24,11 @@ from micro_lab_ocr_spark.functions import text as T
 from micro_lab_ocr_spark.operators import ann, dedup, sampling
 
 
-def _scan_row_groups(path: str) -> int:
-    """Total parquet row groups at ``path`` (file or directory of files).
-
-    A parquet scan cannot parallelize below row-group granularity: Spark
-    plans byte-range splits, but every row group is read whole by the split
-    containing its start, so a table written as one fat row group runs its
-    entire map stage on ONE core no matter how many splits the planner makes
-    (``spark.sql.files.minPartitionNum`` only multiplies empty tasks).
-    Metadata-only read (footer), a few ms per file; no data is touched.
-    """
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    files = (
-        [path]
-        if _os.path.isfile(path)
-        else sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-    )
-    return sum(_pq.ParquetFile(f).metadata.num_row_groups for f in files)
-
-
-# "auto" spread threshold: below this compressed size the one-off exchange
-# costs more than the single-task compute it parallelizes (measured at
-# sf1.0: spreading 6–16 MB corpora LOST 0.1–1.3 s per query); above it a
-# row-group-starved scan strands seconds of map compute on one core and
-# the exchange amortizes.
-_SPREAD_AUTO_BYTES = 64 * 1024 * 1024
-
-
-def load(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool | str = False
-) -> DataFrame:
-    """Read one input table; when its file layout cannot feed every core
-    (fewer row groups than scheduler slots), spread it with one round-robin
-    repartition so downstream map work uses the whole machine.
-
-    Scale-adaptive by construction (guide §2): a production-size table has
-    thousands of row groups, so the condition is false and the plan is an
-    unmodified scan — the repartition only fires for small/single-row-group
-    inputs. Modes, each chosen per call site from interleaved A/Bs:
-
-    * ``spread=True`` — always spread when row-group-starved: heavy per-row
-      map compute that scales (numpy kernels, allocation-light codegen —
-      t_quality counting, quantize, simhash).
-    * ``spread="auto"`` — spread only when the file is also ≥
-      ``_SPREAD_AUTO_BYTES``: map-heavy paths where the sf1.0-size A/B
-      showed the exchange losing on a small corpus but single-task compute
-      must dominate once the input grows (ANN corpus passes, dedup corpus
-      fingerprint/shingle kernels). Keeps today's measured-best plan at
-      sf1.0 AND stays parallel if the driver escalates the scale factor.
-    * ``spread=False`` (default) — shuffle-first queries (their first
-      exchange already redistributes; a pre-exchange cannot parallelize the
-      scan task itself), broadcast-destined dims, operators that pin their
-      own exchange layout.
-    """
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if spread:
-        if spread == "auto" and _path_bytes(path) < _SPREAD_AUTO_BYTES:
-            return df
-        slots = spark.sparkContext.defaultParallelism
-        if _scan_row_groups(path) < slots:
-            df = df.repartition(slots)
-    return df
-
-
-def _path_bytes(path: str) -> int:
-    """Compressed on-disk size of a parquet file or directory (cheap stat)."""
-    import glob as _glob
-    import os as _os
-
-    if _os.path.isfile(path):
-        return _os.path.getsize(path)
-    return sum(
-        _os.path.getsize(f) for f in _glob.glob(_os.path.join(path, "*.parquet"))
-    )
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one input table. No query spreads its scan: a production-size
+    table has thousands of row groups, and on single-row-group inputs a
+    round-robin exchange cost more than the map work it spread."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _dsum(col) -> F.Column:
@@ -444,7 +371,7 @@ _TOKENS_SQL = (
 
 def t_token_stats(spark, sf_dir):
     """Token counting + length stats per doc (text-analysis op)."""
-    docs = load(spark, sf_dir, "documents", spread="auto")
+    docs = load(spark, sf_dir, "documents")
     toks = T.tokens(F.col("text"))
     return docs.select(
         "doc_id",
@@ -465,10 +392,9 @@ FROM documents
 
 def t_quality(spark, sf_dir):
     """Quality scoring: stopword ratio + composite score per doc. Uses the
-    HOF-free staged form (text.quality_staged) — pure whole-stage-codegen
-    expressions, which unlike interpreted HOF subtrees actually scale with
-    the spread scan (guide §4.1: prefer built-ins)."""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    HOF-free staged form (text.quality_staged): pure whole-stage-codegen
+    expressions, no interpreted HOF subtree (guide §4.1: prefer built-ins)."""
+    docs = load(spark, sf_dir, "documents")
     return T.quality_staged(docs, "text").select(
         "doc_id", "stopword_ratio", "quality"
     )
@@ -503,7 +429,7 @@ FROM base
 
 def t_langid(spark, sf_dir):
     """Heuristic language ID per doc."""
-    docs = load(spark, sf_dir, "documents", spread="auto")
+    docs = load(spark, sf_dir, "documents")
     return docs.select("doc_id", T.detect_language(F.col("text")).alias("lang_detected"))
 
 
@@ -519,7 +445,7 @@ FROM documents
 
 def t_fingerprint(spark, sf_dir):
     """Document fingerprinting (md5 of normalized text)."""
-    docs = load(spark, sf_dir, "documents", spread="auto")
+    docs = load(spark, sf_dir, "documents")
     return docs.select("doc_id", T.doc_fingerprint(F.col("text")).alias("fingerprint"))
 
 
@@ -535,8 +461,8 @@ SELECT doc_id, md5({_NORM_SQL.format(v='text')}) AS fingerprint FROM documents
 # ===========================================================================
 
 
-def _with_planted_dups(spark, sf_dir, spread: bool | str = "auto"):
-    docs = load(spark, sf_dir, "documents", spread=spread).select("doc_id", "text")
+def _with_planted_dups(spark, sf_dir):
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     planted = docs.where(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(
@@ -557,12 +483,9 @@ FROM documents WHERE doc_id % 7 = 0
 
 
 def dedup_exact_q(spark, sf_dir):
-    # spread="auto": at sf1.0 sizes the spread exchange only added traffic
-    # (A/B: 2.6 s spread vs 1.4 s unspread with the fingerprint kernel) so
-    # auto resolves to no exchange; a larger corpus crosses the auto floor
-    # and parallelizes the kernel. Fingerprints are computed ONCE over the
-    # planted corpus; the exact-copy branch reuses them (identical text ⇒
-    # identical md5 by definition), saving a third normalize+md5 pass.
+    # Fingerprints are computed ONCE over the planted corpus; the exact-copy
+    # branch reuses them (identical text ⇒ identical md5 by definition),
+    # saving a third normalize+md5 pass.
     corpus = _with_planted_dups(spark, sf_dir)
     from micro_lab_ocr_spark.kernels import texthash as TH
 
@@ -597,7 +520,7 @@ def dedup_minhash_q(spark, sf_dir):
     )
 
 
-def _shingles3_sql(rel: str) -> str:
+def _shingles3_sql() -> str:
     """3-word shingles of normalized text as a DuckDB list expression."""
     toks = _TOKENS_SQL.format(v="text")
     return (
@@ -616,8 +539,8 @@ def _minhash_sql(h: int) -> str:
 # re-derives the SAME pairs, then closes them transitively)
 _MINHASH_CTES = f"""corpus AS ({_PLANTED_SQL}),
 sh AS (
-  SELECT doc_id AS id, {_shingles3_sql('corpus')} AS shingles FROM corpus
-  WHERE len({_shingles3_sql('corpus')}) > 0
+  SELECT doc_id AS id, {_shingles3_sql()} AS shingles FROM corpus
+  WHERE len({_shingles3_sql()}) > 0
 ),
 sigs AS (
   SELECT id, shingles,
@@ -718,10 +641,8 @@ WHERE ROUND(len(list_intersect(a.grams, b.grams))
 
 
 def dedup_simhash_q(spark, sf_dir):
-    """SimHash signatures (hex) per planted-dup corpus doc.
-    spread=True: the numpy signature kernel scales across cores (A/B at
-    sf1.0: 0.77 s spread vs 2.8 s unspread)."""
-    corpus = _with_planted_dups(spark, sf_dir, spread=True)
+    """SimHash signatures (hex) per planted-dup corpus doc."""
+    corpus = _with_planted_dups(spark, sf_dir)
     sigs = dedup.simhash_signatures(corpus)
     return sigs.select("id", F.lpad(F.hex("simhash"), 16, "0").alias("simhash_hex"))
 
@@ -789,7 +710,7 @@ WHERE ROUND(list_dot_product(a.v, b.v)
 
 
 def ann_brute_topk(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings", spread="auto")
+    emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
     return ann.brute_force_topk(emb, queries, k=5)
 
@@ -817,7 +738,7 @@ _LSH_TABLES, _LSH_PLANES = 6, 6
 
 
 def ann_lsh_topk(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings", spread="auto")
+    emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
     return ann.lsh_topk(emb, queries, dim=64, k=5,
                         n_planes=_LSH_PLANES, n_tables=_LSH_TABLES)
@@ -877,7 +798,7 @@ _IVF_STRIDE, _IVF_PROBE = 25, 3
 def ann_ivf_topk(spark, sf_dir):
     """IVF-flat cosine top-k: sampled-centroid inverted file, n_probe cells
     per query — the cell-partitioned ANN scale path (operators/ann.ivf_topk)."""
-    emb = load(spark, sf_dir, "embeddings", spread="auto")
+    emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
     return ann.ivf_topk(emb, queries, k=5,
                         centroid_stride=_IVF_STRIDE, n_probe=_IVF_PROBE)
@@ -1187,21 +1108,10 @@ def f3_id_extraction(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     bank = spark.range(9000).select(F.col("id").cast("int").alias("idx"))
     k = F.col("idx")
-    letter = F.chr((k % 12) + 65)
-    marker = F.element_at(F.lit(["I", "1", "|", "!"]), (k % 4).cast("int") + 1)
-    test = F.concat(
-        F.lit("2"), ((k % 3) + 4).cast("string"), letter,
-        F.lpad(((k % 20) + 10).cast("string"), 2, "0"), marker,
-        F.lpad(((k % 90) + 10).cast("string"), 2, "0"),
-    )
-    presc = F.concat(
-        F.element_at(F.lit(["GB", "CCA", "LAF", "WC"]), (k % 4).cast("int") + 1),
-        ((k % 9000) + 1000).cast("string"),
-        F.lit("-"),
-        F.element_at(F.lit(["ZMB", "VAA", "OZ2A", "AZLY1", "11F"]), (k % 5).cast("int") + 1),
-    )
     form = F.element_at(F.lit(_BULK_FORMS), (k % len(_BULK_FORMS)).cast("int") + 1)
-    bulk = F.replace(F.replace(form, F.lit("{p}"), presc), F.lit("{t}"), test)
+    bulk = F.replace(
+        F.replace(form, F.lit("{p}"), _flagship_presc(k)), F.lit("{t}"), _flagship_test(k)
+    )
     bank = bank.select(F.col("idx"), bulk.alias("bulk"))
     bank = C.extract_ids_staged(
         bank, F.col("bulk"), "test_number", "prescription_number"
@@ -1859,74 +1769,6 @@ FROM lists
 
 
 # ===========================================================================
-# registry
-# ===========================================================================
-
-REGISTRY: dict[str, tuple] = {
-    # name: (spark_fn, oracle_sql_or_None)
-    "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
-    "q3_top_orders": (q3_top_orders, Q3_SQL),
-    "q5_region_revenue": (q5_region_revenue, Q5_SQL),
-    "j1_enrich_broadcast": (j1_enrich_broadcast, J1_SQL),
-    "a3_distinct_stats": (a3_distinct_stats, A3_SQL),
-    "r3_pivot": (r3_pivot, R3_SQL),
-    "w1_filldown": (w1_filldown, W1_SQL),
-    "w4_running_count": (w4_running_count, W4_SQL),
-    "w6_lag_blank": (w6_lag_blank, W6_SQL),
-    "w7_fill_up_restore": (w7_fill_up_restore, W7_SQL),
-    "sessionize": (sessionize, SESSIONIZE_SQL),
-    "t_token_stats": (t_token_stats, T_TOKENS_SQL),
-    "t_quality": (t_quality, T_QUALITY_SQL),
-    "t_langid": (t_langid, T_LANGID_SQL),
-    "t_fingerprint": (t_fingerprint, T_FINGERPRINT_SQL),
-    "dedup_exact": (dedup_exact_q, DEDUP_EXACT_SQL),
-    "dedup_minhash_lsh": (dedup_minhash_q, DEDUP_MINHASH_SQL),
-    "dedup_clusters": (dedup_clusters_q, DEDUP_CLUSTERS_SQL),
-    "dedup_ngram_jaccard": (dedup_ngram_q, DEDUP_NGRAM_SQL),
-    "dedup_simhash": (dedup_simhash_q, DEDUP_SIMHASH_SQL),
-    "dedup_embedding_cosine": (dedup_embedding_cosine_q, DEDUP_EMB_COSINE_SQL),
-    "ann_brute_cosine_topk": (ann_brute_topk, ANN_BRUTE_SQL),
-    "ann_lsh_cosine_topk": (ann_lsh_topk, ANN_LSH_SQL),
-    "ann_ivf_cosine_topk": (ann_ivf_topk, ANN_IVF_SQL),
-    "f6_f7_clean_chain": (f6_f7_clean_chain, None),  # SQL generated lazily
-    "f20_log_convert": (f20_log_convert, None),
-    "f3_id_extraction": (f3_id_extraction, None),
-    "f17_date_ladder": (f17_date_ladder, F17_SQL),
-    "f15_consecutive_dates": (f15_consecutive_dates, F15_SQL),
-    "f16_date_parse": (f16_date_parse, None),  # SQL generated lazily
-    "f12_strain_normalize": (f12_strain_normalize, None),
-    "f13_judgment": (f13_judgment, None),
-    "j2_pair_match": (j2_pair_match, J2_SQL),
-    "s2_drm_detect": (s2_drm_detect, None),  # SQL generated lazily
-    "j1_records_enrich": (j1_records_enrich, None),
-    "r3_records_pivot": (r3_records_pivot, None),
-}
-
-
-def queries_dict():
-    return {name: fn for name, (fn, _) in REGISTRY.items()}
-
-
-def oracle_sql_dict():
-    out = {}
-    for name, (_, sql) in REGISTRY.items():
-        if sql is not None:
-            out[name] = sql
-    out["f6_f7_clean_chain"] = _f6_sql()
-    out["f20_log_convert"] = _f20_sql()
-    out["f3_id_extraction"] = _f3_sql()
-    out["f12_strain_normalize"] = _f12_sql()
-    out["f13_judgment"] = _f13_sql()
-    out["s2_drm_detect"] = _s2_sql()
-    out["f16_date_parse"] = _f16_sql()
-    out["j1_records_enrich"] = _j1_records_sql()
-    out["r3_records_pivot"] = _r3_records_sql()
-    out["j4_template_cells"] = _j4_sql()
-    out["j5_merge_edits"] = _j5_sql()
-    return out
-
-
-# ===========================================================================
 # P1 — largest-table select; F14 — display validators
 # ===========================================================================
 
@@ -2026,8 +1868,6 @@ SELECT key, strain, value,
 FROM base
 """
 
-REGISTRY["p1_largest_table"] = (p1_largest_table, P1_SQL)
-REGISTRY["f14_display_validators"] = (f14_display_validators, F14_SQL)
 
 
 # ===========================================================================
@@ -2168,8 +2008,6 @@ SELECT {cols} FROM edits
 """
 
 
-REGISTRY["j4_template_cells"] = (j4_template_cells, None)  # SQL generated lazily
-REGISTRY["j5_merge_edits"] = (j5_merge_edits, None)
 
 
 # ===========================================================================
@@ -2210,7 +2048,7 @@ def emb_quantize_int8(spark, sf_dir):
     reconstruction error. The qvec itself stays library-side (arrays don't
     hash portably across engines); the audit columns pin the codes exactly
     via q_sum/n_zero."""
-    emb = load(spark, sf_dir, "embeddings", spread=True)  # staged HOFs scale (A/B 0.19 vs 0.67 s)
+    emb = load(spark, sf_dir, "embeddings")
     return ann.quantize_int8(emb, id_col="vec_id", vec_col="embedding").select(
         "vec_id", "absmax", "q_sum", "n_zero", "max_err"
     )
@@ -2240,5 +2078,66 @@ SELECT vec_id,
 FROM q
 """
 
-REGISTRY["t_sample_stratified"] = (t_sample_stratified, T_SAMPLE_SQL)
-REGISTRY["emb_quantize_int8"] = (emb_quantize_int8, EMB_QUANTIZE_SQL)
+
+# ===========================================================================
+# registry
+# ===========================================================================
+
+# name: (spark_fn, oracle_sql). The oracle is a SQL string or a zero-argument
+# builder; builders run only when oracle_sql_dict() is called (some import
+# the oracle package).
+REGISTRY: dict[str, tuple] = {
+    "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
+    "q3_top_orders": (q3_top_orders, Q3_SQL),
+    "q5_region_revenue": (q5_region_revenue, Q5_SQL),
+    "j1_enrich_broadcast": (j1_enrich_broadcast, J1_SQL),
+    "a3_distinct_stats": (a3_distinct_stats, A3_SQL),
+    "r3_pivot": (r3_pivot, R3_SQL),
+    "w1_filldown": (w1_filldown, W1_SQL),
+    "w4_running_count": (w4_running_count, W4_SQL),
+    "w6_lag_blank": (w6_lag_blank, W6_SQL),
+    "w7_fill_up_restore": (w7_fill_up_restore, W7_SQL),
+    "sessionize": (sessionize, SESSIONIZE_SQL),
+    "t_token_stats": (t_token_stats, T_TOKENS_SQL),
+    "t_quality": (t_quality, T_QUALITY_SQL),
+    "t_langid": (t_langid, T_LANGID_SQL),
+    "t_fingerprint": (t_fingerprint, T_FINGERPRINT_SQL),
+    "dedup_exact": (dedup_exact_q, DEDUP_EXACT_SQL),
+    "dedup_minhash_lsh": (dedup_minhash_q, DEDUP_MINHASH_SQL),
+    "dedup_clusters": (dedup_clusters_q, DEDUP_CLUSTERS_SQL),
+    "dedup_ngram_jaccard": (dedup_ngram_q, DEDUP_NGRAM_SQL),
+    "dedup_simhash": (dedup_simhash_q, DEDUP_SIMHASH_SQL),
+    "dedup_embedding_cosine": (dedup_embedding_cosine_q, DEDUP_EMB_COSINE_SQL),
+    "ann_brute_cosine_topk": (ann_brute_topk, ANN_BRUTE_SQL),
+    "ann_lsh_cosine_topk": (ann_lsh_topk, ANN_LSH_SQL),
+    "ann_ivf_cosine_topk": (ann_ivf_topk, ANN_IVF_SQL),
+    "f6_f7_clean_chain": (f6_f7_clean_chain, _f6_sql),
+    "f20_log_convert": (f20_log_convert, _f20_sql),
+    "f3_id_extraction": (f3_id_extraction, _f3_sql),
+    "f17_date_ladder": (f17_date_ladder, F17_SQL),
+    "f15_consecutive_dates": (f15_consecutive_dates, F15_SQL),
+    "f16_date_parse": (f16_date_parse, _f16_sql),
+    "f12_strain_normalize": (f12_strain_normalize, _f12_sql),
+    "f13_judgment": (f13_judgment, _f13_sql),
+    "j2_pair_match": (j2_pair_match, J2_SQL),
+    "s2_drm_detect": (s2_drm_detect, _s2_sql),
+    "j1_records_enrich": (j1_records_enrich, _j1_records_sql),
+    "r3_records_pivot": (r3_records_pivot, _r3_records_sql),
+    "p1_largest_table": (p1_largest_table, P1_SQL),
+    "f14_display_validators": (f14_display_validators, F14_SQL),
+    "j4_template_cells": (j4_template_cells, _j4_sql),
+    "j5_merge_edits": (j5_merge_edits, _j5_sql),
+    "t_sample_stratified": (t_sample_stratified, T_SAMPLE_SQL),
+    "emb_quantize_int8": (emb_quantize_int8, EMB_QUANTIZE_SQL),
+}
+
+
+def queries_dict():
+    return {name: fn for name, (fn, _) in REGISTRY.items()}
+
+
+def oracle_sql_dict():
+    return {
+        name: sql if isinstance(sql, str) else sql()
+        for name, (_, sql) in REGISTRY.items()
+    }

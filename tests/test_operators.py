@@ -66,6 +66,10 @@ PARITY_TEXTS = [
     "Straße STRASSE ß",
     "한국어Mixed문서 ABC-123 스크립트x",
     "İ\u212aß한",
+    # İ / Kelvin inside stopwords and words: t_quality counts these runs
+    "İt is İSTANBUL and the city",
+    "aİb the cat",
+    "\u212aeep it on the \u212aey",
 ]
 
 
@@ -112,6 +116,24 @@ def test_fingerprint_kernel_matches_duckdb_oracle():
     kernel_fps = next(TH.make_fingerprint_kernel("doc_id")(iter([pdf])))["fingerprint"]
     for i, t in enumerate(PARITY_TEXTS):
         assert kernel_fps[i] == fps[i], f"fingerprint mismatch on {t!r}"
+
+
+def test_quality_staged_matches_duckdb_oracle(spark):
+    """text.quality_staged, the t_quality form, equals the oracle's
+    T_QUALITY_SQL on the parity texts, compared as the oracle gate does."""
+    want = _duckdb_oracle(
+        f"SELECT doc_id, [stopword_ratio, quality] FROM ({Q.T_QUALITY_SQL})"
+    )
+    df = spark.createDataFrame(list(enumerate(PARITY_TEXTS)), "doc_id long, text string")
+    got = {
+        r["doc_id"]: [r["stopword_ratio"], r["quality"]]
+        for r in T.quality_staged(df, "text").select("doc_id", "stopword_ratio", "quality").collect()
+    }
+    def norm(vals):
+        return [None if v is None else round(v, 9) for v in vals]
+
+    for i, t in enumerate(PARITY_TEXTS):
+        assert norm(got[i]) == norm(want[i]), f"t_quality mismatch on {t!r}: {got[i]} != {want[i]}"
 
 
 def test_tokenizer_matches_catalyst(spark):

@@ -151,6 +151,15 @@ def test_ann_is_one_kernel(spark, name):
     assert "Window" in path, path
 
 
+def test_t_quality_scan_is_not_spread(spark):
+    """t_quality is a scan and a projection: no query repartitions its own
+    scan, so the executed plan holds no exchange at all."""
+    df = Q.t_quality(spark, SF)
+    df.write.format("noop").mode("overwrite").save()
+    nodes = list(_plan_paths(df._jdf.queryExecution().executedPlan()))
+    assert not [n.toString() for n, _ in nodes if "Exchange" in n.nodeName()]
+
+
 def test_ngram_jaccard_is_hash_join(spark):
     """The length-band pairing must plan as an equi hash join on the block
     key — never a BroadcastNestedLoopJoin / cartesian (O(n²) at scale)."""
@@ -191,8 +200,8 @@ def test_cleaners_stay_jvm_side(spark):
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
     assert "Project" in plan
     df17 = Q.f17_date_ladder(spark, SF)
-    df17.collect()  # materialize: the spread scan makes this an AQE plan,
-    # whose pre-execution string hides WholeStageCodegen markers
+    df17.collect()  # materialize: every plan here is an AQE plan, whose
+    # pre-execution string hides WholeStageCodegen markers
     plan17 = plan_of(df17)
     assert "*(1)" in plan17  # the WholeStageCodegen stage marker
 
