@@ -10,6 +10,8 @@ Runs the full interleaved extraction with partition-granular checkpoint /
 lineage; a rerun with --resume skips DONE buckets. Buckets run in batches of
 --batch-size (one plan and one write each, four batches in flight): a batch
 of one keeps crash re-work to one bucket, a larger one builds fewer plans.
+Each batch writes to a hidden stage directory inside --output and then swaps
+each bucket into ``bucket=N``, so readers of --output see only whole buckets.
 On a cluster the same file is submitted unchanged — master/cores come from
 spark-submit, and bucket count should be sized ≈ corpus_bytes / (executor_mem / 4).
 """
@@ -50,8 +52,8 @@ def main() -> None:
                          "(bucketed by OWNING doc_id): prune the media scan per "
                          "bucket instead of re-reading the whole table N times")
     ap.add_argument("--batch-size", type=int, default=1,
-                    help="buckets per batch: one plan + one dynamic-partition-"
-                         "overwrite write per batch. 1 = bucket-granular crash "
+                    help="buckets per batch: one plan + one staged write per "
+                         "batch. 1 = bucket-granular crash "
                          "re-work; larger batches amortize the plan build and "
                          "redo the whole batch after a crash")
     ap.add_argument("--snapshot-id", default="unversioned")

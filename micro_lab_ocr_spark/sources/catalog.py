@@ -66,11 +66,10 @@ def write_docs(
     df: DataFrame,
     path_or_table: str,
     n_buckets: int = 64,
-    key_col: str = "doc_id",
     row_group_bytes: int | None = None,
 ) -> None:
-    """Write a table bucketed on ``key_col`` (docs on doc_id; the media table
-    uses media_ref).
+    """Write the docs table bucketed on doc_id (media goes through
+    :func:`write_media_bucketed` or :func:`write_media_copartitioned`).
 
     ``row_group_bytes`` bounds the parquet row-group size. Scan parallelism
     is ROW-GROUP-granular, not split-granular: a split processes only row
@@ -88,14 +87,14 @@ def write_docs(
         return
     # parquet fallback: directory bucketing by the same hash
     w = (
-        df.withColumn("bucket", bucket_expr(key_col, n_buckets))
+        df.withColumn("bucket", bucket_expr("doc_id", n_buckets))
         .repartition(n_buckets, "bucket")
         .write.mode("overwrite")
     )
     if row_group_bytes:
         w = w.option("parquet.block.size", str(row_group_bytes))
     w.partitionBy("bucket").parquet(path_or_table)
-    write_layout_marker(path_or_table, n_buckets, key_col)
+    write_layout_marker(path_or_table, n_buckets, "doc_id")
 
 
 def write_layout_marker(path: str, n_buckets: int, key_col: str) -> None:

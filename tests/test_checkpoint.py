@@ -187,7 +187,7 @@ def test_corrections_upsert_keyed_replace(spark, small_corpus, tmp_path):
     assert "fix1-again" in snap_ids and "base" in snap_ids
 
     # crash recovery: a crash BETWEEN the two swap renames leaves the bucket
-    # path absent with the complete old bucket in .old — a re-run must
+    # path absent with the complete old bucket in its backup — a re-run must
     # restore it before merging, not fall into the new-rows-only branch and
     # drop every non-corrected doc in the bucket
     import os
@@ -195,19 +195,21 @@ def test_corrections_upsert_keyed_replace(spark, small_corpus, tmp_path):
     affected = [row.bucket for row in results]
     crash_bucket = affected[0]
     bpath = os.path.join(out_path, f"bucket={crash_bucket}")
-    os.rename(bpath, bpath + ".old")
+    bak = os.path.join(out_path, f".bucket={crash_bucket}.old")
+    os.rename(bpath, bak)
     ck.apply_corrections(spark, corr_df, media_df, snapshot_id="fix1-crash")
     recovered = {r["doc_id"]: [s.asDict() for s in r["spans"]]
                  for r in spark.read.parquet(out_path).collect()}
     assert recovered == after
     assert not os.path.exists(bpath + ".old")
+    assert not os.path.exists(bak)
 
 
 def test_batch_zero_output_bucket_clears_stale_files(spark, small_corpus, tmp_path):
-    """Dynamic partition overwrite only replaces partitions that receive
-    rows — a batched run whose input no longer populates a bucket must still
-    replace that bucket's previous files (with an empty frame that reads
-    back 0 rows), or readers see deleted docs resurrected."""
+    """A partitioned write only creates partitions that receive rows — a
+    batched run whose input no longer populates a bucket must still replace
+    that bucket's previous files (with an empty frame that reads back 0
+    rows), or readers see deleted docs resurrected."""
     from pyspark.sql import functions as F
 
     from micro_lab_ocr_spark.sources.catalog import bucket_expr
@@ -238,8 +240,8 @@ def test_batch_zero_output_bucket_clears_stale_files(spark, small_corpus, tmp_pa
 def test_checkpoint_empty_input_reads_back(spark, small_corpus, tmp_path):
     """An empty docs table finishes every bucket with (b, 0, 0) lineage and
     leaves an output that reads back 0 rows — at a batch of one bucket and at
-    a batch of all four, where dynamic partition overwrite writes no
-    partition at all."""
+    a batch of all four, where the partitioned write creates no partition at
+    all."""
     media_df = small_corpus[3]
     empty = spark.createDataFrame([], DOCS_SCHEMA)
     for size in (1, 4):
@@ -339,7 +341,7 @@ def test_media_copartitioned_pruning(spark, small_corpus, tmp_path):
 
 
 def test_batched_checkpoint_matches_oracle_and_resumes(spark, small_corpus, tmp_path):
-    """bucket_batch_size>1: one dynamic-partition-overwrite write per batch,
+    """bucket_batch_size>1: one partitioned write per batch,
     per-bucket lineage rows, identical output to the oracle; a later resume
     over the same checkpoint dir skips everything."""
     docs, media, docs_df, media_df = small_corpus
@@ -362,3 +364,131 @@ def test_batched_checkpoint_matches_oracle_and_resumes(spark, small_corpus, tmp_
     redo = ck.run(spark, docs_df, media_df, snapshot_id="batch2")
     assert [r.bucket for r in redo] == [2]
     _oracle_check(spark, str(tmp_path / "out_b"), docs, media)
+
+
+def _doc_ids(spark, path):
+    return [r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect()]
+
+
+def test_layout_without_marker_rehashes(spark, small_corpus, tmp_path):
+    """A bucketed layout whose ``_bucket_layout.json`` marker is missing is
+    re-hashed on doc_id, never trusted at a width guessed from its
+    directories: 192 docs written at 24 buckets all land in buckets 0–15,
+    which looks like a 16-bucket layout, yet h mod 24 mod 16 != h mod 16."""
+    import os
+
+    from micro_lab_ocr_spark.sources import catalog
+    from micro_lab_ocr_spark.sources.catalog import bucket_expr
+
+    media_df = small_corpus[3]
+    cand = spark.createDataFrame(
+        [(f"doc{i:04d}", [("text", f"body {i}", "", 0)]) for i in range(400)], DOCS_SCHEMA
+    )
+    docs_df = cand.where(bucket_expr("doc_id", 24) < 16).orderBy("doc_id").limit(192)
+    want = {r["doc_id"] for r in docs_df.select("doc_id").collect()}
+    assert len(want) == 192
+    path = str(tmp_path / "docs_nomarker")
+    catalog.write_docs(spark, docs_df, path, n_buckets=24)
+    os.remove(os.path.join(path, "_bucket_layout.json"))
+
+    out = str(tmp_path / "out_nm")
+    ck = CheckpointedExtraction(str(tmp_path / "ck_nm"), out, n_buckets=16)
+    ck.run(spark, catalog.read_docs(spark, path, keep_bucket=True), media_df, snapshot_id="nm")
+    assert set(_doc_ids(spark, out)) == want
+    assert sum(row["n_docs"] for row in ck.lineage()) == 192
+
+
+def test_crash_leftovers_stay_invisible(spark, small_corpus, tmp_path):
+    """Mid-swap crash state (old bucket moved to its hidden backup, the new
+    one still staged): a reader of the output sees every remaining doc once
+    with an integer ``bucket``, and the next call restores the bucket."""
+    import os
+    import shutil
+
+    docs, media, docs_df, media_df = small_corpus
+    out = str(tmp_path / "out_c")
+    ck = CheckpointedExtraction(str(tmp_path / "ck_c"), out, n_buckets=4)
+    ck.run(spark, docs_df, media_df, snapshot_id="base")
+    all_ids = sorted(d["doc_id"] for d in docs)
+    b = spark.read.parquet(out).select("bucket").first()["bucket"]
+    in_b = {r["doc_id"] for r in spark.read.parquet(out).where(F.col("bucket") == b).collect()}
+    bak = os.path.join(out, f".bucket={b}.old")
+    os.rename(os.path.join(out, f"bucket={b}"), bak)
+    shutil.copytree(bak, os.path.join(out, f".stage-{b}", f"bucket={b}"))
+
+    crashed = spark.read.parquet(out)
+    assert dict(crashed.dtypes)["bucket"] == "int"
+    ids = _doc_ids(spark, out)
+    assert sorted(ids) == sorted(set(all_ids) - in_b)      # each doc once
+
+    assert ck.run(spark, docs_df, media_df, snapshot_id="base") == []
+    assert not os.path.exists(bak)
+    assert not os.path.exists(os.path.join(out, f".stage-{b}"))
+    assert dict(spark.read.parquet(out).dtypes)["bucket"] == "int"
+    assert sorted(_doc_ids(spark, out)) == all_ids
+    _oracle_check(spark, out, docs, media)
+
+
+def test_corrections_one_plan_pruned_media(spark, small_corpus, tmp_path, monkeypatch):
+    """A correction touching several buckets builds ONE extraction plan,
+    and under co-partitioned media its media scan is pruned to the affected
+    buckets (a ``bucket`` PartitionFilter), not read whole."""
+    from micro_lab_ocr_spark.pipeline import extract
+    from micro_lab_ocr_spark.sources import catalog
+    from micro_lab_ocr_spark.sources.catalog import bucket_expr
+
+    docs, media, docs_df, media_df = small_corpus
+    dpath, mpath = str(tmp_path / "docs_1p"), str(tmp_path / "media_1p")
+    catalog.write_docs(spark, docs_df, dpath, n_buckets=4)
+    catalog.write_media_copartitioned(
+        spark, media_df, mpath,
+        owner_doc_id=F.split(F.col("media_ref"), "/").getItem(2), n_buckets=4,
+    )
+    out = str(tmp_path / "out_1p")
+    ck = CheckpointedExtraction(
+        str(tmp_path / "ck_1p"), out, n_buckets=4, media_copartitioned=True
+    )
+    bucketed_media = spark.read.parquet(mpath)
+    ck.run(spark, catalog.read_docs(spark, dpath, keep_bucket=True), bucketed_media)
+
+    # one doc with a media span from each of two buckets, each corrected by
+    # appending a text span
+    bucket_of = {r["doc_id"]: r["b"] for r in
+                 docs_df.select("doc_id", bucket_expr("doc_id", 4).alias("b")).collect()}
+    picked = {}
+    for d in docs:
+        if any(s["media_ref"] for s in d["spans"]):
+            picked.setdefault(bucket_of[d["doc_id"]], d)
+    assert len(picked) >= 2
+    corrected = []
+    for d in list(picked.values())[:2]:
+        tail = max(s["offset"] for s in d["spans"]) + 1
+        spans = d["spans"] + [{"kind": "text", "text": "appended", "media_ref": "", "offset": tail}]
+        corrected.append({"doc_id": d["doc_id"], "spans": spans})
+    corr_df = spark.createDataFrame(
+        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]])
+         for d in corrected],
+        DOCS_SCHEMA,
+    )
+
+    frames = []
+    orig = extract.normalize_spans
+
+    def counted(*args, **kwargs):
+        frames.append(orig(*args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(extract, "normalize_spans", counted)
+    rows = ck.apply_corrections(spark, corr_df, bucketed_media, snapshot_id="fix")
+    assert len(rows) == 2
+    assert len(frames) == 1
+    plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+    media_scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln and "content#" in ln]
+    assert media_scans
+    for ln in media_scans:
+        filters = ln.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        assert "bucket" in filters, ln
+
+    fixed = {d["doc_id"]: d for d in docs}
+    fixed.update({d["doc_id"]: d for d in corrected})
+    _oracle_check(spark, out, list(fixed.values()), media)
